@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time individual declared queries by name (warmup + two
   * timed passes each, min reported) without running the whole Bench
@@ -7,14 +6,7 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     def once(name: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -42,60 +42,34 @@ object SparkEntry {
 
   /** The q56 curation pipeline with `text` retained — shared by q56
     * (which projects it away) and q96 (which tokenizes downstream):
-    * noise filter → language gate (en) → quality gate → exact dedup →
-    * near-dup canonicalization; every stage is an already-oracled
-    * operator, composed the way a real corpus-curation job chains
-    * them. One parallelize-first exchange feeds all per-row text work;
-    * the dedup stages shuffle on content-derived keys only. ONE
-    * TextStats kernel expression feeds both the language gate and the
-    * quality score (en is langOrder.head, so hits[1] is the en count
-    * for both). CollapseProject re-inlines the kernel per reference,
-    * but the kernelized re-eval is cheaper than the compute-once
-    * exchange (measured r5: 2.8 s → 2.0 s at sf0.1 dropping the
-    * barrier). */
-  /** Profiling hook (graft.tools.Profile): the q96 curate stage as the
-    * declared query materializes it. */
-  private[graft] def curatedForProfile(s: SparkSession, d: String): DataFrame =
-    curatedDocs(s, d)
-      .select(col("doc_id"), col("source"), col("text"),
-        TextOps.tokenCount(col("text")).as("tokens"))
-      .localCheckpoint()
-
-  private def curatedDocs(s: SparkSession, d: String): DataFrame = {
-    val base = NoiseFilter(fan(Tables.documents(s, d), "doc_id"), "text")
-    val stats = base
-      .withColumn("__ts", TextOps.textStats(
-        TextOps.words(lower(col("text"))), TextOps.langOrder.map(TextOps.stopwords)))
-    val n = col("__ts").getField("n_words")
-    val hits = element_at(col("__ts").getField("hits"), 1)
-    val alpha = col("__ts").getField("alpha_hits")
-    val score = TextOps.qualityScore(n,
-      hits.cast("double") / n.cast("double"),
-      alpha.cast("double") / n.cast("double"))
-    val gated = stats
-      .filter(TextOps.langIdFromStats(col("__ts")) === "en")
-      .withColumn("score", score)
-      .filter(col("score") >= 0.2)
-      .drop("__ts")
-    val deduped = Dedup.exact(gated, "doc_id", "text")
-    val dupIds = Dedup.ngramJaccardPairs(deduped, "doc_id", "text", "source", 3, 0.5)
-      .select(col("id_b").as("doc_id")).distinct()
-    deduped.join(dupIds, Seq("doc_id"), "left_anti")
+    * the [[curationFunnelStages]] gates folded over one
+    * parallelize-first exchange, then the near-dup anti-join. Every
+    * stage is an already-oracled operator; the dedup stages shuffle on
+    * content-derived keys only. No checkpoint here (unlike the funnel's
+    * near-dup stage): the anti-join's two reads of its input stay one
+    * lazy plan, so building this DataFrame fires no job. */
+  private def curatedDocs(s: SparkSession, d: String): DataFrame =
+    nearDupAnti(curationGates.foldLeft(fan(Tables.documents(s, d), "doc_id")) {
+        case (df, (_, stage)) => stage(df) })
       .select(col("doc_id"), col("source"), col("n_chars"), col("score"),
         col("text"))
+
+  /** Drop the larger id of every 3-shingle Jaccard >= 0.5 pair within a
+    * source. */
+  private def nearDupAnti(df: DataFrame): DataFrame = {
+    val dupIds = Dedup.ngramJaccardPairs(df, "doc_id", "text", "source", 3, 0.5)
+      .select(col("id_b").as("doc_id")).distinct()
+    df.join(dupIds, Seq("doc_id"), "left_anti")
   }
 
-  /** The q56 curation chain as NAMED funnel stages (q199's input) —
-    * the same five predicates/transforms, composed by
-    * [[graft.operators.Funnel.report]] for per-stage drop counts from
-    * one observed pass. Kept in lockstep with [[curatedDocs]] (the
-    * oracle + FunnelSpec pin the stage counts against the q56 CTE
-    * chain). The near-dup stage references its input twice (pair-gen
-    * joined back anti) and so checkpoints it once, per the Funnel
-    * self-join contract — without that, the observed prefix would
-    * execute in both branches and every upstream count would double. */
-  private[graft] def curationFunnelStages
-      : Seq[(String, DataFrame => DataFrame)] = Seq(
+  /** The curation gates before near-dup: noise filter → language gate
+    * (en) → quality gate → exact dedup. ONE TextStats kernel expression
+    * feeds both the language gate and the quality score (en is
+    * langOrder.head, so hits[1] is the en count for both).
+    * CollapseProject re-inlines the kernel per reference, but the
+    * kernelized re-eval is cheaper than the compute-once exchange
+    * (measured r5: 2.8 s → 2.0 s at sf0.1 dropping the barrier). */
+  private val curationGates: Seq[(String, DataFrame => DataFrame)] = Seq(
     "noise" -> ((df: DataFrame) => NoiseFilter(df, "text")),
     "lang" -> ((df: DataFrame) =>
       df.withColumn("__ts", TextOps.textStats(
@@ -111,14 +85,20 @@ object SparkEntry {
         alpha.cast("double") / n.cast("double"))
       df.withColumn("score", score).filter(col("score") >= 0.2).drop("__ts")
     }),
-    "exact_dedup" -> ((df: DataFrame) => Dedup.exact(df, "doc_id", "text")),
-    "near_dup" -> ((df: DataFrame) => {
-      val ck = df.localCheckpoint()
-      val dupIds = Dedup.ngramJaccardPairs(ck, "doc_id", "text", "source",
-          3, 0.5)
-        .select(col("id_b").as("doc_id")).distinct()
-      ck.join(dupIds, Seq("doc_id"), "left_anti")
-    }))
+    "exact_dedup" -> ((df: DataFrame) => Dedup.exact(df, "doc_id", "text")))
+
+  /** The q56 curation chain as NAMED funnel stages (q199's input),
+    * composed by [[graft.operators.Funnel.report]] for per-stage drop
+    * counts from one observed pass; [[curatedDocs]] is built from the
+    * same gates. The near-dup stage references its input twice
+    * (pair-gen joined back anti) and so checkpoints it once, per the
+    * Funnel self-join contract — without that, the observed prefix
+    * would execute in both branches and every upstream count would
+    * double. */
+  private[graft] def curationFunnelStages
+      : Seq[(String, DataFrame => DataFrame)] =
+    curationGates :+ ("near_dup" -> ((df: DataFrame) =>
+      nearDupAnti(df.localCheckpoint())))
 
   /** q70/q72/q73 persisted stores: built ONCE per (JVM, dataset) into a
     * process-unique temp directory — concurrent Verify/Bench runs never

@@ -115,35 +115,28 @@ object Analytics {
     * (pos−floor)·upper when the position is fractional — so the
     * output is bit-identical to the built-in (spec-asserted).
     *
-    * SCALE SHAPE (closes the former bounded-input caveat): the
-    * built-in `percentile` buffers EVERY row of a group inside one
-    * aggregation buffer — a 100× group is an executor OOM, which is
-    * why this query used to be documented fixture-only. This plan
-    * instead aggregates a per-(group, value) HISTOGRAM (map-side
-    * combinable; state ∝ distinct values, and duplicates collapse
-    * before the shuffle), then ranks it with a windowed running sum
-    * ordered by value — Spark's window sort is spill-able external
-    * sort, not a heap buffer — and selects the two bracketing values
-    * per percentile with conditional aggregates. Memory per task is
-    * bounded by the sort spill threshold regardless of group size;
-    * heavy duplication (the common case for prices/quantities at
-    * 100 TB) shrinks the histogram further. [[quantilesApprox]]
+    * SCALE SHAPE: the built-in `percentile` buffers EVERY row of a
+    * group inside one aggregation buffer — a 100× group is an executor
+    * OOM. This plan buffers no group: it ranks the RAW rows with an
+    * ordered window whose default RANGE frame counts all peers of the
+    * current value, so every copy of a value carries that value's
+    * cumulative count, and a peer-count window recovers the exclusive
+    * lower bound. Broadcast group totals and conditional aggregates
+    * then select the two bracketing values per percentile. Spark's
+    * window sort is a spill-able external sort, so memory per task is
+    * bounded by the spill threshold regardless of group size. The
+    * price is shuffle volume: the window exchange moves every row, so
+    * it grows with rows, not with distinct values — duplicates do not
+    * collapse before the shuffle. [[quantilesFromHist]] remains for
+    * the streaming twin (`Streams.quantileStream`), whose state IS an
+    * additive per-(group, value) histogram. [[quantilesApprox]]
     * remains the sketch alternative when a rank-error tolerance is
     * acceptable. */
   def quantiles(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    // r21 (the q174 raw-stream discipline): the cumulative count rides
-    // the RAW row stream — the ordered window's default RANGE frame
-    // counts ALL peers of the current value, so every copy carries
-    // exactly the per-(group, value) histogram's cumulative count and
-    // the peer-count window recovers the exclusive lower bound. On
-    // near-unique value columns the per-(group, value) pre-aggregate
-    // collapsed nothing yet cost a full-stream exchange + hash agg
-    // (BenchOne 1.32 → see OPTIMIZATION_r21.md). Value-identical to
-    // the histogram form by the peers argument; the streaming twin
-    // (Streams.quantileStream) keeps [[quantilesFromHist]] — its state
-    // IS an additive histogram — and both delegate the identical rank
-    // math to [[quantilesFromCum]], so batch and stream still share
-    // the interpolation code path.
+    // raw rows, not a per-(group, value) pre-aggregate: on near-unique
+    // value columns the pre-aggregate collapsed nothing yet cost a
+    // full-stream exchange + hash agg (OPTIMIZATION_r21.md). Batch and
+    // stream share the interpolation via [[quantilesFromCum]].
     val rows = df.select(col(groupCol), col(valueCol).as("__v"))
     val nn = rows.filter(col("__v").isNotNull)
     val w = Window.partitionBy(col(groupCol)).orderBy(col("__v"))
@@ -613,13 +606,6 @@ object Analytics {
       .orderBy(col(keyCol), col("span_start"))
   }
 
-  /** Exact interpolated median per group from a (group, __v, __cnt)
-    * value histogram — the q41 plan reduced to p50: windowed
-    * cumulative counts locate the two straddling values, and the
-    * interpolation replays Spark `Percentile`'s EXACT formula
-    * ((ceil−pos)·lower + (pos−floor)·upper, lower==higher special
-    * case) so DuckDB's quantile_cont matches bit-for-bit after the
-    * 6 dp round. Memory ∝ distinct values per group, spillable. */
   /** Exact per-group median straight off (`__g`, `__v`) ROWS — the
     * q174 raw-stream discipline: the ordered window's default RANGE
     * frame sums all peers, so every copy of a value carries the

@@ -1275,16 +1275,6 @@ object Dedup {
           / col("total_spans").cast("double"), 6).as("dup_frac"))
   }
 
-  /** Pre-r14 signature. The numeric value stopped tuning anything when
-    * the r13 rewrite removed the capped group — callers were invited to
-    * calibrate a no-op; the boolean plan choice is all that remains. */
-  @deprecated("maxSpanDf's numeric value no longer tunes anything; " +
-    "use duplicatedSpans(df, idCol, textCol, k, boundedPlan = true)", "r14")
-  def duplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-      k: Int, maxSpanDf: Int): DataFrame =
-    duplicatedSpans(df, idCol, textCol, k,
-      boundedPlan = maxSpanDf != Int.MaxValue)
-
   /** The (doc, span) stream of [[duplicatedSpans]] — exposed
     * `private[graft]` so the spec can drive the capped stages. */
   private[graft] def spanStream(df: DataFrame, idCol: String,

@@ -568,7 +568,7 @@ object Scale {
     * still NO exchange (spec-asserted). Periodically rewrite with
     * [[writeBucketed]] to restore one-file-per-bucket, the same
     * rhythm as the stores' `compact()`. Measured curve
-    * (`graft.tools.BucketAging` at m10, SCALING.md r14): join cost is
+    * (m10, SCALING.md r14): join cost is
     * FLAT through ~8 appends, first measurable penalty (~1.6×) at 64
     * appends (512 files over 8 buckets), rewrite ≈ 1.5–3 joins'
     * cost — so rewrite every few tens of appends on read-heavy

@@ -594,7 +594,7 @@ object Similarity {
     * (SimilaritySpec asserts parity at k=1024 with planted duplicate
     * centroids). */
   // r18: default 0 — the reference-object kernel wins at EVERY k, not
-  // just past the r9 plan-explosion bound. CodeCacheProbe measured the
+  // just past the r9 plan-explosion bound. A code-cache probe measured the
   // literal ladders at 2.2 MB of generated source across the PQ family
   // (q83 alone inlined 2.2 MB into 2 classes) vs 1.2 MB with the
   // kernel, and the Janino/JIT churn those megabyte classes cost

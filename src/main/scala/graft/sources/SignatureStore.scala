@@ -240,13 +240,6 @@ object SignatureStore {
   def readShards(spark: SparkSession, path: String, shards: Seq[Int]): DataFrame =
     spark.read.parquet(path + "/bands").filter(col("shard").isin(shards: _*))
 
-  /** [[StoreFs.hasCommittedData]] — kept as the store's own vocabulary;
-    * goes through the Hadoop `FileSystem` so a store rooted at
-    * `hdfs://`/`s3a://` probes correctly (r10 verdict: the old
-    * `java.io.File` form was a real 100 TB blocker). */
-  private[graft] def hasCommittedData(spark: SparkSession, dir: String): Boolean =
-    StoreFs.hasCommittedData(spark, dir)
-
   /** The keep decision for one micro-batch: collapse exact within-batch
     * duplicates (deterministic keep-lowest-id), then drop documents
     * that near-dup-match the ALREADY-COMMITTED corpus — excluding this
@@ -259,7 +252,7 @@ object SignatureStore {
       jaccardThreshold: Double): DataFrame = {
     val exact = Dedup.exact(batch, idCol, textCol)
     val keep =
-      if (!hasCommittedData(batch.sparkSession, path + "/bands")) exact
+      if (!StoreFs.hasCommittedData(batch.sparkSession, path + "/bands")) exact
       else {
         val dupIds = dedupAgainstStore(exact, idCol, textCol, path, p,
           jaccardThreshold, excludeIngest = Some(ingest))

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -33,21 +33,20 @@ object PlanDump {
     val suffix = args(1)
     val executed = suffix.endsWith("_executed")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // capture the write's own QueryExecution (the noop save creates a
-    // fresh QE; the final AQE plan lives there, not on the DataFrame)
+    val spark = graft.Session.local()
+    // The noop save's own QueryExecution holds the final AQE plan. The
+    // listener bus delivers executions asynchronously, and that includes
+    // late ones from jobs a query fires while it is being built (an
+    // eager localCheckpoint or collect), so only the noop write is
+    // accepted: its logical root is the V2 OverwriteByExpression. The
+    // listener's funcName cannot select it — Spark 4 never reports
+    // "save" there.
     @volatile var lastQe: QueryExecution = null
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = lastQe = qe
+          durationNs: Long): Unit =
+        if (qe.logical.isInstanceOf[OverwriteByExpression]) lastQe = qe
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     }
@@ -64,8 +63,6 @@ object PlanDump {
           if (executed) {
             lastQe = null
             df.write.format("noop").mode("overwrite").save()
-            // listener delivery is same-thread for the write path, but
-            // give the bus a beat in case it ever is not
             var waited = 0
             while (lastQe == null && waited < 50) { Thread.sleep(100); waited += 1 }
             if (lastQe == null) "NO EXECUTION CAPTURED"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN quality-at-scale harness (SCALING.md): measures recall@k of the
@@ -21,14 +20,7 @@ object RecallScale {
     val nList = args(1).toInt
     val nProbe = if (args.length > 2) args(2).toInt else 4
     val k = if (args.length > 3) args(3).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     val e = graft.Tables.embeddings(spark, sfDir)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query task telemetry (round 12): spill bytes, peak execution
   * memory, and the max/median task-time ratio — the skew signature.
@@ -53,14 +52,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def build(name: String) = name match {
       case "q48_prod" =>
@@ -73,11 +65,6 @@ object ScaleBench {
         graft.operators.Dedup.ngramJaccardPairs(
           graft.Tables.documents(spark, sfDir).withColumn("__g", lit(1)),
           "doc_id", "text", "__g", k = 3, threshold = 0.5)
-      // q65 with the hot-shingle guard engaged — the 100 TB regime. A
-      // shingle in >64 docs is corpus boilerplate (here: an artifact of
-      // the closed 30-word fixture vocabulary, whose shingle df grows
-      // ∝ N instead of saturating like natural text); capping bounds
-      // join cost at Σ min(df,64)² = O(#distinct shingles · 64²).
       // q22 with the hot-shingle guard — the skew-study mitigation: the
       // Zipf fixture's hot source concentrates Σdf² in one group, and
       // the cap bounds exactly that term (SCALING.md skew section)
@@ -94,77 +81,6 @@ object ScaleBench {
         graft.operators.Dedup.containmentPairs(
           graft.Tables.documents(spark, sfDir),
           "doc_id", "text", k = 3, threshold = 0.5)
-      // the PRE-r19 capped plan (sz rides the gram stream, no hint) —
-      // kept as the A/B counterfactual for the r19 late-materialized
-      // sizes rewrite; same semantics, result-identical
-      case "q191_r18" => {
-        import org.apache.spark.sql.functions._
-        val df = graft.Tables.documents(spark, sfDir)
-        val base = df.select(col("doc_id").as("doc"), col("text"))
-          .repartition(spark.sparkContext.defaultParallelism, col("doc"))
-          .select(col("doc"),
-            graft.operators.Dedup.shingles(col("text"), 3).as("sh"))
-        val ex0 = base.select(col("doc"), explode(col("sh")).as("s"))
-        val hot = ex0.groupBy(col("s")).agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > 64).select(col("s"))
-        val kept = ex0.join(broadcast(hot), Seq("s"), "left_anti")
-        val cappedSz = kept.groupBy(col("doc")).agg(count(lit(1)).as("sz"))
-        val ex = kept.join(cappedSz, Seq("doc"))
-          .select(col("doc"), col("sz"), col("s"))
-        val a = ex.select(col("s"), col("doc").as("id_a"), col("sz").as("__sza"))
-        val b = ex.select(col("s"), col("doc").as("id_b"), col("sz").as("__szb"))
-        a.join(b, Seq("s")).filter(col("id_a") < col("id_b"))
-          .groupBy(col("id_a"), col("id_b"), col("__sza"), col("__szb"))
-          .agg(count(lit(1)).as("__inter"))
-          .withColumn("contain_ab",
-            round(col("__inter").cast("double") / col("__sza").cast("double"), 6))
-          .withColumn("contain_ba",
-            round(col("__inter").cast("double") / col("__szb").cast("double"), 6))
-          .filter(greatest(col("contain_ab"), col("contain_ba")) >= 0.5)
-          .select(col("id_a"), col("id_b"), col("contain_ab"), col("contain_ba"))
-          .orderBy(col("id_a"), col("id_b"))
-      }
-      // the PRE-r20 q190 shape (raw gram stream shuffled twice: df
-      // groupBy + merge-hinted rejoin) — the A/B counterfactual for the
-      // r20 occurrence-aggregate + window-df rewrite; result-identical
-      case "q190_r18" => {
-        import org.apache.spark.sql.functions._
-        val df = graft.Tables.documents(spark, sfDir)
-        val grams = graft.operators.Dedup.spanStream(df, "doc_id", "text", 32)
-          .select(col("doc"), md5(col("span")).as("fp"))
-        val dfq = grams.groupBy(col("fp")).agg(count(lit(1)).as("__df"))
-        val kept = grams.join(dfq.hint("merge"), Seq("fp"))
-          .filter(col("__df") >= 2 && col("__df") <= 64)
-          .select(col("fp"), col("doc"))
-        kept.as("a")
-          .join(kept.as("b").hint("shuffle_hash"),
-            col("a.fp") === col("b.fp") && col("a.doc") < col("b.doc"))
-          .groupBy(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
-          .agg(count(lit(1)).as("n_shared"))
-          .filter(col("n_shared") >= 1)
-          .orderBy(col("id_a"), col("id_b"))
-      }
-      // the PRE-r20 q171 df attach (selection-stream groupBy +
-      // merge-hinted rejoin) — counterfactual for the r20 window-df
-      case "q171_r18" => {
-        import org.apache.spark.sql.functions._
-        val df = graft.Tables.documents(spark, sfDir)
-        val sel = graft.operators.Dedup
-          .winnowedSelections(df, "doc_id", "text", 8, 4)
-          .select(col("doc"), substring(col("__mk"), 1, 32).as("__fp"))
-          .distinct()
-        val dfq = sel.groupBy(col("__fp")).agg(count(lit(1)).as("__df"))
-        val kept = sel.join(dfq.hint("merge"), Seq("__fp"))
-          .filter(col("__df") <= 64)
-          .select(col("__fp"), col("doc"))
-        kept.as("a")
-          .join(kept.as("b").hint("shuffle_hash"),
-            col("a.__fp") === col("b.__fp") && col("a.doc") < col("b.doc"))
-          .groupBy(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
-          .agg(count(lit(1)).as("n_shared"))
-          .filter(col("n_shared") >= 30)
-          .orderBy(col("id_a"), col("id_b"))
-      }
       // q193 with the blocks decomposition on both internal band joins
       // — the scale posture (declared query pins blocks=1 at sf0.01)
       case "q193_blocks" =>
@@ -172,36 +88,6 @@ object ScaleBench {
           graft.Tables.documents(spark, sfDir),
           "doc_id", "text", valPermille = 200, maxHamming = 3,
           selfJoinBlocks = 8)
-      // the PRE-r19 splitLeakage composition (pairs and cluster sides
-      // each recompute the per-doc SimHash) — the A/B counterfactual
-      // for the r19 shared-sig-frame rewrite; result-identical
-      case "q193_unshared" => {
-        import org.apache.spark.sql.functions._
-        import graft.operators.{Curation, Dedup}
-        val df = graft.Tables.documents(spark, sfDir)
-        def naiveSide(id: org.apache.spark.sql.Column) =
-          when(Curation.lcgBucket(id, 1000L) < 200, lit("val"))
-            .otherwise(lit("train"))
-        val pairs = Dedup.simhashNearDups(df, "doc_id", "text", 3, 8)
-          .select(col("id_a"), col("id_b")).localCheckpoint()
-        val naive = pairs
-          .select((naiveSide(col("id_a")) =!= naiveSide(col("id_b"))).as("__x"))
-        val sides = Curation.splitByCluster(df, "doc_id", "text", 200, 3, 8)
-          .select(col("doc_id").as("__d"), col("split").as("__s"))
-        val cluster = pairs
-          .join(sides.select(col("__d").as("id_a"), col("__s").as("__sa")), Seq("id_a"))
-          .join(sides.select(col("__d").as("id_b"), col("__s").as("__sb")), Seq("id_b"))
-          .select((col("__sa") =!= col("__sb")).as("__x"))
-        def summarize(x: org.apache.spark.sql.DataFrame, m: String) =
-          x.agg(count(lit(1)).as("n_pairs"),
-              sum(when(col("__x"), 1L).otherwise(0L)).as("n_cross"))
-            .select(lit(m).as("method"), col("n_pairs"), col("n_cross"),
-              when(col("n_pairs") > 0,
-                expr("n_cross * 1000000L DIV n_pairs")).as("cross_ppm"))
-        summarize(naive, "naive_doc")
-          .unionByName(summarize(cluster, "cluster"))
-          .orderBy(col("method"))
-      }
       // the r14 merge tree at a WIDE partition layout: 2048 input
       // partitions force three tree levels (2048 → 64 → 2 → 1) where
       // the fixture scan gives one; the delta vs plain q100 prices the
@@ -231,6 +117,11 @@ object ScaleBench {
           graft.Tables.documents(spark, sfDir), "doc_id", "text",
           k = 32, boundedPlan = true)
           .orderBy(col("doc_id"))
+      // q65 with the hot-shingle guard engaged — the 100 TB regime. A
+      // shingle in >64 docs is corpus boilerplate (here: an artifact of
+      // the closed 30-word fixture vocabulary, whose shingle df grows
+      // ∝ N instead of saturating like natural text); capping bounds
+      // join cost at Σ min(df,64)² = O(#distinct shingles · 64²).
       case "q65_capped" =>
         import org.apache.spark.sql.functions.{col, lit}
         val docs = graft.Tables.documents(spark, sfDir)

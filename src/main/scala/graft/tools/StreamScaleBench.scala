@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming scaling harness (SCALING.md streaming section): drives
@@ -26,14 +25,7 @@ object StreamScaleBench {
     val sfDir = args(0)
     val nBatches = if (args.length > 1) args(1).toInt else 8
     val filesPerTrigger = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val root = java.nio.file.Files.createTempDirectory("streamscale").toString
 

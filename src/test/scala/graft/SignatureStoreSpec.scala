@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
-import graft.sources.SignatureStore
+import graft.sources.{SignatureStore, StoreFs}
 
 /** Incremental dedup against the persisted MinHash signature store
   * (sources/SignatureStore.scala): batch-vs-store pairs must equal the
@@ -291,15 +291,15 @@ class SignatureStoreSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft_fsprobe")
     val uri = "file://" + tmp.toString
     // absent dir -> absent store
-    assert(!SignatureStore.hasCommittedData(spark, uri + "/absent"))
+    assert(!StoreFs.hasCommittedData(spark, uri + "/absent"))
     // a dir holding ONLY a crashed write's _temporary debris is absent
     // (Spark hides _-prefixed paths; schema inference would throw)
     Files.createDirectories(tmp.resolve("store/_temporary/0"))
     Files.write(tmp.resolve("store/_temporary/0/part-0"), Array[Byte](1))
-    assert(!SignatureStore.hasCommittedData(spark, uri + "/store"))
+    assert(!StoreFs.hasCommittedData(spark, uri + "/store"))
     // one committed nested data file flips it, still through the URI
     Files.createDirectories(tmp.resolve("store/ingest=base"))
     Files.write(tmp.resolve("store/ingest=base/part-0.parquet"), Array[Byte](1))
-    assert(SignatureStore.hasCommittedData(spark, uri + "/store"))
+    assert(StoreFs.hasCommittedData(spark, uri + "/store"))
   }
 }

@@ -15,7 +15,7 @@ class SimilaritySpec extends SparkSpec {
     // distances arise and the first-match tie-break is exercised
     val cents = (0 until 1024).map(i => base(i % base.length)).toIndexedSeq
     // r18 policy: auto picks the reference-object kernel at EVERY k by
-    // default (CodeCacheProbe measured the literal ladders costing MBs
+    // default (a code-cache probe measured the literal ladders costing MBs
     // of generated source + cold Janino/JIT churn with zero runtime
     // win); the literal path stays only behind the measurement
     // override, and this test keeps proving the two bit-identical
