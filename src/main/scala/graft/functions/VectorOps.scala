@@ -1,7 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftShims}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Vector column functions over `ArrayType(FloatType|DoubleType)`.
   *
@@ -19,6 +22,14 @@ import org.apache.spark.sql.functions._
   * the same left-to-right fold.
   */
 object VectorOps {
+
+  /** A constant vector (a probe) as ONE typed `array<double>` literal
+    * with non-null elements — what `ConstantFolding` reduces
+    * `array(v.map(lit): _*)` to, minus the per-element `CreateArray`
+    * children the analyzer and optimizer would walk on every query. */
+  def vecLit(v: Seq[Double]): Column =
+    GraftShims.column(Literal(ArrayData.toArrayData(v.toArray),
+      ArrayType(DoubleType, containsNull = false)))
 
   /** Dot product in double precision, sequential fold in array order —
     * codegen'd kernel (`DotProductD`); bit-identical to the HOF fold

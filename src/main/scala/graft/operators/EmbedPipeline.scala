@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, StringSplit, StringTrim}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import graft.expressions.HashEmbed
 import graft.functions.{TextOps, VectorOps}
 
 /** The flagship §3.1 pipeline composed end-to-end: noise filter →
@@ -13,22 +16,24 @@ import graft.functions.{TextOps, VectorOps}
   * kernel codegen'd, Catalyst re-inlining it per downstream reference
   * is cheaper than an extra shuffle (BenchOne sf0.1: 0.61 s vs 0.99 s
   * with the barrier). The probe embedding is a constant: it is
-  * evaluated ONCE on the driver (1-row local eval of the same column
-  * expression — bit-identical) and inlined as an array literal, so
-  * per-row work is one codegen'd dot product over attributes.
+  * evaluated ONCE on the driver (the same kernel's interpreted eval —
+  * bit-identical, no job) and inlined as one array literal, so per-row
+  * work is one codegen'd dot product over attributes.
   */
 object EmbedPipeline {
 
   private def par(spark: SparkSession): Int =
     spark.sparkContext.defaultParallelism
 
-  /** Evaluate the hash-embedding of a constant text on the driver —
-    * same column expression over a 1-row frame, so the result is
-    * bit-identical to a per-row evaluation. */
+  /** The hash-embedding of a constant text, evaluated on the driver
+    * without a job: the `HashEmbed` kernel over `split(trim(text),
+    * "\\s+")` ([[TextOps.words]]) built as a Catalyst expression
+    * tree and run through its interpreted `eval` — the path
+    * `ConstantFolding` takes for a literal text, bit-identical to the
+    * per-row evaluation (spec-asserted). */
   def probeVector(spark: SparkSession, text: String, dim: Int): Seq[Double] =
-    spark.range(1)
-      .select(VectorOps.hashEmbed(TextOps.words(lit(text)), dim).as("p"))
-      .head().getSeq[Double](0)
+    HashEmbed(StringSplit(StringTrim(Literal(text)), Literal("\\s+"), Literal(-1)), dim)
+      .eval().asInstanceOf[ArrayData].toDoubleArray().toSeq
 
   /** documents(textCol) → noise filter → chunk → embed → top-k cosine
     * vs `probeText`. Returns (idCols..., chunk_id, chunk_tokens, sim).
@@ -73,10 +78,9 @@ object EmbedPipeline {
 
   private def rank(embedded: DataFrame, probe: Seq[Double],
       probeNorm: Double, k: Int): DataFrame = {
-    val probeCol = array(probe.map(lit): _*)
     embedded
       .withColumn("sim", round(
-        VectorOps.dot(col("embedding"), probeCol)
+        VectorOps.dot(col("embedding"), VectorOps.vecLit(probe))
           / (VectorOps.norm2(col("embedding")) * lit(probeNorm)), 6))
       .select(col("doc_id"), col("chunk_id"), col("chunk_tokens"), col("sim"))
       .orderBy(col("sim").desc, col("doc_id"), col("chunk_id"))

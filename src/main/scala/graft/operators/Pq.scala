@@ -160,7 +160,7 @@ object Pq {
       centroids: Seq[Array[Double]], k: Int, mCand: Int,
       nProbe: Int): DataFrame = {
     val cells = probeCells(probe, centroids, nProbe)
-    val probeCol = array(probe.map(lit): _*)
+    val probeCol = VectorOps.vecLit(probe)
     spark.read.parquet(path)
       .filter(col("cell").isin(cells: _*))
       .select(col(idCol), adcDistExpr(col("codes"), probe, model).as("adc_dist"))
@@ -244,7 +244,7 @@ object Pq {
       idCol: String, vecCol: String, probe: Seq[Double], model: Model,
       centroids: Seq[Array[Double]], k: Int, mCand: Int,
       nProbe: Int): DataFrame = {
-    val probeCol = array(probe.map(lit): _*)
+    val probeCol = VectorOps.vecLit(probe)
     topKIvfResidualAdc(spark, path, idCol, probe, model, centroids, nProbe)
       .orderBy(col("adc_dist"), col(idCol))
       .limit(mCand)
@@ -263,7 +263,7 @@ object Pq {
   def topK(spark: SparkSession, path: String, source: DataFrame,
       idCol: String, vecCol: String, probe: Seq[Double], model: Model,
       k: Int, mCand: Int, nBits: Int = 4): DataFrame = {
-    val probeCol = array(probe.map(lit): _*)
+    val probeCol = VectorOps.vecLit(probe)
     topKApprox(spark, path, idCol, probe, model, mCand, nBits)
       .join(source.select(col(idCol), col(vecCol)), Seq(idCol))
       .select(col(idCol), VectorOps.cosine6(col(vecCol), probeCol).as("sim"))
@@ -292,7 +292,7 @@ object Pq {
       modelR: Model, centsR: Seq[Array[Double]], k: Int, mCand: Int,
       nProbe: Int): DataFrame = {
     val rp = rotateVec(opq.rotation, probe)
-    val probeCol = array(probe.map(lit): _*)
+    val probeCol = VectorOps.vecLit(probe)
     topKIvfResidualAdc(spark, path, idCol, rp, modelR, centsR, nProbe)
       .orderBy(col("adc_dist"), col(idCol))
       .limit(mCand)
@@ -711,7 +711,7 @@ object Pq {
       idCol: String, vecCol: String, probe: Seq[Double], opq: OpqModel,
       k: Int, mCand: Int, nBits: Int = 4): DataFrame = {
     val rp = rotateVec(opq.rotation, probe)
-    val probeCol = array(probe.map(lit): _*)
+    val probeCol = VectorOps.vecLit(probe)
     topKApprox(spark, path, idCol, rp, opq.pq, mCand, nBits)
       .join(source.select(col(idCol), col(vecCol)), Seq(idCol))
       .select(col(idCol), VectorOps.cosine6(col(vecCol), probeCol).as("sim"))

@@ -30,7 +30,7 @@ object Similarity {
     * `ORDER BY sim DESC LIMIT k` plans as TakeOrderedAndProject. */
   def topKCosine(corpus: DataFrame, vecCol: String, probe: Seq[Double], k: Int,
       idCol: String): DataFrame = {
-    val probeCol = array(probe.map(lit): _*)
+    val probeCol = VectorOps.vecLit(probe)
     corpus
       .withColumn("sim", VectorOps.cosine6(col(vecCol), probeCol))
       .select(col(idCol), col("sim"))

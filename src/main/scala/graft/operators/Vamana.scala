@@ -326,7 +326,7 @@ object Vamana {
   def topK(spark: SparkSession, path: String, source: DataFrame,
       idCol: String, vecCol: String, probe: Seq[Double], p: Params,
       k: Int, mCand: Int): DataFrame = {
-    val probeCol = array(probe.map(lit): _*)
+    val probeCol = graft.functions.VectorOps.vecLit(probe)
     searchStore(spark, path, probe, p, mCand)
       .select(col("id").as(idCol))
       .join(source.select(col(idCol), col(vecCol)), Seq(idCol))

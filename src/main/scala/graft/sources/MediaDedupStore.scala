@@ -83,7 +83,7 @@ object MediaDedupStore {
     // logically deleted media never act as dedup evidence — the
     // right-to-be-forgotten contract: a tombstoned image/clip cannot
     // keep suppressing re-ingests of similar content
-    val stored = tombstones(spark, path).fold(scoped)(t =>
+    val stored = StoreFs.tombstones(spark, path).fold(scoped)(t =>
       scoped.join(broadcast(t.toDF("doc")), Seq("doc"), "left_anti"))
     banded(sigs)
       .select(col("band"), col("bucket"), col("doc").as("id_new"),
@@ -150,7 +150,6 @@ object MediaDedupStore {
   // images of people — could never be forgotten.
 
   private def lockPath(path: String): String = path + ".compact_lock"
-  private def tombstoneDir(path: String): String = path + "/_tombstones"
 
   /** Logical delete of media (by `doc` path id) — the right-to-be-
     * forgotten path: ids land in `_tombstones/` under the store root
@@ -166,22 +165,7 @@ object MediaDedupStore {
     require(ids.columns.length == 1,
       s"delete expects a single id column, got ${ids.columns.mkString(",")}")
     StoreFs.failIfLeased(spark, lockPath(path), "MediaDedupStore delete")
-    val dir = tombstoneDir(path)
-    if (StoreFs.hasCommittedData(spark, dir)) {
-      val existing = spark.read.parquet(dir).columns.head
-      require(existing == ids.columns.head,
-        s"tombstone id column mismatch: store has '$existing', " +
-          s"delete got '${ids.columns.head}'")
-    }
-    ids.distinct().write.mode("append").parquet(dir)
-  }
-
-  private[graft] def tombstones(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val dir = tombstoneDir(path)
-    if (StoreFs.hasCommittedData(spark, dir))
-      Some(spark.read.parquet(dir).distinct())
-    else None
+    StoreFs.appendTombstones(spark, path, ids)
   }
 
   /** Compact the store in place: collapse every per-batch `ingest=`
@@ -199,7 +183,7 @@ object MediaDedupStore {
     * contract). Concurrent probes ride [[withReadRetry]]. */
   def compact(spark: SparkSession, path: String): Unit = {
     StoreFs.acquireLease(spark, lockPath(path))
-    val tsFiles = StoreFs.listDataFiles(spark, tombstoneDir(path))
+    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
     val snapNames =
       tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     val dead =

@@ -45,7 +45,6 @@ object ParagraphStore {
   final case class Params(sep: String = "\n", nShards: Int = 32)
 
   private def lockPath(path: String): String = path + ".compact_lock"
-  private def tombstoneDir(path: String): String = path + "/_tombstones"
   private def shardOf(h: Column, n: Int): Column = pmod(hash(h), lit(n))
   private def streamKey(checkpoint: String): String =
     Integer.toHexString(checkpoint.hashCode)
@@ -72,14 +71,6 @@ object ParagraphStore {
       .parquet(path)
   }
 
-  private[graft] def tombstones(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val dir = tombstoneDir(path)
-    if (StoreFs.hasCommittedData(spark, dir))
-      Some(spark.read.parquet(dir).distinct())
-    else None
-  }
-
   /** Prior corpus df for exactly the hashes in `hashes`: shard-pruned
     * scan (the probe's shard set is collected — ≤ nShards ints),
     * `excludeIngest` scopes a replay to the pre-batch store state,
@@ -94,7 +85,7 @@ object ParagraphStore {
       .filter(col("shard").isin(shards: _*))
     val scoped = excludeIngest
       .fold(stored0)(ex => stored0.filter(col("ingest") =!= lit(ex)))
-    val visible = tombstones(spark, path).fold(scoped)(t =>
+    val visible = StoreFs.tombstones(spark, path).fold(scoped)(t =>
       scoped.join(broadcast(t.toDF("h")), Seq("h"), "left_anti"))
     visible.join(hashes.select(col("h")).distinct(), Seq("h"), "left_semi")
       .groupBy(col("h")).agg(sum(col("cnt")).as("prior"))
@@ -157,14 +148,7 @@ object ParagraphStore {
     require(ids.columns.length == 1,
       s"delete expects a single id column, got ${ids.columns.mkString(",")}")
     StoreFs.failIfLeased(spark, lockPath(path), "ParagraphStore delete")
-    val dir = tombstoneDir(path)
-    if (StoreFs.hasCommittedData(spark, dir)) {
-      val existing = spark.read.parquet(dir).columns.head
-      require(existing == ids.columns.head,
-        s"tombstone id column mismatch: store has '$existing', " +
-          s"delete got '${ids.columns.head}'")
-    }
-    ids.distinct().write.mode("append").parquet(dir)
+    StoreFs.appendTombstones(spark, path, ids)
   }
 
   /** Compact: fold every per-batch `ingest=` partition into
@@ -177,7 +161,7 @@ object ParagraphStore {
   def compact(spark: SparkSession, path: String,
       p: Params = Params()): Unit = {
     StoreFs.acquireLease(spark, lockPath(path))
-    val tsFiles = StoreFs.listDataFiles(spark, tombstoneDir(path))
+    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
     val snapNames =
       tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     val dead =

@@ -179,7 +179,7 @@ object SignatureStore {
       textCol: String, path: String, p: Params,
       excludeIngest: Option[String]): DataFrame = {
     val spark = batch.sparkSession
-    val dead = tombstones(spark, path)
+    val dead = StoreFs.tombstones(spark, path)
     def visible(df: DataFrame): DataFrame = {
       val scoped =
         excludeIngest.fold(df)(ex => df.filter(col("ingest") =!= lit(ex)))
@@ -340,7 +340,7 @@ object SignatureStore {
     // snapshot files are removed only AFTER both swaps commit, so a
     // crash between them leaves the delete still logically in force
     // and a re-run re-applies it as a no-op.
-    val tsFiles = StoreFs.listDataFiles(spark, tombstoneDir(path))
+    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
     val dead =
       if (tsFiles.isEmpty) None
       else Some(spark.read.parquet(tsFiles: _*).distinct())
@@ -369,7 +369,7 @@ object SignatureStore {
     // then clear the write-protocol debris (_SUCCESS etc.) and the dir
     // itself NON-recursively — rmdir on a non-empty dir fails atomically,
     // so a late tombstone file keeps the dir (and itself) alive
-    val (tfs, hDir) = StoreFs.fileSystem(spark, tombstoneDir(path))
+    val (tfs, hDir) = StoreFs.fileSystem(spark, StoreFs.tombstoneDir(path))
     if (tfs.exists(hDir)) {
       tfs.listStatus(hDir).foreach { st =>
         val n = st.getPath.getName
@@ -404,28 +404,7 @@ object SignatureStore {
     require(ids.columns.length == 1,
       s"delete expects a single id column, got ${ids.columns.mkString(",")}")
     StoreFs.failIfLeased(spark, lockPath(path), "SignatureStore delete")
-    val dir = tombstoneDir(path)
-    // mixed column names across delete calls would append mixed-schema
-    // parquet files whose non-mergeSchema read returns NULL ids for one
-    // of them — those deletes would silently stop masking probes; the
-    // same check VectorStore.delete makes
-    if (StoreFs.hasCommittedData(spark, dir)) {
-      val existing = spark.read.parquet(dir).columns.head
-      require(existing == ids.columns.head,
-        s"tombstone id column mismatch: store has '$existing', " +
-          s"delete got '${ids.columns.head}'")
-    }
-    ids.distinct().write.mode("append").parquet(dir)
-  }
-
-  private def tombstoneDir(path: String): String = path + "/_tombstones"
-
-  private[graft] def tombstones(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val dir = tombstoneDir(path)
-    if (StoreFs.hasCommittedData(spark, dir))
-      Some(spark.read.parquet(dir).distinct())
-    else None
+    StoreFs.appendTombstones(spark, path, ids)
   }
 
   /** Reader contract for probes running CONCURRENTLY with [[compact]]:

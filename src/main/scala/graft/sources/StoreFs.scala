@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
 
 /** Hadoop-`FileSystem` path operations shared by the crash-resumable
   * stores ([[SignatureStore]], `Packing`'s streaming state): every
@@ -18,24 +19,72 @@ private[graft] object StoreFs {
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
-  /** True iff `dir` holds at least one COMMITTED data file (Spark hides
-    * `_`/`.`-prefixed paths, so a crashed write's `_temporary` debris
-    * does not count — a store that "exists" but has no committed files
-    * must be treated as absent, both for decision correctness and
-    * because schema inference on it would fail). */
-  def hasCommittedData(spark: SparkSession, dir: String): Boolean = {
+  /** The first COMMITTED data file under `dir`, or None when there is
+    * none (Spark hides `_`/`.`-prefixed paths, so a crashed write's
+    * `_temporary` debris does not count — a store that "exists" but has
+    * no committed files must be treated as absent, both for decision
+    * correctness and because schema inference on it would fail). */
+  private def firstCommittedFile(spark: SparkSession,
+      dir: String): Option[FileStatus] = {
     val (fs, p) = fileSystem(spark, dir)
     // Spark's visibility rule: `_`/`.`-prefixed names are hidden UNLESS
     // they contain `=` — a partition directory like `__batch_id=0` is
     // data, `_temporary`/`_SUCCESS` are not
     def visible(n: String): Boolean =
       !(n.startsWith("_") || n.startsWith(".")) || n.contains("=")
-    def walk(path: Path): Boolean =
-      fs.listStatus(path).exists { st =>
-        val n = st.getPath.getName
-        visible(n) && (st.isFile || walk(st.getPath))
-      }
-    fs.exists(p) && walk(p)
+    def walk(path: Path): Option[FileStatus] =
+      fs.listStatus(path).iterator
+        .filter(st => visible(st.getPath.getName))
+        .map(st => if (st.isFile) Some(st) else walk(st.getPath))
+        .collectFirst { case Some(f) => f }
+    if (fs.exists(p)) walk(p) else None
+  }
+
+  /** True iff `dir` holds at least one committed data file. */
+  def hasCommittedData(spark: SparkSession, dir: String): Boolean =
+    firstCommittedFile(spark, dir).isDefined
+
+  /** `dir` as a parquet DataFrame, or None when it holds no committed
+    * data. The schema comes from ONE committed file's footer, read on
+    * the driver, and is handed to `spark.read.schema(..)`: a plain
+    * `spark.read.parquet(dir)` infers the same schema from the same
+    * single footer, but inside a Spark job. Partition columns are
+    * still discovered from the directory names. With
+    * `spark.sql.parquet.mergeSchema` on, every footer matters, so this
+    * defers to Spark's own inference. */
+  def readCommitted(spark: SparkSession, dir: String): Option[DataFrame] =
+    firstCommittedFile(spark, dir).map { f =>
+      val footer =
+        if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+        else GraftParquetShims.footerSchema(spark, f)
+      footer.fold(spark.read.parquet(dir))(s => spark.read.schema(s).parquet(dir))
+    }
+
+  def tombstoneDir(path: String): String = path + "/_tombstones"
+
+  /** The pending tombstone set of the store at `path` (one id column),
+    * or None when no delete is pending. Bounded by deletes since the
+    * last compaction. It may repeat an id: every consumer masks with a
+    * broadcast `left_anti` join, where a duplicate cannot change the
+    * result. */
+  def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
+    readCommitted(spark, tombstoneDir(path))
+
+  /** Append `ids` (one column) to the tombstone dir of the store at
+    * `path`. Mixed column names across deletes would append
+    * mixed-schema parquet whose non-mergeSchema read returns NULL ids
+    * for one side, so those deletes would silently stop masking
+    * probes: the column must match the pending tombstones'. */
+  def appendTombstones(spark: SparkSession, path: String,
+      ids: DataFrame): Unit = {
+    val dir = tombstoneDir(path)
+    readCommitted(spark, dir).foreach { t =>
+      val existing = t.columns.head
+      require(existing == ids.columns.head,
+        s"tombstone id column mismatch: store has '$existing', " +
+          s"delete got '${ids.columns.head}'")
+    }
+    ids.distinct().write.mode("append").parquet(dir)
   }
 
   /** Names of `dir`'s immediate children; empty when `dir` is absent. */

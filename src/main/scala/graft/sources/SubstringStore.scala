@@ -45,7 +45,6 @@ object SubstringStore {
   final case class Params(k: Int = 32, nShards: Int = 32)
 
   private def lockPath(path: String): String = path + ".compact_lock"
-  private def tombstoneDir(path: String): String = path + "/_tombstones"
   private def shardOf(h: Column, n: Int): Column = pmod(hash(h), lit(n))
   private def streamKey(checkpoint: String): String =
     Integer.toHexString(checkpoint.hashCode)
@@ -74,14 +73,6 @@ object SubstringStore {
       .parquet(path)
   }
 
-  private[graft] def tombstones(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val dir = tombstoneDir(path)
-    if (StoreFs.hasCommittedData(spark, dir))
-      Some(spark.read.parquet(dir).distinct())
-    else None
-  }
-
   /** Prior corpus df for exactly the digests in `hashes`: shard-pruned
     * scan, `excludeIngest` scopes a replay to the pre-batch store
     * state, tombstoned digests never count. */
@@ -95,7 +86,7 @@ object SubstringStore {
       .filter(col("shard").isin(shards: _*))
     val scoped = excludeIngest
       .fold(stored0)(ex => stored0.filter(col("ingest") =!= lit(ex)))
-    val visible = tombstones(spark, path).fold(scoped)(t =>
+    val visible = StoreFs.tombstones(spark, path).fold(scoped)(t =>
       scoped.join(broadcast(t.toDF("h")), Seq("h"), "left_anti"))
     visible.join(hashes.select(col("h")).distinct(), Seq("h"), "left_semi")
       .groupBy(col("h")).agg(sum(col("cnt")).as("prior"))
@@ -190,8 +181,7 @@ object SubstringStore {
       s"delete expects the gram-digest column to be named 'h' " +
         s"(md5 hex of the char k-gram), got '${ids.columns.head}'")
     StoreFs.failIfLeased(spark, lockPath(path), "SubstringStore delete")
-    val dir = tombstoneDir(path)
-    ids.distinct().write.mode("append").parquet(dir)
+    ids.distinct().write.mode("append").parquet(StoreFs.tombstoneDir(path))
   }
 
   /** Compact: fold every per-batch `ingest=` partition into
@@ -203,7 +193,7 @@ object SubstringStore {
   def compact(spark: SparkSession, path: String,
       p: Params = Params()): Unit = {
     StoreFs.acquireLease(spark, lockPath(path))
-    val tsFiles = StoreFs.listDataFiles(spark, tombstoneDir(path))
+    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
     val snapNames =
       tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     val dead =

@@ -54,7 +54,6 @@ import graft.operators.Vamana
 object VamanaStore {
 
   private def lockPath(path: String): String = path + ".compact_lock"
-  private def tombstoneDir(path: String): String = path + "/_tombstones"
   private def streamKey(checkpoint: String): String =
     Integer.toHexString(checkpoint.hashCode)
   private def shardOf(id: Column, n: Int): Column =
@@ -78,14 +77,6 @@ object VamanaStore {
       .select(col("shard"), col("id"), col("__r.vec6").as("vec6"),
         col("__r.nbrs").as("nbrs"), col("__r.medoid").as("medoid"),
         col("seq"))
-  }
-
-  private[graft] def tombstones(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val dir = tombstoneDir(path)
-    if (StoreFs.hasCommittedData(spark, dir))
-      Some(spark.read.parquet(dir).distinct())
-    else None
   }
 
   /** One micro-batch insertion: per affected shard, either the
@@ -242,7 +233,7 @@ object VamanaStore {
         }
       }
       .toDF("__pid", "id", "dist6")
-    val masked = tombstones(spark, path).fold(beams)(t =>
+    val masked = StoreFs.tombstones(spark, path).fold(beams)(t =>
       beams.join(broadcast(t.toDF("id")), Seq("id"), "left_anti"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__pid")).orderBy(col("dist6"), col("id"))
@@ -287,7 +278,7 @@ object VamanaStore {
       s"delete expects a single id column, got ${ids.columns.mkString(",")}")
     StoreFs.failIfLeased(spark, lockPath(path), "VamanaStore delete")
     ids.select(col(ids.columns.head).cast("long").as("id")).distinct()
-      .write.mode("append").parquet(tombstoneDir(path))
+      .write.mode("append").parquet(StoreFs.tombstoneDir(path))
   }
 
   /** Compact: rebuild every shard with the canonical batch
@@ -301,7 +292,7 @@ object VamanaStore {
       p: Vamana.Params): Unit = {
     import spark.implicits._
     StoreFs.acquireLease(spark, lockPath(path))
-    val tsFiles = StoreFs.listDataFiles(spark, tombstoneDir(path))
+    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
     val snapNames =
       tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     val dead =

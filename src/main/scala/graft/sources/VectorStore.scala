@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 
@@ -100,28 +100,7 @@ object VectorStore {
     require(ids.columns.length == 1,
       s"delete expects a single id column, got ${ids.columns.mkString(",")}")
     StoreFs.failIfLeased(spark, lockPath(path), "VectorStore delete")
-    val dir = tombstoneDir(path)
-    if (StoreFs.hasCommittedData(spark, dir)) {
-      val existing = spark.read.parquet(dir).columns.head
-      require(existing == ids.columns.head,
-        s"tombstone id column mismatch: store has '$existing', " +
-          s"delete got '${ids.columns.head}'")
-    }
-    ids.distinct().write.mode("append").parquet(dir)
-  }
-
-  private def tombstoneDir(path: String): String = path + "/_tombstones"
-
-  /** The pending tombstone set (one column, the store's id column
-    * name), or None when no delete is pending. Bounded by deletes
-    * since the last compaction — the broadcast in the probes' anti-
-    * join is the same bounded-set bet the hot-key caches make. */
-  private[graft] def tombstones(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val dir = tombstoneDir(path)
-    if (StoreFs.hasCommittedData(spark, dir))
-      Some(spark.read.parquet(dir).distinct())
-    else None
+    StoreFs.appendTombstones(spark, path, ids)
   }
 
   /** Filter `df` to rows not logically deleted. The tombstone frame's
@@ -129,7 +108,7 @@ object VectorStore {
     * naming at probe time always wins. */
   private def withoutDeleted(spark: SparkSession, path: String,
       df: DataFrame, idCol: String): DataFrame =
-    tombstones(spark, path).fold(df) { t =>
+    StoreFs.tombstones(spark, path).fold(df) { t =>
       df.join(broadcast(t.toDF(idCol)), Seq(idCol), "left_anti")
     }
 
@@ -161,8 +140,7 @@ object VectorStore {
     // discarded — the swap's beforeTrashDelete hook rescues any
     // non-snapshot tombstone file out of the trash into the new live
     // dir, so it stays in force until the next compaction.
-    val tsDir = tombstoneDir(path)
-    val tsFiles = StoreFs.listDataFiles(spark, tsDir)
+    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
     val snapNames =
       tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     val dead =
@@ -214,33 +192,39 @@ object VectorStore {
 
   /** The probe's bucket plus its `1+nBits` hamming≤1 neighbors —
     * multi-probe compensates for boundary vectors the way the
-    * in-memory LSH path's extra bands do. */
+    * in-memory LSH path's extra bands do. The probe's own bucket is a
+    * constant: the bucket kernel is evaluated on the driver over the
+    * probe literal (the interpreted path `ConstantFolding` would run,
+    * bit-identical to the per-row [[bucketOf]]), so no job fires. */
   def probeBuckets(spark: SparkSession, probe: Seq[Double], nBits: Int = 4): Seq[Int] = {
-    val vec = array(probe.map(lit): _*)
-    val b = spark.range(1).select(bucketOf(vec, nBits).as("b")).head().getInt(0)
+    val b = graft.expressions.HyperplaneBucketExpr(
+      GraftShims.expression(VectorOps.vecLit(probe)), nBits).eval().asInstanceOf[Int]
     b +: (0 until nBits).map(i => b ^ (1 << i))
   }
 
   /** Read ONLY the probe's bucket directories — the filter on the
     * partition column never touches row data (no bucket column exists
     * inside the files), so the scan's `PartitionFilters` does all the
-    * work and pruned directories are never opened. */
+    * work and pruned directories are never opened. The store schema
+    * comes from one committed file's footer ([[StoreFs.readCommitted]]),
+    * so building the read fires no schema-inference job. A store with
+    * no committed data falls through to `spark.read.parquet`, whose
+    * path error is what [[withReadRetry]] retries mid-swap. */
   def readCandidates(spark: SparkSession, path: String,
       buckets: Seq[Int]): DataFrame =
-    spark.read.parquet(path).filter(col("bucket").isin(buckets: _*))
+    StoreFs.readCommitted(spark, path).getOrElse(spark.read.parquet(path))
+      .filter(col("bucket").isin(buckets: _*))
 
   /** End-to-end probe: top-k by exact cosine over the pruned candidate
     * set. */
   def topK(spark: SparkSession, path: String, idCol: String, vecCol: String,
-      probe: Seq[Double], k: Int, nBits: Int = 4): DataFrame = {
-    val probeCol = array(probe.map(lit): _*)
+      probe: Seq[Double], k: Int, nBits: Int = 4): DataFrame =
     withoutDeleted(spark, path,
         readCandidates(spark, path, probeBuckets(spark, probe, nBits)), idCol)
       .select(col(idCol),
-        VectorOps.cosine6(col(vecCol), probeCol).as("sim"))
+        VectorOps.cosine6(col(vecCol), VectorOps.vecLit(probe)).as("sim"))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
-  }
 
   // --- int8-quantized store (4× smaller on disk) ----------------------
 
@@ -288,11 +272,10 @@ object VectorStore {
   def topKQuantized(spark: SparkSession, path: String, source: DataFrame,
       idCol: String, vecCol: String, probe: Seq[Double], k: Int,
       m: Int, nBits: Int = 4): DataFrame = {
-    val probeCol = array(probe.map(lit): _*)
     val approx = topKQuantizedApprox(spark, path, idCol, probe, m, nBits)
     approx.join(source.select(col(idCol), col(vecCol)), Seq(idCol))
       .select(col(idCol),
-        VectorOps.cosine6(col(vecCol), probeCol).as("sim"))
+        VectorOps.cosine6(col(vecCol), VectorOps.vecLit(probe)).as("sim"))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
   }

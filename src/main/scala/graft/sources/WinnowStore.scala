@@ -46,7 +46,6 @@ object WinnowStore {
       minShared: Int = 30, nShards: Int = 32)
 
   private def lockPath(path: String): String = path + ".compact_lock"
-  private def tombstoneDir(path: String): String = path + "/_tombstones"
   private def shardOf(fp: org.apache.spark.sql.Column, n: Int) =
     pmod(hash(fp), lit(n))
   private def streamKey(checkpoint: String): String =
@@ -75,14 +74,6 @@ object WinnowStore {
       .parquet(path)
   }
 
-  private[graft] def tombstones(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val dir = tombstoneDir(path)
-    if (StoreFs.hasCommittedData(spark, dir))
-      Some(spark.read.parquet(dir).distinct())
-    else None
-  }
-
   /** The store's visible distinct (fp, doc) rows: shard-pruned to the
     * probe's fingerprints when given, `excludeIngest` scopes a replay
     * to the pre-batch state, tombstoned DOCS never match. */
@@ -100,7 +91,7 @@ object WinnowStore {
     }
     val scoped = excludeIngest
       .fold(stored0)(ex => stored0.filter(col("ingest") =!= lit(ex)))
-    val visible = tombstones(spark, path).fold(scoped)(t =>
+    val visible = StoreFs.tombstones(spark, path).fold(scoped)(t =>
       scoped.join(broadcast(t.toDF("doc")), Seq("doc"), "left_anti"))
     visible.select(col("fp"), col("doc")).distinct()
   }
@@ -188,14 +179,7 @@ object WinnowStore {
     require(ids.columns.length == 1,
       s"delete expects a single id column, got ${ids.columns.mkString(",")}")
     StoreFs.failIfLeased(spark, lockPath(path), "WinnowStore delete")
-    val dir = tombstoneDir(path)
-    if (StoreFs.hasCommittedData(spark, dir)) {
-      val existing = spark.read.parquet(dir).columns.head
-      require(existing == ids.columns.head,
-        s"tombstone id column mismatch: store has '$existing', " +
-          s"delete got '${ids.columns.head}'")
-    }
-    ids.distinct().write.mode("append").parquet(dir)
+    StoreFs.appendTombstones(spark, path, ids)
   }
 
   /** Compact: fold every per-batch `ingest=` partition into
@@ -207,7 +191,7 @@ object WinnowStore {
   def compact(spark: SparkSession, path: String,
       p: Params = Params()): Unit = {
     StoreFs.acquireLease(spark, lockPath(path))
-    val tsFiles = StoreFs.listDataFiles(spark, tombstoneDir(path))
+    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
     val snapNames =
       tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     val dead =
