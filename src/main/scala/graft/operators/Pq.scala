@@ -87,13 +87,21 @@ object Pq {
   /** Write the corpus PQ-encoded, partitionBy the same hyperplane-LSH
     * bucket as the full-precision/int8 stores (bucket computed from the
     * ORIGINAL vector → identical pruning behavior; m bytes of codes per
-    * row instead of `dim`). */
+    * row instead of `dim`), one file per bucket. */
   def writeStore(df: DataFrame, idCol: String, vecCol: String, path: String,
       model: Model, nBits: Int = 4): Unit =
-    df.select(col(idCol),
+    writeLayout(df.select(col(idCol),
         graft.sources.VectorStore.bucketOf(col(vecCol), nBits).as("bucket"),
-        encodeExpr(col(vecCol), model).as("codes"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(path)
+        encodeExpr(col(vecCol), model).as("codes")),
+      "bucket", path, "overwrite", "Pq writeStore")
+
+  /** Every PQ store write: [[graft.sources.StoreFs.writePartitioned]]
+    * under the `VectorStore` lease, since `VectorStore.compact` is what
+    * compacts these stores. */
+  private def writeLayout(df: DataFrame, partCol: String, path: String,
+      mode: String, what: String): Unit =
+    graft.sources.StoreFs.writePartitioned(df, partCol, path, mode,
+      graft.sources.VectorStore.lockPath(path), what)
 
   /** Pruned-probe approximate top-`mCand` by ADC distance (ascending;
     * ties break to the lowest id). */
@@ -130,24 +138,28 @@ object Pq {
     * vectors are fetched only per surviving id. */
   def writeStoreIvf(df: DataFrame, idCol: String, vecCol: String,
       path: String, model: Model, centroids: Seq[Array[Double]]): Unit =
-    df.select(col(idCol),
-        Similarity.assignExprAuto(col(vecCol), centroids).as("cell"),
-        encodeExpr(col(vecCol), model).as("codes"))
-      .write.partitionBy("cell").mode("overwrite").parquet(path)
+    writeLayout(ivfRows(df, idCol, vecCol, model, centroids), "cell", path,
+      "overwrite", "Pq writeStoreIvf")
 
   /** Incremental IVF-PQ index maintenance: append a (micro-)batch —
-    * same cells, same codebooks, new files inside the existing cell
-    * directories (the posture of `VectorStore.append`); run
+    * same cells, same codebooks, ONE new file inside each cell
+    * directory the batch touches (the posture of `VectorStore.append`:
+    * per-file cost dominates a small append, so files are counted per
+    * (batch, cell), not per (task, cell)); run
     * `VectorStore.compact(spark, path, nBits, partCol = "cell")`
     * periodically to restore one file per cell. The MODEL is frozen at
     * train time — the standard IVF-PQ operating regime (retrain +
     * rebuild is an offline operation, not an append). */
   def appendIvf(df: DataFrame, idCol: String, vecCol: String,
       path: String, model: Model, centroids: Seq[Array[Double]]): Unit =
+    writeLayout(ivfRows(df, idCol, vecCol, model, centroids), "cell", path,
+      "append", "Pq appendIvf")
+
+  private def ivfRows(df: DataFrame, idCol: String, vecCol: String,
+      model: Model, centroids: Seq[Array[Double]]): DataFrame =
     df.select(col(idCol),
-        Similarity.assignExprAuto(col(vecCol), centroids).as("cell"),
-        encodeExpr(col(vecCol), model).as("codes"))
-      .write.partitionBy("cell").mode("append").parquet(path)
+      Similarity.assignExprAuto(col(vecCol), centroids).as("cell"),
+      encodeExpr(col(vecCol), model).as("codes"))
 
   /** IVF-PQ probe: read ONLY the `nProbe` nearest cell directories
     * (Catalyst `PartitionFilters` — spec-guarded), ADC-score their
@@ -210,10 +222,10 @@ object Pq {
     * coarse cell, each row carrying the PQ codes of its RESIDUAL. */
   def writeStoreIvfResidual(df: DataFrame, idCol: String, vecCol: String,
       path: String, model: Model, centroids: Seq[Array[Double]]): Unit =
-    df.select(col(idCol),
+    writeLayout(df.select(col(idCol),
         Similarity.assignExprAuto(col(vecCol), centroids).as("cell"),
-        encodeExpr(residualExpr(col(vecCol), centroids), model).as("codes"))
-      .write.partitionBy("cell").mode("overwrite").parquet(path)
+        encodeExpr(residualExpr(col(vecCol), centroids), model).as("codes")),
+      "cell", path, "overwrite", "Pq writeStoreIvfResidual")
 
   /** The scoring stage of [[topKIvfResidual]] (no rerank/limit):
     * per-cell single-directory scans, each with its own literal ADC

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
 
 /** Hadoop-`FileSystem` path operations shared by the crash-resumable
@@ -85,6 +86,27 @@ private[graft] object StoreFs {
           s"delete got '${ids.columns.head}'")
     }
     ids.distinct().write.mode("append").parquet(dir)
+  }
+
+  /** The partitioned store writer: `df` lands in `path`
+    * `partitionBy(partCol)`, ONE file per partition directory per
+    * write, after the compactor-lease probe at `lockPath`. Unshuffled,
+    * every task writes its own file into every directory it holds
+    * rows for (an ingest micro-batch at 4 tasks × 16 buckets wrote 64
+    * files), and each file costs a footer and a `.crc` on disk plus,
+    * on Hadoop's local file system without the native library, a
+    * forked `chmod` per file, `.crc` and new directory (10.5-14.3 ms
+    * per directory + file + `.crc` on a 4-CPU host, against 0.13 ms
+    * through plain `java.io`). The `rebalance` hint hash-places every
+    * directory's rows in one reducer; AQE coalesces a small write into
+    * few tasks, and splits a directory whose rows outgrow the advisory
+    * partition size over several tasks (one file each), so a hot
+    * bucket at scale is not one straggler task. */
+  def writePartitioned(df: DataFrame, partCol: String, path: String,
+      mode: String, lockPath: String, what: String): Unit = {
+    failIfLeased(df.sparkSession, lockPath, what)
+    df.hint("rebalance", col(partCol))
+      .write.partitionBy(partCol).mode(mode).parquet(path)
   }
 
   /** Names of `dir`'s immediate children; empty when `dir` is absent. */

@@ -29,35 +29,41 @@ object VectorStore {
   def bucketOf(vec: Column, nBits: Int): Column =
     graft.expressions.VectorExpressions.hyperplaneBucket(vec, nBits)
 
-  /** Write the corpus partitioned by bucket. At scale each bucket
+  /** Write the corpus partitioned by bucket, one file per bucket
+    * directory ([[StoreFs.writePartitioned]]: per-file cost, not
+    * bytes, dominates a small store write). At scale each bucket
     * directory holds ~N/2^nBits vectors; `nBits` sizes the pruning
     * ratio (4 bits → 16 directories → a 1-probe read touches ~6% of
     * the store). */
   def write(df: DataFrame, idCol: String, vecCol: String, path: String,
-      nBits: Int = 4): Unit = {
-    StoreFs.failIfLeased(df.sparkSession, lockPath(path), "VectorStore write")
-    df.select(col(idCol), col(vecCol),
-        bucketOf(col(vecCol), nBits).as("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(path)
-  }
+      nBits: Int = 4): Unit =
+    StoreFs.writePartitioned(withBucket(df, idCol, vecCol, nBits), "bucket",
+      path, "overwrite", lockPath(path), "VectorStore write")
 
   /** Incremental index maintenance: append a (micro-)batch of vectors
-    * — same layout, same bucket function, new files land inside the
-    * existing bucket directories, so probes see them with no
-    * reorganization. This is the `foreachBatch` body of a streaming
-    * ingest ([[appendStream]]); idempotence across batch replays comes
-    * from the streaming checkpoint, as in `Streams.runIngest`. */
+    * — same layout, same bucket function, ONE new file inside each
+    * bucket directory the batch touches, so probes see them with no
+    * reorganization. One file per (batch, bucket) rather than per
+    * (task, bucket), because every file's footer, `.crc` and
+    * permission calls cost more than a micro-batch's bytes
+    * ([[StoreFs.writePartitioned]]). This is the `foreachBatch` body
+    * of a streaming ingest ([[appendStream]]); idempotence across batch
+    * replays comes from the streaming checkpoint, as in
+    * `Streams.runIngest`. */
   def append(df: DataFrame, idCol: String, vecCol: String, path: String,
-      nBits: Int = 4): Unit = {
-    StoreFs.failIfLeased(df.sparkSession, lockPath(path), "VectorStore append")
-    df.select(col(idCol), col(vecCol),
-        bucketOf(col(vecCol), nBits).as("bucket"))
-      .write.partitionBy("bucket").mode("append").parquet(path)
-  }
+      nBits: Int = 4): Unit =
+    StoreFs.writePartitioned(withBucket(df, idCol, vecCol, nBits), "bucket",
+      path, "append", lockPath(path), "VectorStore append")
+
+  private def withBucket(df: DataFrame, idCol: String, vecCol: String,
+      nBits: Int): DataFrame =
+    df.select(col(idCol), col(vecCol), bucketOf(col(vecCol), nBits).as("bucket"))
 
   /** Streaming index build: drain `stream` into the store with
     * AvailableNow (the reference's drain-then-stop ingest shape,
-    * `src/signal/poll.rs` per SURVEY §2.8). A store built by streaming
+    * `src/signal/poll.rs` per SURVEY §2.8). Each micro-batch is one
+    * [[append]], so it adds one file per bucket directory it touches,
+    * whatever the batch's task count. A store built by streaming
     * micro-batches equals a batch-built store — asserted in
     * VectorStoreSpec. */
   def appendStream(stream: DataFrame, idCol: String, vecCol: String,
@@ -125,7 +131,8 @@ object VectorStore {
     * alike). WRITERS are excluded for the duration by the sibling
     * `<path>.compact_lock` lease (outside the store dir — the store
     * dir itself is what the swap renames): a racing
-    * [[write]]/[[append]]/[[delete]] fails fast with a clear error; a
+    * [[write]]/[[append]]/[[writeQuantized]]/[[delete]] (or `Pq` store
+    * writer) fails fast with a clear error; a
     * compactor CRASH leaves the lease until [[recover]] clears it — a
     * fresh compact() REFUSES a held lease (atomic acquire, so two
     * concurrent compactions can never both own the store); recover()
@@ -167,7 +174,9 @@ object VectorStore {
     StoreFs.releaseLease(spark, lockPath(path))
   }
 
-  private def lockPath(path: String): String = path + ".compact_lock"
+  /** The compactor lease of the store at `path`: a sibling, because
+    * the swap renames the store dir itself. `Pq`'s stores share it. */
+  private[graft] def lockPath(path: String): String = path + ".compact_lock"
 
   /** Reader contract for probes racing [[compact]]: wrap the whole
     * probe (plan construction + action) here — the swap's no-live
@@ -228,7 +237,8 @@ object VectorStore {
 
   // --- int8-quantized store (4× smaller on disk) ----------------------
 
-  /** Write the corpus int8-quantized: same partitionBy(bucket) layout,
+  /** Write the corpus int8-quantized: same partitionBy(bucket) layout
+    * (one file per bucket, through [[StoreFs.writePartitioned]]),
     * but each vector is stored as 1 byte per dimension (packed BINARY
     * codes + per-vector affine vmin/scale — `Int8Encode` kernel, one
     * pass) instead of 4-byte floats. This is the "compress before
@@ -240,12 +250,13 @@ object VectorStore {
   def writeQuantized(df: DataFrame, idCol: String, vecCol: String,
       path: String, nBits: Int = 4): Unit = {
     val enc = graft.expressions.VectorExpressions.int8Encode(col(vecCol))
-    df.select(col(idCol),
+    StoreFs.writePartitioned(
+      df.select(col(idCol),
         bucketOf(col(vecCol), nBits).as("bucket"),
         enc.getField("codes").as("codes"),
         enc.getField("vmin").as("vmin"),
-        enc.getField("scale").as("scale"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(path)
+        enc.getField("scale").as("scale")),
+      "bucket", path, "overwrite", lockPath(path), "VectorStore writeQuantized")
   }
 
   /** Approximate top-m over the quantized store: partition-pruned read,

@@ -7,6 +7,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
+import graft.operators.Pq
 import graft.sources.{SignatureStore, VectorStore}
 import graft.sources.SignatureStore.SwapPause
 
@@ -127,10 +128,18 @@ class ConcurrentCompactSpec extends SparkSpec {
     val path = freshVecStore()
     val baseline = vecProbe(path)
     val extra = Tables.embeddings(spark, sf).filter($"vec_id" < 0)
+    // the quantized and PQ writers share the store's lease (the cell
+    // store is compacted by VectorStore.compact too); the model is
+    // never used, the lease probe runs first
+    val dim = Tables.embeddings(spark, sf).select(size($"embedding")).head().getInt(0)
+    val zero = Array.fill(dim)(0.0)
+    val model = Pq.Model(1, dim, IndexedSeq(IndexedSeq(zero)))
     duringSwapWindow(() => VectorStore.compact(spark, path)) {
       for (op <- Seq(
           () => VectorStore.append(extra, "vec_id", "embedding", path),
           () => VectorStore.write(extra, "vec_id", "embedding", path),
+          () => VectorStore.writeQuantized(extra, "vec_id", "embedding", path),
+          () => Pq.appendIvf(extra, "vec_id", "embedding", path, model, Seq(zero)),
           () => VectorStore.delete(spark, path, Seq(999999L).toDF("vec_id")))) {
         val e = intercept[IllegalStateException] { op() }
         assert(e.getMessage.contains("compact() holds the store lease"),

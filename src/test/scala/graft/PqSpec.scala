@@ -66,8 +66,15 @@ class PqSpec extends SparkSpec {
     Pq.writeStoreIvf(src.filter($"vec_id" % 2 === 0), "vec_id", "embedding",
       inc, model, cents)
     (0 until 3).foreach { i =>
-      Pq.appendIvf(src.filter($"vec_id" % 2 === 1 && $"vec_id" % 3 === i),
+      val before = VectorStoreSpec.parquetFilesPerDir(inc)
+      // 4 writing tasks, each holding rows of most cells
+      Pq.appendIvf(
+        src.filter($"vec_id" % 2 === 1 && $"vec_id" % 3 === i).repartition(4),
         "vec_id", "embedding", inc, model, cents)
+      val added = VectorStoreSpec.parquetFilesPerDir(inc)
+        .map { case (d, n) => d -> (n - before.getOrElse(d, 0)) }
+      assert(added.values.sum > 1 && added.values.forall(_ <= 1),
+        s"append $i: files added per cell dir: $added")
     }
     def probeInc() = Pq.topKIvf(spark, inc, src, "vec_id", "embedding", probe,
         model, cents, k = 10, mCand = 50, nProbe = 4)

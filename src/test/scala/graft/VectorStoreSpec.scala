@@ -73,6 +73,66 @@ class VectorStoreSpec extends SparkSpec {
     assert(a === b)
   }
 
+  test("append lands one file per bucket directory however many tasks " +
+      "write it; store and probe equal the write-built store") {
+    val src = Tables.embeddings(spark, sf)
+    val dir = Files.createTempDirectory("graft_vs_layout").toString
+    VectorStore.write(src.filter($"vec_id" % 2 === 0), "vec_id", "embedding", dir, nBits)
+    val before = VectorStoreSpec.parquetFilesPerDir(dir)
+    // round-robin over 4 partitions: every task holds rows of most buckets
+    val odds = src.filter($"vec_id" % 2 === 1).repartition(4)
+    assert(odds.rdd.getNumPartitions === 4)
+    VectorStore.append(odds, "vec_id", "embedding", dir, nBits)
+    val after = VectorStoreSpec.parquetFilesPerDir(dir)
+    val added = after.map { case (d, n) => d -> (n - before.getOrElse(d, 0)) }
+    assert(added.values.sum > 1, after.toString)
+    assert(added.values.forall(_ <= 1), s"files added per bucket dir: $added")
+
+    def idToBucket(p: String) = spark.read.parquet(p)
+      .select($"vec_id", $"bucket").as[(Long, Int)].collect().toMap
+    assert(idToBucket(dir) === idToBucket(path))
+    val probe = src.filter($"vec_id" === 0)
+      .select($"embedding").head().getSeq[Float](0).map(_.toDouble).toSeq
+    def top(p: String) = VectorStore.topK(spark, p, "vec_id", "embedding", probe, 10, nBits)
+      .as[(Long, Double)].collect().toSeq
+    assert(top(dir) === top(path))
+  }
+
+  test("a bucket past the advisory partition size is split over " +
+      "several writing tasks; the store's contents are unchanged") {
+    val src = Tables.embeddings(spark, sf)
+    val dir = Files.createTempDirectory("graft_vs_split").toString
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "1k")
+    try VectorStore.append(src.repartition(4), "vec_id", "embedding", dir, nBits)
+    finally spark.conf.unset(key)
+    val files = VectorStoreSpec.parquetFilesPerDir(dir)
+    assert(files.values.exists(_ > 1), files.toString)
+    val back = spark.read.parquet(dir).select($"vec_id", $"bucket")
+      .as[(Long, Int)].collect()
+    assert(back.length === src.count())
+    assert(back.toMap === spark.read.parquet(path).select($"vec_id", $"bucket")
+      .as[(Long, Int)].collect().toMap)
+  }
+
+  test("VectorStore and Pq write partitioned stores only through " +
+      "StoreFs.writePartitioned (compact's staged rewrite excepted)") {
+    val mainSrc = java.nio.file.Paths.get("src/main/scala/graft")
+    val partitionedWrite = """\.write\s*\.partitionBy\(""".r
+    val offenders = Seq("sources/VectorStore.scala", "operators/Pq.scala")
+      .flatMap { f =>
+        val text = Files.readString(mainSrc.resolve(f))
+        partitionedWrite.findAllMatchIn(text)
+          .filterNot { m =>
+            val sink = text.indexOf(".parquet(", m.start)
+            sink >= 0 && text.startsWith(".parquet(staged)", sink)
+          }
+          .map(m => s"$f:${text.take(m.start).count(_ == '\n') + 1}")
+      }
+    assert(offenders.isEmpty,
+      s"write partitioned stores with StoreFs.writePartitioned: $offenders")
+  }
+
   test("quantized store: 1 byte/dim on disk, ~4x smaller; kernel == HOF quantization; " +
       "rerank with full m equals full-precision top-k") {
     import graft.expressions.VectorExpressions
@@ -227,5 +287,18 @@ class VectorStoreSpec extends SparkSpec {
       .limit(10).as[(Long, Double)].collect().toSeq
     assert(got === expected)
     assert(got.head === ((0L, 1.0))) // the probe's own row is never pruned away
+  }
+}
+
+object VectorStoreSpec {
+  /** `.parquet` file count per immediate partition directory of `dir`. */
+  def parquetFilesPerDir(dir: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    val stream = Files.walk(java.nio.file.Paths.get(dir))
+    try stream.iterator().asScala
+      .filter(_.toString.endsWith(".parquet"))
+      .toSeq.groupBy(_.getParent.getFileName.toString)
+      .map { case (d, fs) => d -> fs.size }
+    finally stream.close()
   }
 }
