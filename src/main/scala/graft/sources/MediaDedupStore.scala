@@ -27,7 +27,10 @@ import org.apache.spark.sql.functions._
   * and overwrites only its own output, whether the crash hit before,
   * between, or after the two writes.
   */
-object MediaDedupStore {
+object MediaDedupStore extends MaintainedStore {
+
+  protected def storeName = "MediaDedupStore"
+  override protected def idColumn = Some("doc")
 
   /** Perceptual 64-bit hash of a media binary: images via dHash, then
     * audio via the envelope fingerprint; `None` if neither decodes. */
@@ -51,9 +54,6 @@ object MediaDedupStore {
       posexplode(array((0 until 4).map(b =>
         shiftright(col("sig"), 16 * b).bitwiseAND(lit(0xFFFFL))): _*))
         .as(Seq("band", "bucket")))
-
-  private def streamKey(checkpoint: String): String =
-    Integer.toHexString(checkpoint.hashCode)
 
   /** Idempotent per-micro-batch store write: this batch's partition is
     * replaced, nothing else is touched. Fails fast while a [[compact]]
@@ -130,7 +130,7 @@ object MediaDedupStore {
   def ingestDedup(stream: DataFrame, path: String, acceptedPath: String,
       checkpoint: String, maxHamming: Int = 3)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val key = streamKey(checkpoint)
+    val key = StoreFs.streamKey(checkpoint)
     stream.writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
@@ -141,81 +141,21 @@ object MediaDedupStore {
       .start()
   }
 
-  // --- maintenance: delete / compact / retry / recover ------------------
+  // --- maintenance (the StoreFs protocol) -----------------------------
   //
-  // The full store-maintenance contract its siblings carry
-  // (SignatureStore / VectorStore), inherited verbatim: without it the
-  // store accretes one `ingest=b<id>_<hash>` partition per micro-batch
-  // FOREVER (probe cost and file counts grow without bound), and media —
-  // images of people — could never be forgotten.
+  // Without it the store accretes one `ingest=b<id>_<hash>` partition
+  // per micro-batch forever, and media (images of people) could never
+  // be forgotten. Deletes are by `doc` (the media path).
 
-  private def lockPath(path: String): String = path + ".compact_lock"
-
-  /** Logical delete of media (by `doc` path id) — the right-to-be-
-    * forgotten path: ids land in `_tombstones/` under the store root
-    * (hidden from store scans by the `_` prefix), probes exclude them
-    * immediately (a deleted clip never acts as dedup evidence), and
-    * [[compact]] removes the rows physically and clears the tombstones.
-    * Same contract as `SignatureStore.delete`: single id column (named
-    * `doc`, the store's id column — mixed names would append
-    * mixed-schema parquet whose read silently NULLs one side); absent
-    * ids are harmless; a tombstone wins over later appends of the same
-    * doc until compaction. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    require(ids.columns.length == 1,
-      s"delete expects a single id column, got ${ids.columns.mkString(",")}")
-    StoreFs.failIfLeased(spark, lockPath(path), "MediaDedupStore delete")
-    StoreFs.appendTombstones(spark, path, ids)
-  }
-
-  /** Compact the store in place: collapse every per-batch `ingest=`
-    * partition into the single `ingest=base` partition at a bounded
-    * file count, applying pending tombstones physically — probe results
-    * are BIT-IDENTICAL across the rewrite (spec-asserted). Stage-then-
-    * swap via `SignatureStore.stageAndSwap` (two atomic renames, crash
-    * windows recovered by [[recover]]); writers are excluded for the
-    * duration by the sibling `<path>.compact_lock` lease (outside the
-    * store dir — the store dir itself is what the swap renames) and a
-    * concurrent compact() is refused at the atomic acquire. Tombstone
-    * files are snapshotted at entry; one appended mid-compaction is
-    * rescued out of `.trash` by the shared `beforeTrashDelete` hook and
-    * stays in force for the next compaction (the delete-vs-compact race
-    * contract). Concurrent probes ride [[withReadRetry]]. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    StoreFs.acquireLease(spark, lockPath(path))
-    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
-    val snapNames =
-      tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-    val dead =
-      if (tsFiles.isEmpty) None
-      else Some(spark.read.parquet(tsFiles: _*).distinct())
-    SignatureStore.stageAndSwap(spark, path,
-      () => StoreFs.rescueLateTombstones(spark, path, snapNames)) {
-      (src, staged) =>
-        val cleaned = dead.fold(src)(t =>
-          src.join(broadcast(t.toDF("doc")), Seq("doc"), "left_anti"))
-        cleaned.select(col("doc"), col("sig"), col("band"), col("bucket"))
-          .withColumn("ingest", lit("base"))
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.partitionBy("ingest").mode("overwrite").parquet(staged)
+  /** Compact the store in place ([[MaintainedStore.compactWith]]):
+    * collapse every per-batch `ingest=` partition into the single
+    * `ingest=base` partition at a bounded file count; probe results are
+    * BIT-IDENTICAL across the rewrite (spec-asserted). */
+  def compact(spark: SparkSession, path: String): Unit =
+    compactWith(spark, path) { (_, rows, staged) =>
+      rows.select(col("doc"), col("sig"), col("band"), col("bucket"))
+        .withColumn("ingest", lit("base"))
+        .repartition(spark.sparkContext.defaultParallelism)
+        .write.partitionBy("ingest").mode("overwrite").parquet(staged)
     }
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
-
-  /** Reader contract for probes racing [[compact]] — wrap plan
-    * construction AND the action; transient swap-window read errors
-    * retry with a file-cache refresh. After a compactor CRASH run
-    * [[recover]] instead (the no-live state is then permanent). */
-  def withReadRetry[T](spark: SparkSession, path: String,
-      attempts: Int = 6)(thunk: => T): T =
-    StoreFs.retryingRead(spark, Seq(path), attempts)(thunk)
-
-  /** Recover an interrupted [[compact]]: complete or clean the
-    * half-finished swap and clear the crashed compactor's lease. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val h = new org.apache.hadoop.fs.Path(path)
-    SignatureStore.recoverSwap(
-      h.getFileSystem(spark.sessionState.newHadoopConf()), path)
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
 }

@@ -33,21 +33,19 @@ import graft.operators.Dedup
   * overwrite, and the keep decision EXCLUDES that partition from the
   * store it reads.
   *
-  * Maintenance carries the full store contract from birth (the r15
-  * MediaDedupStore lesson): [[compact]] (stage-then-swap, lease),
-  * [[delete]] (tombstones by paragraph digest — known boilerplate/PII
-  * strings stop counting immediately and are removed physically at
-  * compaction), [[withReadRetry]], [[recover]].
+  * Maintenance is the [[StoreFs]] protocol. Deletes are by paragraph
+  * digest (single column `h`, the sha2 hex of the trimmed paragraph):
+  * known boilerplate or PII strings stop counting at once.
   */
-object ParagraphStore {
+object ParagraphStore extends MaintainedStore {
+
+  protected def storeName = "ParagraphStore"
+  override protected def idColumn = Some("h")
 
   /** `sep`/`nShards` MUST match between ingests of one store. */
   final case class Params(sep: String = "\n", nShards: Int = 32)
 
-  private def lockPath(path: String): String = path + ".compact_lock"
   private def shardOf(h: Column, n: Int): Column = pmod(hash(h), lit(n))
-  private def streamKey(checkpoint: String): String =
-    Integer.toHexString(checkpoint.hashCode)
 
   /** This batch's paragraph document frequencies: (h, cnt) with cnt =
     * DISTINCT batch docs containing the paragraph (q154's df axis). */
@@ -128,7 +126,7 @@ object ParagraphStore {
       p: Params = Params(), maxDf: Long = 1)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(maxDf >= 1, s"maxDf must be >= 1: $maxDf")
-    val key = streamKey(checkpoint)
+    val key = StoreFs.streamKey(checkpoint)
     stream.writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
@@ -139,61 +137,18 @@ object ParagraphStore {
       .start()
   }
 
-  /** Logical delete of paragraph digests (single column named `h` —
-    * sha2 hex of the trimmed paragraph, e.g. known boilerplate or PII
-    * strings): masked from every probe immediately, applied physically
-    * and cleared by [[compact]]; wins over later appends of the same
-    * digest until then. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    require(ids.columns.length == 1,
-      s"delete expects a single id column, got ${ids.columns.mkString(",")}")
-    StoreFs.failIfLeased(spark, lockPath(path), "ParagraphStore delete")
-    StoreFs.appendTombstones(spark, path, ids)
-  }
-
-  /** Compact: fold every per-batch `ingest=` partition into
-    * `ingest=base` with ONE row per (surviving) digest — counts are
-    * additive, so probe results are identical by construction (probes
-    * sum either way; spec-asserted). Stage-then-swap with the sibling
-    * lease, tombstones snapshotted at entry and applied physically,
-    * late tombstones rescued out of `.trash` (the shared
-    * `beforeTrashDelete` hook). */
+  /** Compact ([[MaintainedStore.compactWith]]): fold every per-batch
+    * `ingest=` partition into `ingest=base` with ONE row per surviving
+    * digest. Counts are additive, so probe results are identical by
+    * construction (probes sum either way; spec-asserted). */
   def compact(spark: SparkSession, path: String,
-      p: Params = Params()): Unit = {
-    StoreFs.acquireLease(spark, lockPath(path))
-    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
-    val snapNames =
-      tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-    val dead =
-      if (tsFiles.isEmpty) None
-      else Some(spark.read.parquet(tsFiles: _*).distinct())
-    SignatureStore.stageAndSwap(spark, path,
-      () => StoreFs.rescueLateTombstones(spark, path, snapNames)) {
-      (src, staged) =>
-        val cleaned = dead.fold(src)(t =>
-          src.join(broadcast(t.toDF("h")), Seq("h"), "left_anti"))
-        cleaned.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
-          .withColumn("shard", shardOf(col("h"), p.nShards))
-          .withColumn("ingest", lit("base"))
-          .repartition(p.nShards, col("shard"))
-          .write.partitionBy("ingest", "shard").mode("overwrite")
-          .parquet(staged)
+      p: Params = Params()): Unit =
+    compactWith(spark, path) { (_, rows, staged) =>
+      rows.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
+        .withColumn("shard", shardOf(col("h"), p.nShards))
+        .withColumn("ingest", lit("base"))
+        .repartition(p.nShards, col("shard"))
+        .write.partitionBy("ingest", "shard").mode("overwrite")
+        .parquet(staged)
     }
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
-
-  /** Reader retry through a concurrent [[compact]]'s swap windows —
-    * build the probe AND run the action inside the thunk. */
-  def withReadRetry[T](spark: SparkSession, path: String,
-      attempts: Int = 6)(thunk: => T): T =
-    StoreFs.retryingRead(spark, Seq(path), attempts)(thunk)
-
-  /** Recover an interrupted [[compact]]: repair the swap, clear the
-    * crashed compactor's lease. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val h = new org.apache.hadoop.fs.Path(path)
-    SignatureStore.recoverSwap(
-      h.getFileSystem(spark.sessionState.newHadoopConf()), path)
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
 }

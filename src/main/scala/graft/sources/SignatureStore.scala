@@ -35,8 +35,20 @@ import graft.operators.Dedup
   * a crash between the store append and the accepted append made the
   * replayed rows near-dups of their own prior insertion — they dropped
   * out and never reached the accepted sink).
+  *
+  * Maintenance is the [[StoreFs]] protocol over two surfaces, `bands/`
+  * and `shingles/`, with the lease at `<path>/_compact_lock` and the
+  * tombstones at `<path>/_tombstones` (by `doc`; a deleted doc never
+  * acts as dedup evidence).
   */
-object SignatureStore {
+object SignatureStore extends MaintainedStore {
+
+  protected def storeName = "SignatureStore"
+  override private[graft] def lockPath(path: String): String =
+    path + "/_compact_lock"
+  override protected def surfaces(path: String): Seq[String] =
+    Seq(path + "/bands", path + "/shingles")
+  override protected def idColumn = Some("doc")
 
   /** Banding parameters; MUST match between store build and probe
     * (defaults = the production 0.8-threshold regime of
@@ -123,21 +135,13 @@ object SignatureStore {
     writeAs(df, idCol, textCol, path, ingest, p, mode = "overwrite",
       dynamicOverwrite = true)
 
-  /** Stable per-stream key so ingest partitions from different streams
-    * (whose batch ids both start at 0) can never collide: the streaming
-    * checkpoint IS the batch-id namespace, so its path is the right
-    * discriminator — a restart reuses the checkpoint and hence the same
-    * keys (that is what makes replay land on its own partitions). */
-  private def streamKey(checkpoint: String): String =
-    Integer.toHexString(checkpoint.hashCode)
-
   /** Streaming ingest into the signature store (AvailableNow drain —
     * the reference's drain-then-stop shape). Replay-idempotent: each
     * batch writes its own `ingest` partitions with dynamic overwrite. */
   def appendStream(stream: DataFrame, idCol: String, textCol: String,
       path: String, checkpoint: String,
       p: Params = Params()): org.apache.spark.sql.streaming.StreamingQuery = {
-    val key = streamKey(checkpoint)
+    val key = StoreFs.streamKey(checkpoint)
     stream.writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
@@ -297,7 +301,7 @@ object SignatureStore {
       path: String, acceptedPath: String, checkpoint: String,
       p: Params = Params(), jaccardThreshold: Double = 0.8)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val key = streamKey(checkpoint)
+    val key = StoreFs.streamKey(checkpoint)
     stream.writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
@@ -308,251 +312,28 @@ object SignatureStore {
       .start()
   }
 
-  /** Compact the store in place: rewrite both surfaces into the single
-    * `ingest=base` partition at one file per shard (bands) / a bounded
-    * file count (shingles). A daily [[appendStream]]/[[ingestDedup]]
-    * accretes one ingest partition with up-to-nShards files per batch;
-    * probe scans degrade with file count even when pruning works —
-    * compaction restores the bulk-build layout with BIT-IDENTICAL probe
-    * results (same rows, same schema; spec-asserted). Stage-then-swap:
-    * the rewrite lands in a sibling staging dir, then replaces the live
-    * dir via the Hadoop FileSystem (works on local FS and HDFS alike).
-    * WRITERS are excluded for the duration by the `_compact_lock`
-    * lease — a racing [[append]]/[[appendBatch]]/[[delete]] fails fast
-    * with a clear error instead of writing into a surface mid-swap (a
-    * write landing in the no-live window would even recreate the live
-    * path and break the swap's rename). A compactor CRASH leaves the
-    * lease in place: writers keep failing until [[recover]] clears it,
-    * and a fresh compact() REFUSES the held lease too (the acquire is
-    * atomic `create(overwrite=false)` — two concurrent compactions can
-    * no longer both "own" the store) — recover() is the one gate back.
-    * Concurrent
-    * PROBES are fine under the [[withReadRetry]] reader contract (the
-    * swap's transient windows retry; results are bit-identical either
-    * side). */
-  def compact(spark: SparkSession, path: String, p: Params = Params()): Unit = {
-    StoreFs.acquireLease(spark, lockPath(path))
-    // apply pending deletes physically on both surfaces, reading a
-    // SNAPSHOT of the tombstone dir's files taken now — a delete()
-    // racing past the lease's probe window appends a NEW file, which
-    // this compaction neither applies nor removes: it stays in force
-    // (probes keep masking) and the next compaction applies it. The
-    // snapshot files are removed only AFTER both swaps commit, so a
-    // crash between them leaves the delete still logically in force
-    // and a re-run re-applies it as a no-op.
-    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
-    val dead =
-      if (tsFiles.isEmpty) None
-      else Some(spark.read.parquet(tsFiles: _*).distinct())
-    def cleaned(src: DataFrame): DataFrame =
-      dead.fold(src)(t =>
-        src.join(broadcast(t.toDF("doc")), Seq("doc"), "left_anti"))
-    stageAndSwap(spark, path + "/bands") { (src, staged) =>
-      cleaned(src.select(col("doc"), col("band"), col("bucket"), col("shard")))
-        .withColumn("ingest", lit("base"))
-        .repartition(p.nShards, col("shard"))
-        .write.partitionBy("ingest", "shard").mode("overwrite").parquet(staged)
+  /** Compact the store in place ([[MaintainedStore.compactWith]]):
+    * rewrite both surfaces into the single `ingest=base` partition at
+    * one file per shard (bands) / a bounded file count (shingles). A
+    * daily [[appendStream]]/[[ingestDedup]] accretes one ingest
+    * partition with up to nShards files per batch; probe scans degrade
+    * with file count even when pruning works. The compacted layout
+    * gives BIT-IDENTICAL probe results (same rows, same schema;
+    * spec-asserted). The tombstone dir lives outside both surfaces, so
+    * the snapshot's files are removed only after both swaps commit: a
+    * crash between them leaves the delete in force, and a re-run
+    * re-applies it as a no-op. */
+  def compact(spark: SparkSession, path: String, p: Params = Params()): Unit =
+    compactWith(spark, path) { (live, rows, staged) =>
+      if (live == path + "/bands")
+        rows.select(col("doc"), col("band"), col("bucket"), col("shard"))
+          .withColumn("ingest", lit("base"))
+          .repartition(p.nShards, col("shard"))
+          .write.partitionBy("ingest", "shard").mode("overwrite").parquet(staged)
+      else
+        rows.select(col("doc"), col("sh"))
+          .withColumn("ingest", lit("base"))
+          .repartition(spark.sparkContext.defaultParallelism)
+          .write.partitionBy("ingest").mode("overwrite").parquet(staged)
     }
-    stageAndSwap(spark, path + "/shingles") { (src, staged) =>
-      cleaned(src.select(col("doc"), col("sh")))
-        .withColumn("ingest", lit("base"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.partitionBy("ingest").mode("overwrite").parquet(staged)
-    }
-    // remove ONLY the snapshot's files: a tombstone appended after the
-    // snapshot survives to the next compaction instead of being wiped
-    // unapplied (the delete-vs-compact race)
-    tsFiles.foreach { f =>
-      val (fs, hp) = StoreFs.fileSystem(spark, f)
-      fs.delete(hp, false)
-    }
-    // then clear the write-protocol debris (_SUCCESS etc.) and the dir
-    // itself NON-recursively — rmdir on a non-empty dir fails atomically,
-    // so a late tombstone file keeps the dir (and itself) alive
-    val (tfs, hDir) = StoreFs.fileSystem(spark, StoreFs.tombstoneDir(path))
-    if (tfs.exists(hDir)) {
-      tfs.listStatus(hDir).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isFile && (n.startsWith("_") || n.startsWith(".")))
-          tfs.delete(st.getPath, false)
-      }
-      try tfs.delete(hDir, false)
-      catch { case _: java.io.IOException => () } // non-empty: keep it
-    }
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
-
-  private def lockPath(path: String): String = path + "/_compact_lock"
-
-  /** Logical delete of documents from the store (the right-to-be-
-    * forgotten path): ids land in `_tombstones/` under the store root
-    * (hidden from every store scan by the `_` prefix), probes exclude
-    * them immediately ([[dedupAgainstStore]] — a deleted doc never
-    * acts as dedup evidence), and [[compact]] removes the rows from
-    * both surfaces physically and clears the tombstones. Same contract
-    * as `VectorStore.delete`: a single id column; ids not present are
-    * harmless; a tombstone wins over any later append of the same doc
-    * until compaction.
-    *
-    * Operational posture: the pending set rides every probe as a
-    * BROADCAST anti-join — the same bounded-set bet as the hot-key
-    * caches. Past ~10⁶ pending ids the broadcast (and its per-probe
-    * rebuild) stops being noise: that is the signal that [[compact]]
-    * is due, which applies the deletes physically and empties the
-    * set. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    require(ids.columns.length == 1,
-      s"delete expects a single id column, got ${ids.columns.mkString(",")}")
-    StoreFs.failIfLeased(spark, lockPath(path), "SignatureStore delete")
-    StoreFs.appendTombstones(spark, path, ids)
-  }
-
-  /** Reader contract for probes running CONCURRENTLY with [[compact]]:
-    * wrap the whole probe — building the read AND running the action —
-    * in this retry. The swap's no-live window is two directory renames
-    * (milliseconds), but a reader can catch it (PATH_NOT_FOUND), or
-    * hold a pre-swap file listing whose files disappear mid-scan
-    * (FileNotFoundException) — both transient, both retried with a
-    * session file-cache refresh of the store's two surfaces
-    * ([[StoreFs.retryingRead]]). Probe results are bit-identical
-    * before/after compaction, so WHICH side of the swap a retry lands
-    * on is invisible. After a compactor CRASH (not a race) the no-live
-    * state is permanent — run [[recover]] instead. */
-  def withReadRetry[T](spark: SparkSession, path: String,
-      attempts: Int = 6)(thunk: => T): T =
-    StoreFs.retryingRead(spark,
-      Seq(path + "/bands", path + "/shingles"), attempts)(thunk)
-
-  /** Test-only pause hook for [[stageAndSwap]]'s between-renames
-    * window: the concurrent-reader spec holds the swap open here (live
-    * dir absent) while a racing probe exercises [[withReadRetry]].
-    * Null latches = zero-cost no-op in production. */
-  private[graft] object SwapPause {
-    @volatile var entered: java.util.concurrent.CountDownLatch = null
-    @volatile var gate: java.util.concurrent.CountDownLatch = null
-    // second pause point: staged dir written, live not yet moved out —
-    // the delete-vs-compact race spec injects a post-snapshot tombstone
-    // here (it must survive the swap, not be wiped unapplied)
-    @volatile var enteredStage: java.util.concurrent.CountDownLatch = null
-    @volatile var gateStage: java.util.concurrent.CountDownLatch = null
-    def maybePause(): Unit = {
-      val e = entered
-      if (e != null) e.countDown()
-      val g = gate
-      if (g != null) g.await()
-    }
-    def maybePauseStaged(): Unit = {
-      val e = enteredStage
-      if (e != null) e.countDown()
-      val g = gateStage
-      if (g != null) g.await()
-    }
-    def reset(): Unit = {
-      entered = null; gate = null; enteredStage = null; gateStage = null
-    }
-  }
-
-  /** Test-only crash injection for [[stageAndSwap]] (0 = off) — the
-    * compaction crash-replay spec kills the swap at each window and
-    * asserts recovery converges to one committed layout. */
-  private[graft] object SwapCrash {
-    final val AfterStage = 1   // staged dir written, live untouched
-    final val AfterMoveOut = 2 // live moved to .trash, staged not yet live
-    final val AfterSwapIn = 3  // staged now live, .trash not yet deleted
-    @volatile var point: Int = 0
-    // which stageAndSwap invocation fires (1-based) — SignatureStore
-    // compaction swaps bands then shingles; 2 targets the shingles swap
-    @volatile var fireAtCall: Int = 1
-    private val calls = new java.util.concurrent.atomic.AtomicInteger(0)
-    final class Injected extends RuntimeException("injected swap crash")
-    private[sources] def begin(): Unit = calls.incrementAndGet()
-    def maybe(p: Int): Unit =
-      if (point == p && calls.get() == fireAtCall) throw new Injected
-    def reset(): Unit = { point = 0; fireAtCall = 1; calls.set(0) }
-  }
-
-  /** Read `live`, write its replacement to `<live>.compact` via
-    * `rewrite`, then swap the staged dir into place.
-    *
-    * The swap is TWO atomic renames (live → `.trash`, staged → live)
-    * with the delete deferred to last — there is no instant at which
-    * both copies are gone (the old single delete-then-rename had a
-    * window where a crash lost the live dir with nothing marking the
-    * staged dir as adoptable). Every crash window leaves a state
-    * [[recoverSwap]] resolves; it runs at entry, so re-running
-    * compaction after any crash self-heals first.
-    *
-    * `beforeTrashDelete` (optional) runs after the staged dir is live
-    * and before the trash delete — `VectorStore.compact` uses it to
-    * rescue tombstone files appended after its snapshot, which ride
-    * the old live dir into `.trash` (its tombstone dir lives INSIDE
-    * the swapped dir). A crash inside that window still loses them
-    * (recovery deletes the trash) — the lease makes that a
-    * crash-during-race residual, not a normal-operation loss. */
-  private[graft] def stageAndSwap(spark: SparkSession, live: String,
-      beforeTrashDelete: () => Unit = null)(
-      rewrite: (DataFrame, String) => Unit): Unit = {
-    val hLive = new org.apache.hadoop.fs.Path(live)
-    val fs = hLive.getFileSystem(spark.sessionState.newHadoopConf())
-    SwapCrash.begin()
-    recoverSwap(fs, live)
-    val staged = live + ".compact"
-    rewrite(spark.read.parquet(live), staged)
-    SwapCrash.maybe(SwapCrash.AfterStage)
-    SwapPause.maybePauseStaged()
-    val hStaged = new org.apache.hadoop.fs.Path(staged)
-    val hTrash = new org.apache.hadoop.fs.Path(live + ".trash")
-    require(fs.rename(hLive, hTrash),
-      s"compaction swap failed: move-out $live")
-    SwapCrash.maybe(SwapCrash.AfterMoveOut)
-    SwapPause.maybePause()
-    require(fs.rename(hStaged, hLive),
-      s"compaction swap failed: rename $staged -> $live")
-    if (beforeTrashDelete != null) beforeTrashDelete()
-    SwapCrash.maybe(SwapCrash.AfterSwapIn)
-    fs.delete(hTrash, true)
-  }
-
-  /** Complete or clean an interrupted [[stageAndSwap]]. Crash-window
-    * states and their resolution:
-    *  - live + `.compact`: crash during/after staging — the staged dir
-    *    is untrusted debris (its write may be partial); drop it.
-    *  - no live + `.compact`: crash between the renames — the staged
-    *    dir is COMPLETE (the move-out only runs after a successful
-    *    rewrite); adopt it as live.
-    *  - no live + no `.compact` + `.trash`: defensive — restore trash.
-    *  - live + `.trash`: crash before the final delete; drop trash.
-    * After this, exactly one committed layout exists at `live`. */
-  private[graft] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
-      live: String): Unit = {
-    val hLive = new org.apache.hadoop.fs.Path(live)
-    val hStaged = new org.apache.hadoop.fs.Path(live + ".compact")
-    val hTrash = new org.apache.hadoop.fs.Path(live + ".trash")
-    if (!fs.exists(hLive)) {
-      if (fs.exists(hStaged))
-        require(fs.rename(hStaged, hLive),
-          s"swap recovery failed: adopt ${live}.compact")
-      else if (fs.exists(hTrash))
-        require(fs.rename(hTrash, hLive),
-          s"swap recovery failed: restore ${live}.trash")
-    } else if (fs.exists(hStaged)) {
-      fs.delete(hStaged, true)
-    }
-    if (fs.exists(hLive)) fs.delete(hTrash, true)
-  }
-
-  /** Recover an interrupted [[compact]] without compacting again:
-    * completes or cleans any half-finished stage-then-swap on both
-    * store surfaces, and clears the crashed compactor's writer lease
-    * so appends/deletes stop failing fast. Safe whenever compaction is
-    * not running — readers hitting a missing live dir after a crash
-    * call this first. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    Seq(path + "/bands", path + "/shingles").foreach { live =>
-      val h = new org.apache.hadoop.fs.Path(live)
-      recoverSwap(h.getFileSystem(conf), live)
-    }
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
 }

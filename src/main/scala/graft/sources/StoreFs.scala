@@ -2,23 +2,62 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
 
-/** Hadoop-`FileSystem` path operations shared by the crash-resumable
-  * stores ([[SignatureStore]], `Packing`'s streaming state): every
-  * store directory is named by a URI-capable string, so probing and
-  * pruning must go through the Hadoop API — `java.io.File` silently
-  * works only on the local filesystem and would strand these paths on
-  * `hdfs://`/`s3a://`, the deployment target at 100 TB. (The
-  * compaction swap already did this; these helpers extend the same
-  * discipline to existence probes, listings and retention deletes.) */
+/** The persisted stores' file layer and their ONE maintenance
+  * protocol, which the seven stores share through [[MaintainedStore]].
+  * Store directories are URI-capable strings, so every probe, listing
+  * and rename goes through the Hadoop `FileSystem` API (`java.io.File`
+  * works only on the local file system and would strand `hdfs://` /
+  * `s3a://` paths).
+  *
+  * The maintenance contract:
+  *  - Delete: ids land in `<path>/_tombstones/` (hidden from store
+  *    scans by the `_` prefix). Probes mask them at once with a
+  *    broadcast `left_anti` join; compaction applies them physically.
+  *    A tombstone wins over a later append of the same id until then.
+  *    Past ~10⁶ pending ids the broadcast stops being noise: that is
+  *    the signal that compaction is due.
+  *  - Lease: compact() holds a lock file for its whole run, acquired
+  *    atomically (`create(overwrite=false)`), so a second compact() is
+  *    refused. Every writer probes it first and fails fast. This is a
+  *    fail-fast guard, not a lock manager: the probe-then-write window
+  *    stays open (check-then-create on the local FS). It closes the
+  *    operationally likely race, a scheduled ingest overlapping a
+  *    scheduled compaction by minutes.
+  *  - Snapshot: compact() lists the tombstone files at entry and
+  *    applies exactly those. A delete racing past the lease probe
+  *    appends a new file, which stays in force until the next
+  *    compaction; only the snapshot's files are removed at exit.
+  *  - Swap: each surface is rewritten to `<live>.compact`, then two
+  *    renames (live → `<live>.trash`, staged → live) and the trash
+  *    delete last, so no instant loses both copies. Crash windows:
+  *    after the stage (staged is debris: dropped), after the move-out
+  *    (staged is complete: adopted), after the swap-in (trash
+  *    dropped). [[recoverSwap]] resolves each, and runs at every
+  *    swap's entry.
+  *  - Rescue: where the tombstone dir lives inside the swapped dir, a
+  *    late tombstone file rides the old live dir into `.trash`; it is
+  *    moved back into the new live dir before the trash is deleted. A
+  *    crash inside that window still loses it (a crash-during-race
+  *    residual).
+  *  - Reader retry: a probe racing a swap can see no live dir or a
+  *    stale file listing. [[retryingRead]] refreshes and retries; the
+  *    compacted layout gives bit-identical probe results.
+  *  - Recover: a compactor crash leaves the lease held and a swap half
+  *    done. recover() repairs every surface's swap and clears the
+  *    lease; it is the one gate back to writing and compacting. */
 private[graft] object StoreFs {
 
   def fileSystem(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
+
+  /** Spark's hidden-path rule: `_`/`.`-prefixed names are not data. */
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
 
   /** The first COMMITTED data file under `dir`, or None when there is
     * none (Spark hides `_`/`.`-prefixed paths, so a crashed write's
@@ -31,8 +70,7 @@ private[graft] object StoreFs {
     // Spark's visibility rule: `_`/`.`-prefixed names are hidden UNLESS
     // they contain `=` — a partition directory like `__batch_id=0` is
     // data, `_temporary`/`_SUCCESS` are not
-    def visible(n: String): Boolean =
-      !(n.startsWith("_") || n.startsWith(".")) || n.contains("=")
+    def visible(n: String): Boolean = !hidden(n) || n.contains("=")
     def walk(path: Path): Option[FileStatus] =
       fs.listStatus(path).iterator
         .filter(st => visible(st.getPath.getName))
@@ -123,52 +161,58 @@ private[graft] object StoreFs {
     ()
   }
 
-  /** Absolute paths of `dir`'s immediate COMMITTED data files (visible
-    * per the `_`/`.` rule), empty when absent — the snapshot primitive
-    * for compact()'s apply-then-delete of the tombstone dir: reading
-    * and deleting an explicit file list means a tombstone file appended
-    * AFTER the snapshot survives untouched to the next compaction
-    * instead of being applied-never/deleted-anyway. */
-  def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
+  /** Stable per-stream ingest key: the streaming checkpoint IS the
+    * batch-id namespace, so two streams' batch 0 never share an
+    * `ingest=` partition, and a restart (same checkpoint) replays onto
+    * its own partitions. */
+  def streamKey(checkpoint: String): String =
+    Integer.toHexString(checkpoint.hashCode)
+
+  /** Absolute paths of `dir`'s immediate committed data files (the
+    * `_`/`.` rule), empty when absent: the tombstone snapshot. */
+  private def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
     val (fs, p) = fileSystem(spark, dir)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
-      .filter(st => st.isFile && {
-        val n = st.getPath.getName
-        !(n.startsWith("_") || n.startsWith("."))
-      })
+      .filter(st => st.isFile && !hidden(st.getPath.getName))
       .map(_.getPath.toString)
   }
 
-  // --- writer-vs-compact exclusion lease -------------------------------
-  //
-  // compact() owns the store while it runs: it collapses/renames the
-  // very directories a racing append/ingest-batch/delete would write
-  // into (a write landing in the no-live window even recreates the live
-  // path and breaks the swap's rename). Readers got a retry contract;
-  // writers get FAIL-FAST: compact writes an epoch lock file at entry
-  // and removes it at exit, and every writer probes it first, throwing
-  // a clear error instead of corrupting the swap. This is a fail-fast
-  // guard, not a distributed lock manager — the probe-then-write window
-  // is not closed (HDFS create(overwrite=false) is atomic; the local FS
-  // one is check-then-create), which is the documented posture: the
-  // race it closes is the operationally likely one (a scheduled ingest
-  // overlapping a scheduled compaction by minutes, not microseconds).
-  // A compactor CRASH leaves the lock in place — writers keep failing
-  // with a message naming `recover()`, which clears it; `recover()` is
-  // also the gate back to compacting after a crash (a fresh compact()
-  // REFUSES a held lease rather than silently re-acquiring — the old
-  // overwrite-acquire let two concurrent compact() calls both "own" the
-  // store, and the second's release unlocked writers mid-swap of the
-  // first).
+  /** The pending tombstones at compaction entry: the snapshot's file
+    * paths and their ids (None when no delete is pending). */
+  private[sources] def tombstoneSnapshot(spark: SparkSession,
+      path: String): (Seq[String], Option[DataFrame]) = {
+    val files = listDataFiles(spark, tombstoneDir(path))
+    (files, if (files.isEmpty) None
+      else Some(spark.read.parquet(files: _*).distinct()))
+  }
 
-  /** Acquire the compactor lease ATOMICALLY (`create(overwrite=false)`
-    * — atomic on HDFS; check-then-create on the local FS, the same
-    * documented posture as the writer probe). A lease already present
-    * means either a LIVE concurrent compact() or a crashed one — both
-    * demand the operator's decision, so this throws instead of taking
-    * over: wait for the live compactor, or run recover() after a
-    * crash. */
+  /** Remove exactly the snapshot's tombstone files once every swap has
+    * committed, then the write debris (`_SUCCESS`, `.crc`) and the dir
+    * itself by a NON-recursive delete, which fails atomically on a dir
+    * a late tombstone keeps non-empty. A no-op where the tombstone dir
+    * rode the old live dir into the trash. */
+  private[sources] def clearTombstones(spark: SparkSession, path: String,
+      snapshot: Seq[String]): Unit = {
+    snapshot.foreach { f =>
+      val (fs, hp) = fileSystem(spark, f)
+      fs.delete(hp, false)
+    }
+    val (fs, dir) = fileSystem(spark, tombstoneDir(path))
+    if (fs.exists(dir)) {
+      fs.listStatus(dir).foreach { st =>
+        if (st.isFile && hidden(st.getPath.getName)) fs.delete(st.getPath, false)
+      }
+      try fs.delete(dir, false)
+      catch { case _: java.io.IOException => () } // non-empty: keep it
+    }
+  }
+
+  // --- the compactor lease ----------------------------------------------
+
+  /** Acquire the compactor lease atomically. A lease already present is
+    * a live concurrent compact() or a crashed one; both need the
+    * operator (wait, or run recover()), so this throws. */
   def acquireLease(spark: SparkSession, lockPath: String): Unit = {
     val (fs, p) = fileSystem(spark, lockPath)
     val out =
@@ -205,25 +249,84 @@ private[graft] object StoreFs {
           "compactor crashed (a crash leaves the lease in place)")
   }
 
-  /** The `beforeTrashDelete` hook body shared by the single-directory
-    * stores (`VectorStore`, `MediaDedupStore`), whose `_tombstones/`
-    * dir lives INSIDE the swapped store dir and therefore rides the old
-    * live dir into `<path>.trash`: move any tombstone file NOT in the
-    * compaction's entry snapshot (`snapNames`) back into the new live
-    * dir's `_tombstones/`, so a delete that raced past the lease's
-    * probe-then-write window stays in force until the next compaction
-    * instead of being discarded with the trash. */
-  def rescueLateTombstones(spark: SparkSession, path: String,
+  // --- the swap -----------------------------------------------------------
+
+  /** Test-only pause hooks inside [[stageAndSwap]] (null latches: a
+    * no-op). `entered`/`gate` hold the between-renames window (no live
+    * dir) open for a racing reader; `enteredStage`/`gateStage` hold the
+    * staged-but-not-moved-out point, where a late tombstone is
+    * injected. */
+  private[graft] object SwapPause {
+    @volatile var entered: java.util.concurrent.CountDownLatch = null
+    @volatile var gate: java.util.concurrent.CountDownLatch = null
+    @volatile var enteredStage: java.util.concurrent.CountDownLatch = null
+    @volatile var gateStage: java.util.concurrent.CountDownLatch = null
+    private def pause(e: java.util.concurrent.CountDownLatch,
+        g: java.util.concurrent.CountDownLatch): Unit = {
+      if (e != null) e.countDown()
+      if (g != null) g.await()
+    }
+    def maybePause(): Unit = pause(entered, gate)
+    def maybePauseStaged(): Unit = pause(enteredStage, gateStage)
+    def reset(): Unit = {
+      entered = null; gate = null; enteredStage = null; gateStage = null
+    }
+  }
+
+  /** Test-only crash injection at one of [[stageAndSwap]]'s three
+    * windows (0 = off), on its `fireAtCall`-th invocation (1-based:
+    * `SignatureStore` swaps bands, then shingles). */
+  private[graft] object SwapCrash {
+    final val AfterStage = 1   // staged dir written, live untouched
+    final val AfterMoveOut = 2 // live moved to .trash, staged not yet live
+    final val AfterSwapIn = 3  // staged now live, .trash not yet deleted
+    @volatile var point: Int = 0
+    @volatile var fireAtCall: Int = 1
+    private val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    final class Injected extends RuntimeException("injected swap crash")
+    private[sources] def begin(): Unit = calls.incrementAndGet()
+    def maybe(p: Int): Unit =
+      if (point == p && calls.get() == fireAtCall) throw new Injected
+    def reset(): Unit = { point = 0; fireAtCall = 1; calls.set(0) }
+  }
+
+  /** Rewrite `live` into `<live>.compact` via `rewrite(liveFrame,
+    * staged)`, then swap it in: live → `.trash`, staged → live, rescue
+    * late tombstones out of the trash, delete the trash. */
+  private[sources] def stageAndSwap(spark: SparkSession, live: String,
+      snapNames: Set[String])(rewrite: (DataFrame, String) => Unit): Unit = {
+    val (fs, hLive) = fileSystem(spark, live)
+    SwapCrash.begin()
+    recoverSwap(spark, live)
+    val staged = live + ".compact"
+    rewrite(spark.read.parquet(live), staged)
+    SwapCrash.maybe(SwapCrash.AfterStage)
+    SwapPause.maybePauseStaged()
+    val hTrash = new Path(live + ".trash")
+    require(fs.rename(hLive, hTrash),
+      s"compaction swap failed: move-out $live")
+    SwapCrash.maybe(SwapCrash.AfterMoveOut)
+    SwapPause.maybePause()
+    require(fs.rename(new Path(staged), hLive),
+      s"compaction swap failed: rename $staged -> $live")
+    rescueLateTombstones(fs, live, snapNames)
+    SwapCrash.maybe(SwapCrash.AfterSwapIn)
+    fs.delete(hTrash, true)
+  }
+
+  /** Move every tombstone file under `<live>.trash` that is not in the
+    * compaction's snapshot back into the new live dir, so a delete that
+    * raced past the lease probe stays in force. */
+  private def rescueLateTombstones(fs: FileSystem, live: String,
       snapNames: Set[String]): Unit = {
-    val (fs, trashTs) = fileSystem(spark, path + ".trash/_tombstones")
+    val trashTs = new Path(tombstoneDir(live + ".trash"))
     if (fs.exists(trashTs)) {
       val late = fs.listStatus(trashTs).filter { st =>
         val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-          !snapNames.contains(n)
+        st.isFile && !hidden(n) && !snapNames.contains(n)
       }
       if (late.nonEmpty) {
-        val liveTs = new Path(path + "/_tombstones")
+        val liveTs = new Path(tombstoneDir(live))
         fs.mkdirs(liveTs)
         late.foreach { st =>
           require(fs.rename(st.getPath,
@@ -234,27 +337,39 @@ private[graft] object StoreFs {
     }
   }
 
-  /** Run a store probe with retry-on-recoverable-read — the reader's
-    * half of the compaction contract. A probe racing a concurrent
-    * `compact()` can observe two transient states: (a) the between-
-    * renames window where no live dir exists (reads throw
-    * PATH_NOT_FOUND), and (b) a file listing captured BEFORE the swap
-    * whose files were renamed away before the scan opened them
-    * (FileNotFoundException mid-job; Spark's session file-status cache
-    * can also serve the stale listing to a fresh read). Both are
-    * transient — the swap itself is two directory renames — so the
-    * resolution is: refresh the session's cached listings for
-    * `refreshPaths`, back off briefly, and re-run the probe from plan
-    * construction. `thunk` must therefore BUILD the read and run the
-    * action (not reuse a pre-built DataFrame, whose file index is the
-    * stale state being retried away). Non-recoverable errors and
-    * exhausted attempts propagate unchanged. NOT a substitute for
-    * `recover()` after a compactor CRASH — a dead compactor leaves the
-    * no-live state permanently and retries here will exhaust; crash
-    * recovery stays an explicit owner-side operation because running it
-    * mid-swap would fight a live compactor for the same renames. */
-  def retryingRead[T](spark: SparkSession, refreshPaths: Seq[String],
-      attempts: Int = 6)(thunk: => T): T = {
+  /** Complete or clean an interrupted [[stageAndSwap]]:
+    *  - live + `.compact`: the staged write may be partial; drop it.
+    *  - no live + `.compact`: the move-out only follows a complete
+    *    rewrite; adopt the staged dir.
+    *  - no live + no `.compact` + `.trash`: defensive; restore trash.
+    *  - live + `.trash`: crash before the final delete; drop trash.
+    * After this, exactly one committed layout exists at `live`. */
+  private[sources] def recoverSwap(spark: SparkSession, live: String): Unit = {
+    val (fs, hLive) = fileSystem(spark, live)
+    val hStaged = new Path(live + ".compact")
+    val hTrash = new Path(live + ".trash")
+    if (!fs.exists(hLive)) {
+      if (fs.exists(hStaged))
+        require(fs.rename(hStaged, hLive),
+          s"swap recovery failed: adopt ${live}.compact")
+      else if (fs.exists(hTrash))
+        require(fs.rename(hTrash, hLive),
+          s"swap recovery failed: restore ${live}.trash")
+    } else if (fs.exists(hStaged)) {
+      fs.delete(hStaged, true)
+    }
+    if (fs.exists(hLive)) fs.delete(hTrash, true)
+  }
+
+  /** Run `thunk` (it must BUILD the read and run the action: a pre-built
+    * DataFrame's file index is the stale state being retried away),
+    * retrying a recoverable read error after refreshing the session's
+    * cached listings of `refreshPaths` and backing off. Non-recoverable
+    * errors and exhausted attempts propagate unchanged. After a
+    * compactor CRASH the no-live state is permanent and the retries
+    * exhaust: run recover() instead. */
+  private[sources] def retryingRead[T](spark: SparkSession,
+      refreshPaths: Seq[String], attempts: Int)(thunk: => T): T = {
     def recoverable(t: Throwable): Boolean = {
       val chain = Iterator.iterate(t)(_.getCause)
         .takeWhile(_ != null).take(10).toSeq
@@ -278,5 +393,80 @@ private[graft] object StoreFs {
           loop(attempt + 1)
       }
     loop(1)
+  }
+}
+
+/** One store's share of the [[StoreFs]] maintenance protocol. A store
+  * object supplies its name, lease path, swapped surfaces and id rule;
+  * it gets delete, the reader retry, recover and the compaction frame. */
+private[graft] trait MaintainedStore {
+
+  /** The store's name in error messages. */
+  protected def storeName: String
+
+  /** The compactor lease of the store at `path`: a sibling, because the
+    * swap renames the store dir itself. */
+  private[graft] def lockPath(path: String): String = path + ".compact_lock"
+
+  /** The directories compact() swaps. */
+  protected def surfaces(path: String): Seq[String] = Seq(path)
+
+  /** The store column a tombstone masks at compaction; None keeps the
+    * tombstone's own column name. */
+  protected def idColumn: Option[String] = None
+
+  /** The tombstone rows a delete of `ids` (one column) appends. */
+  protected def tombstoneIds(spark: SparkSession, path: String,
+      ids: DataFrame): DataFrame = ids
+
+  /** Logical delete (right to be forgotten): `ids` (one column) are
+    * masked from every probe at once, applied physically by compact(),
+    * and win over a later append of the same id until then. Ids not in
+    * the store are harmless. Fails fast while compact() holds the
+    * lease. */
+  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
+    require(ids.columns.length == 1,
+      s"delete expects a single id column, got ${ids.columns.mkString(",")}")
+    StoreFs.failIfLeased(spark, lockPath(path), s"$storeName delete")
+    StoreFs.appendTombstones(spark, path, tombstoneIds(spark, path, ids))
+  }
+
+  /** Run a probe racing compact(): wrap plan construction AND the
+    * action, so the swap's transient windows retry
+    * ([[StoreFs.retryingRead]]). */
+  def withReadRetry[T](spark: SparkSession, path: String,
+      attempts: Int = 6)(thunk: => T): T =
+    StoreFs.retryingRead(spark, surfaces(path), attempts)(thunk)
+
+  /** Recover an interrupted compact() without compacting again: repair
+    * every surface's swap and clear the crashed compactor's lease. */
+  def recover(spark: SparkSession, path: String): Unit = {
+    surfaces(path).foreach(StoreFs.recoverSwap(spark, _))
+    StoreFs.releaseLease(spark, lockPath(path))
+  }
+
+  /** The compaction frame: take the lease, snapshot the tombstones, and
+    * stage-and-swap every surface through `rewrite(surface, rows,
+    * staged)`, where `rows` is the live surface minus the snapshot's
+    * ids; then clear the snapshot and release the lease. */
+  protected def compactWith(spark: SparkSession, path: String)(
+      rewrite: (String, DataFrame, String) => Unit): Unit = {
+    StoreFs.acquireLease(spark, lockPath(path))
+    val (snapshot, dead) = StoreFs.tombstoneSnapshot(spark, path)
+    val snapNames = snapshot.map(f => new Path(f).getName).toSet
+    surfaces(path).foreach { live =>
+      StoreFs.stageAndSwap(spark, live, snapNames) { (src, staged) =>
+        val rows = dead.fold(src) { t =>
+          val c = idColumn.getOrElse(t.columns.head)
+          require(src.columns.contains(c),
+            s"tombstone column '$c' not in store schema " +
+              s"${src.columns.mkString(",")}")
+          src.join(broadcast(t.toDF(c)), Seq(c), "left_anti")
+        }
+        rewrite(live, rows, staged)
+      }
+    }
+    StoreFs.clearTombstones(spark, path, snapshot)
+    StoreFs.releaseLease(spark, lockPath(path))
   }
 }

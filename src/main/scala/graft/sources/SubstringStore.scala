@@ -34,20 +34,20 @@ import graft.operators.Dedup
   * Crash-replay idempotence is the SignatureStore contract verbatim:
   * both sinks write under the batch's own `ingest=b<id>_<ckpt-hash>`
   * partition with dynamic overwrite, and the scoring decision EXCLUDES
-  * that partition from the store it reads. Full maintenance contract
-  * from birth (the r15 rule): [[compact]] (stage-then-swap, sibling
-  * lease), [[delete]] (tombstones by gram digest — known boilerplate
-  * stops counting immediately), [[withReadRetry]], [[recover]].
+  * that partition from the store it reads. Maintenance is the
+  * [[StoreFs]] protocol. Deletes are by gram digest (single column
+  * `h`, the md5 hex of the char k-gram): known boilerplate stops
+  * counting at once.
   */
-object SubstringStore {
+object SubstringStore extends MaintainedStore {
+
+  protected def storeName = "SubstringStore"
+  override protected def idColumn = Some("h")
 
   /** `k`/`nShards` MUST match between ingests of one store. */
   final case class Params(k: Int = 32, nShards: Int = 32)
 
-  private def lockPath(path: String): String = path + ".compact_lock"
   private def shardOf(h: Column, n: Int): Column = pmod(hash(h), lit(n))
-  private def streamKey(checkpoint: String): String =
-    Integer.toHexString(checkpoint.hashCode)
 
   /** This batch's (doc, h) gram-digest stream: DISTINCT char k-grams
     * per doc (the q87 span semantics), md5-digested. Docs shorter than
@@ -155,7 +155,7 @@ object SubstringStore {
       p: Params = Params())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(p.k >= 1, s"gram length must be >= 1: ${p.k}")
-    val key = streamKey(checkpoint)
+    val key = StoreFs.streamKey(checkpoint)
     stream.writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
@@ -166,66 +166,29 @@ object SubstringStore {
       .start()
   }
 
-  /** Logical delete of gram digests (single column named `h` — md5 hex
-    * of the char k-gram, e.g. known boilerplate): masked from every
-    * probe immediately, applied physically and cleared by [[compact]];
-    * wins over later appends of the same digest until then. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    require(ids.columns.length == 1,
-      s"delete expects a single id column, got ${ids.columns.mkString(",")}")
-    // enforce the documented contract on EVERY delete (not just
-    // consistency with whatever the first delete happened to use):
-    // tombstones() masks probes via toDF("h"), so a misnamed column
-    // would silently lock the store into an undocumented name
+  /** The id rule: every delete must name its column `h`, not just
+    * match the first delete's name, so a misnamed column cannot lock
+    * the store into an undocumented name. */
+  override protected def tombstoneIds(spark: SparkSession, path: String,
+      ids: DataFrame): DataFrame = {
     require(ids.columns.head == "h",
       s"delete expects the gram-digest column to be named 'h' " +
         s"(md5 hex of the char k-gram), got '${ids.columns.head}'")
-    StoreFs.failIfLeased(spark, lockPath(path), "SubstringStore delete")
-    ids.distinct().write.mode("append").parquet(StoreFs.tombstoneDir(path))
+    ids
   }
 
-  /** Compact: fold every per-batch `ingest=` partition into
-    * `ingest=base` with ONE row per surviving digest — counts are
-    * additive, so probe results are identical by construction
-    * (spec-asserted). Stage-then-swap with the sibling lease,
-    * tombstones snapshotted at entry and applied physically, late
-    * tombstones rescued out of `.trash`. */
+  /** Compact ([[MaintainedStore.compactWith]]): fold every per-batch
+    * `ingest=` partition into `ingest=base` with ONE row per surviving
+    * digest. Counts are additive, so probe results are identical by
+    * construction (spec-asserted). */
   def compact(spark: SparkSession, path: String,
-      p: Params = Params()): Unit = {
-    StoreFs.acquireLease(spark, lockPath(path))
-    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
-    val snapNames =
-      tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-    val dead =
-      if (tsFiles.isEmpty) None
-      else Some(spark.read.parquet(tsFiles: _*).distinct())
-    SignatureStore.stageAndSwap(spark, path,
-      () => StoreFs.rescueLateTombstones(spark, path, snapNames)) {
-      (src, staged) =>
-        val cleaned = dead.fold(src)(t =>
-          src.join(broadcast(t.toDF("h")), Seq("h"), "left_anti"))
-        cleaned.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
-          .withColumn("shard", shardOf(col("h"), p.nShards))
-          .withColumn("ingest", lit("base"))
-          .repartition(p.nShards, col("shard"))
-          .write.partitionBy("ingest", "shard").mode("overwrite")
-          .parquet(staged)
+      p: Params = Params()): Unit =
+    compactWith(spark, path) { (_, rows, staged) =>
+      rows.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
+        .withColumn("shard", shardOf(col("h"), p.nShards))
+        .withColumn("ingest", lit("base"))
+        .repartition(p.nShards, col("shard"))
+        .write.partitionBy("ingest", "shard").mode("overwrite")
+        .parquet(staged)
     }
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
-
-  /** Reader retry through a concurrent [[compact]]'s swap windows —
-    * build the probe AND run the action inside the thunk. */
-  def withReadRetry[T](spark: SparkSession, path: String,
-      attempts: Int = 6)(thunk: => T): T =
-    StoreFs.retryingRead(spark, Seq(path), attempts)(thunk)
-
-  /** Recover an interrupted [[compact]]: repair the swap, clear the
-    * crashed compactor's lease. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val h = new org.apache.hadoop.fs.Path(path)
-    SignatureStore.recoverSwap(
-      h.getFileSystem(spark.sessionState.newHadoopConf()), path)
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
 }

@@ -51,11 +51,10 @@ import graft.operators.Vamana
   * broadcast through the task closure behind `maxProbes` — at 100 TB
   * the shard count scales with the corpus while the probe batch stays
   * workload-sized; a larger workload chunks into several calls. */
-object VamanaStore {
+object VamanaStore extends MaintainedStore {
 
-  private def lockPath(path: String): String = path + ".compact_lock"
-  private def streamKey(checkpoint: String): String =
-    Integer.toHexString(checkpoint.hashCode)
+  protected def storeName = "VamanaStore"
+  override protected def idColumn = Some("id")
   private def shardOf(id: Column, n: Int): Column =
     pmod(id, lit(n.toLong)).cast("int")
 
@@ -171,7 +170,7 @@ object VamanaStore {
   def ingest(stream: DataFrame, idCol: String, vecCol: String,
       path: String, checkpoint: String, p: Vamana.Params)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val key = streamKey(checkpoint)
+    val key = StoreFs.streamKey(checkpoint)
     stream.writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
@@ -269,83 +268,46 @@ object VamanaStore {
       .drop("__probe")
   }
 
-  /** Logical delete by id (single column): masked from every search
-    * result immediately, removed physically (graph rebuilt) by
-    * [[compact]]; wins over later re-appends of the same id until
-    * then — the shared re-insert contract. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    require(ids.columns.length == 1,
-      s"delete expects a single id column, got ${ids.columns.mkString(",")}")
-    StoreFs.failIfLeased(spark, lockPath(path), "VamanaStore delete")
-    ids.select(col(ids.columns.head).cast("long").as("id")).distinct()
-      .write.mode("append").parquet(StoreFs.tombstoneDir(path))
-  }
+  /** The id rule: a delete's ids (any name) are cast to the store's
+    * long `id` column. A tombstoned id is masked from every search
+    * result at once and removed from the graph by [[compact]]. */
+  override protected def tombstoneIds(spark: SparkSession, path: String,
+      ids: DataFrame): DataFrame =
+    ids.select(col(ids.columns.head).cast("long").as("id"))
 
-  /** Compact: rebuild every shard with the canonical batch
-    * [[Vamana.buildShard]] over the surviving (non-tombstoned) latest
-    * vectors, folded into `ingest=base` at seq = -1 — bit-identical
-    * to `Vamana.build` over the survivors (spec-asserted), restoring
-    * the canonical graph and the R degree bound. Stage-then-swap with
-    * the sibling lease; tombstones snapshotted at entry, applied
-    * physically, late tombstones rescued out of `.trash`. */
+  /** Compact ([[MaintainedStore.compactWith]]): rebuild every shard
+    * with the canonical batch [[Vamana.buildShard]] over the surviving
+    * latest vectors, folded into `ingest=base` at seq = -1.
+    * Bit-identical to `Vamana.build` over the survivors
+    * (spec-asserted), restoring the canonical graph and the R degree
+    * bound. */
   def compact(spark: SparkSession, path: String,
       p: Vamana.Params): Unit = {
     import spark.implicits._
-    StoreFs.acquireLease(spark, lockPath(path))
-    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
-    val snapNames =
-      tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-    val dead =
-      if (tsFiles.isEmpty) None
-      else Some(spark.read.parquet(tsFiles: _*).distinct())
-    SignatureStore.stageAndSwap(spark, path,
-      () => StoreFs.rescueLateTombstones(spark, path, snapNames)) {
-      (src, staged) =>
-        val latest = src
-          .groupBy(col("shard"), col("id"))
-          .agg(max_by(col("vec6"), col("seq")).as("vec6"))
-        val alive = dead.fold(latest)(t =>
-          latest.join(broadcast(t.toDF("id")), Seq("id"), "left_anti"))
-        alive
-          // a using-column join moves `id` first — re-fix the order
-          // before the positional tuple encoder binds
-          .select(col("shard"), col("id"), col("vec6"))
-          .as[(Int, Long, Seq[Long])]
-          .repartition(p.nShards, col("shard"))
-          .mapPartitions { it =>
-            val byShard = it.toArray.groupBy(_._1)
-            byShard.iterator.flatMap { case (shard, members) =>
-              val sorted = members.sortBy(_._2)
-              val ids = sorted.map(_._2)
-              val vecs = sorted.map(_._3.toArray)
-              val (medoid, adj) = Vamana.buildShard(vecs, p)
-              ids.indices.iterator.map { i =>
-                (shard, ids(i), vecs(i).toSeq, adj(i).map(ids(_)).toSeq,
-                  i == medoid, -1L)
-              }
+    compactWith(spark, path) { (_, rows, staged) =>
+      rows
+        .groupBy(col("shard"), col("id"))
+        .agg(max_by(col("vec6"), col("seq")).as("vec6"))
+        .as[(Int, Long, Seq[Long])]
+        .repartition(p.nShards, col("shard"))
+        .mapPartitions { it =>
+          val byShard = it.toArray.groupBy(_._1)
+          byShard.iterator.flatMap { case (shard, members) =>
+            val sorted = members.sortBy(_._2)
+            val ids = sorted.map(_._2)
+            val vecs = sorted.map(_._3.toArray)
+            val (medoid, adj) = Vamana.buildShard(vecs, p)
+            ids.indices.iterator.map { i =>
+              (shard, ids(i), vecs(i).toSeq, adj(i).map(ids(_)).toSeq,
+                i == medoid, -1L)
             }
           }
-          .toDF("shard", "id", "vec6", "nbrs", "medoid", "seq")
-          .withColumn("ingest", lit("base"))
-          .repartition(p.nShards, col("shard"))
-          .write.partitionBy("ingest", "shard").mode("overwrite")
-          .parquet(staged)
+        }
+        .toDF("shard", "id", "vec6", "nbrs", "medoid", "seq")
+        .withColumn("ingest", lit("base"))
+        .repartition(p.nShards, col("shard"))
+        .write.partitionBy("ingest", "shard").mode("overwrite")
+        .parquet(staged)
     }
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
-
-  /** Reader retry through a concurrent [[compact]]'s swap windows —
-    * build the probe AND run the action inside the thunk. */
-  def withReadRetry[T](spark: SparkSession, path: String,
-      attempts: Int = 6)(thunk: => T): T =
-    StoreFs.retryingRead(spark, Seq(path), attempts)(thunk)
-
-  /** Recover an interrupted [[compact]]: repair the swap, clear the
-    * crashed compactor's lease. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val h = new org.apache.hadoop.fs.Path(path)
-    SignatureStore.recoverSwap(
-      h.getFileSystem(spark.sessionState.newHadoopConf()), path)
-    StoreFs.releaseLease(spark, lockPath(path))
   }
 }

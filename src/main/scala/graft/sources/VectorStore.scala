@@ -20,7 +20,9 @@ import graft.functions.VectorOps
   * behavior is identical; the store only changes WHERE the candidate
   * set lives (directory layout vs a shuffled join side).
   */
-object VectorStore {
+object VectorStore extends MaintainedStore {
+
+  protected def storeName = "VectorStore"
 
   /** Bucket id: the `nBits`-bit hyperplane signature packed MSB-first
     * into an int (0 .. 2^nBits-1). One kernel pass per row — the
@@ -77,36 +79,22 @@ object VectorStore {
       }
       .start()
 
-  // --- deletes (tombstones) --------------------------------------------
+  // --- deletes (the StoreFs protocol) ---------------------------------
 
-  /** Logical delete: append the ids to `_tombstones/` under the store
-    * root — the `_` prefix hides them from every parquet scan of the
-    * store itself, the same visibility rule the write path's
-    * `_temporary` debris relies on. Probes ([[topK]],
-    * [[topKQuantizedApprox]]/[[topKQuantized]]) anti-join the
-    * (bounded, broadcast) tombstone set, so a delete is visible
-    * immediately without touching any data file — the
-    * right-to-be-forgotten shape at 100 TB, where rewriting a bucket
-    * per delete is not an option. [[compact]] applies tombstones
-    * PHYSICALLY (the rewrite drops the rows and the swap discards the
-    * tombstone dir with the old layout), which is also the reset that
-    * allows re-inserting a previously deleted id: until then a
-    * tombstone wins over any later [[append]] of the same id.
-    * `ids` must be a single column carrying the store's id column
-    * name (the natural shape — probe outputs feed deletes). Ids not
-    * present in the store are harmless.
-    *
-    * Operational posture: the pending set rides every probe as a
-    * BROADCAST anti-join — the same bounded-set bet as the hot-key
-    * caches. Past ~10⁶ pending ids the broadcast (and its per-probe
-    * rebuild) stops being noise: that is the signal that [[compact]]
-    * is due, which applies the deletes physically and empties the
-    * set. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    require(ids.columns.length == 1,
-      s"delete expects a single id column, got ${ids.columns.mkString(",")}")
-    StoreFs.failIfLeased(spark, lockPath(path), "VectorStore delete")
-    StoreFs.appendTombstones(spark, path, ids)
+  /** The id rule: a delete names the id column itself (probe outputs
+    * feed deletes), and probes rename the tombstone column to theirs,
+    * so a column the store lacks would pass every probe and fail
+    * compaction. The store schema comes from one footer on the driver:
+    * no job fires. */
+  override protected def tombstoneIds(spark: SparkSession, path: String,
+      ids: DataFrame): DataFrame = {
+    val c = ids.columns.head
+    StoreFs.readCommitted(spark, path).foreach { store =>
+      require(store.columns.contains(c),
+        s"delete id column '$c' not in store schema " +
+          store.columns.mkString(","))
+    }
+    ids
   }
 
   /** Filter `df` to rows not logically deleted. The tombstone frame's
@@ -118,86 +106,22 @@ object VectorStore {
       df.join(broadcast(t.toDF(idCol)), Seq(idCol), "left_anti")
     }
 
-  /** Compact the store in place: rewrite every bucket directory to ONE
-    * file (all rows of a bucket hash to the same task under
-    * `repartition(n, bucket)`, and each task writes one file per
-    * partition directory it holds). A daily [[appendStream]] accretes
-    * one file per (batch, bucket); probe scans degrade linearly with
-    * file count even when partition pruning works — compaction restores
-    * the bulk-build layout with BIT-IDENTICAL probe results (same rows,
-    * same schema; spec-asserted). Works unchanged on the quantized
-    * store: every non-partition column is passed through untouched.
-    * Stage-then-swap via the Hadoop FileSystem (local FS and HDFS
-    * alike). WRITERS are excluded for the duration by the sibling
-    * `<path>.compact_lock` lease (outside the store dir — the store
-    * dir itself is what the swap renames): a racing
-    * [[write]]/[[append]]/[[writeQuantized]]/[[delete]] (or `Pq` store
-    * writer) fails fast with a clear error; a
-    * compactor CRASH leaves the lease until [[recover]] clears it — a
-    * fresh compact() REFUSES a held lease (atomic acquire, so two
-    * concurrent compactions can never both own the store); recover()
-    * is the one gate back. Concurrent PROBES are fine under
-    * the [[withReadRetry]] reader contract. */
+  /** Compact the store in place ([[MaintainedStore.compactWith]]):
+    * rewrite every bucket directory to ONE file (all rows of a bucket
+    * hash to the same task under `repartition(n, bucket)`). A daily
+    * [[appendStream]] accretes one file per (batch, bucket); probe
+    * scans degrade linearly with file count even when partition
+    * pruning works. The compacted layout gives BIT-IDENTICAL probe
+    * results (same rows, same schema; spec-asserted). Works unchanged
+    * on the quantized and `Pq` stores: every non-partition column
+    * passes through. The lease also excludes [[write]],
+    * [[writeQuantized]] and the `Pq` store writers. */
   def compact(spark: SparkSession, path: String, nBits: Int = 4,
-      partCol: String = "bucket"): Unit = {
-    StoreFs.acquireLease(spark, lockPath(path))
-    // SNAPSHOT the tombstone files now: the staged rewrite applies
-    // exactly these, and a delete() that raced past the lease probe
-    // appends a NEW file that must be neither partially applied nor
-    // discarded — the swap's beforeTrashDelete hook rescues any
-    // non-snapshot tombstone file out of the trash into the new live
-    // dir, so it stays in force until the next compaction.
-    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
-    val snapNames =
-      tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-    val dead =
-      if (tsFiles.isEmpty) None
-      else Some(spark.read.parquet(tsFiles: _*).distinct())
-    val rescueLateTombstones: () => Unit =
-      () => StoreFs.rescueLateTombstones(spark, path, snapNames)
-    SignatureStore.stageAndSwap(spark, path, rescueLateTombstones) {
-      (src, staged) =>
-        // apply the snapshot deletes physically: the staged layout drops
-        // the tombstoned rows, and the swap discards the snapshot files
-        // together with the old live dir — compaction is also the
-        // delete-apply
-        val cleaned = dead.fold(src) { t =>
-          val idc = t.columns.head
-          require(src.columns.contains(idc),
-            s"tombstone column '$idc' not in store schema " +
-              s"${src.columns.mkString(",")}")
-          src.join(broadcast(t), Seq(idc), "left_anti")
-        }
-        cleaned.repartition(1 << nBits, col(partCol))
-          .write.partitionBy(partCol).mode("overwrite").parquet(staged)
+      partCol: String = "bucket"): Unit =
+    compactWith(spark, path) { (_, rows, staged) =>
+      rows.repartition(1 << nBits, col(partCol))
+        .write.partitionBy(partCol).mode("overwrite").parquet(staged)
     }
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
-
-  /** The compactor lease of the store at `path`: a sibling, because
-    * the swap renames the store dir itself. `Pq`'s stores share it. */
-  private[graft] def lockPath(path: String): String = path + ".compact_lock"
-
-  /** Reader contract for probes racing [[compact]]: wrap the whole
-    * probe (plan construction + action) here — the swap's no-live
-    * window and stale pre-swap file listings both surface as transient
-    * read errors, retried with a file-cache refresh
-    * ([[StoreFs.retryingRead]]). Probe results are bit-identical
-    * before/after compaction. After a compactor CRASH run [[recover]]
-    * instead — the no-live state is then permanent. */
-  def withReadRetry[T](spark: SparkSession, path: String,
-      attempts: Int = 6)(thunk: => T): T =
-    StoreFs.retryingRead(spark, Seq(path), attempts)(thunk)
-
-  /** Recover an interrupted [[compact]] without compacting again —
-    * completes or cleans a half-finished stage-then-swap (see
-    * `SignatureStore.recoverSwap` for the window-by-window states). */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val h = new org.apache.hadoop.fs.Path(path)
-    SignatureStore.recoverSwap(
-      h.getFileSystem(spark.sessionState.newHadoopConf()), path)
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
 
   /** The probe's bucket plus its `1+nBits` hamming≤1 neighbors —
     * multi-probe compensates for boundary vectors the way the

@@ -34,22 +34,20 @@ import graft.operators.Dedup
   * Crash-replay idempotence is the SignatureStore contract verbatim:
   * both sinks write under the batch's own `ingest=b<id>_<ckpt-hash>`
   * partition with dynamic overwrite and the match decision EXCLUDES
-  * that partition from the store it reads. Maintenance carries the
-  * full store contract from birth: [[compact]] (stage-then-swap,
-  * sibling lease), [[delete]] (tombstones by DOC id — a deleted
-  * document stops matching immediately, applied physically at
-  * compaction), [[withReadRetry]], [[recover]]. */
-object WinnowStore {
+  * that partition from the store it reads. Maintenance is the
+  * [[StoreFs]] protocol. Deletes are by DOC id (single column `doc`):
+  * a deleted document stops matching at once. */
+object WinnowStore extends MaintainedStore {
+
+  protected def storeName = "WinnowStore"
+  override protected def idColumn = Some("doc")
 
   /** `k`/`w`/`nShards` MUST match between ingests of one store. */
   final case class Params(k: Int = 8, w: Int = 4, maxFpDf: Int = 64,
       minShared: Int = 30, nShards: Int = 32)
 
-  private def lockPath(path: String): String = path + ".compact_lock"
   private def shardOf(fp: org.apache.spark.sql.Column, n: Int) =
     pmod(hash(fp), lit(n))
-  private def streamKey(checkpoint: String): String =
-    Integer.toHexString(checkpoint.hashCode)
 
   /** This batch's distinct (fp, doc) winnowed selections (q170's
     * selection stage verbatim). */
@@ -149,7 +147,7 @@ object WinnowStore {
       path: String, pairsPath: String, checkpoint: String,
       p: Params = Params())
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val key = streamKey(checkpoint)
+    val key = StoreFs.streamKey(checkpoint)
     stream.writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
@@ -171,59 +169,18 @@ object WinnowStore {
         .select(col("doc"), col("fp").as("__fp")),
       p.maxFpDf, p.minShared)
 
-  /** Logical delete by DOC id (single column named `doc`): the
-    * document's fingerprints stop matching immediately, are applied
-    * physically and cleared by [[compact]], and win over later
-    * appends of the same id until then. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    require(ids.columns.length == 1,
-      s"delete expects a single id column, got ${ids.columns.mkString(",")}")
-    StoreFs.failIfLeased(spark, lockPath(path), "WinnowStore delete")
-    StoreFs.appendTombstones(spark, path, ids)
-  }
-
-  /** Compact: fold every per-batch `ingest=` partition into
-    * `ingest=base` with DISTINCT (fp, doc) rows — probes read
-    * distinct, so results are identical by construction
-    * (spec-asserted). Stage-then-swap with the sibling lease,
-    * tombstones snapshotted at entry and applied physically, late
-    * tombstones rescued out of `.trash`. */
+  /** Compact ([[MaintainedStore.compactWith]]): fold every per-batch
+    * `ingest=` partition into `ingest=base` with DISTINCT (fp, doc)
+    * rows. Probes read distinct, so results are identical by
+    * construction (spec-asserted). */
   def compact(spark: SparkSession, path: String,
-      p: Params = Params()): Unit = {
-    StoreFs.acquireLease(spark, lockPath(path))
-    val tsFiles = StoreFs.listDataFiles(spark, StoreFs.tombstoneDir(path))
-    val snapNames =
-      tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-    val dead =
-      if (tsFiles.isEmpty) None
-      else Some(spark.read.parquet(tsFiles: _*).distinct())
-    SignatureStore.stageAndSwap(spark, path,
-      () => StoreFs.rescueLateTombstones(spark, path, snapNames)) {
-      (src, staged) =>
-        val cleaned = dead.fold(src)(t =>
-          src.join(broadcast(t.toDF("doc")), Seq("doc"), "left_anti"))
-        cleaned.select(col("fp"), col("doc")).distinct()
-          .withColumn("shard", shardOf(col("fp"), p.nShards))
-          .withColumn("ingest", lit("base"))
-          .repartition(p.nShards, col("shard"))
-          .write.partitionBy("ingest", "shard").mode("overwrite")
-          .parquet(staged)
+      p: Params = Params()): Unit =
+    compactWith(spark, path) { (_, rows, staged) =>
+      rows.select(col("fp"), col("doc")).distinct()
+        .withColumn("shard", shardOf(col("fp"), p.nShards))
+        .withColumn("ingest", lit("base"))
+        .repartition(p.nShards, col("shard"))
+        .write.partitionBy("ingest", "shard").mode("overwrite")
+        .parquet(staged)
     }
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
-
-  /** Reader retry through a concurrent [[compact]]'s swap windows —
-    * build the probe AND run the action inside the thunk. */
-  def withReadRetry[T](spark: SparkSession, path: String,
-      attempts: Int = 6)(thunk: => T): T =
-    StoreFs.retryingRead(spark, Seq(path), attempts)(thunk)
-
-  /** Recover an interrupted [[compact]]: repair the swap, clear the
-    * crashed compactor's lease. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val h = new org.apache.hadoop.fs.Path(path)
-    SignatureStore.recoverSwap(
-      h.getFileSystem(spark.sessionState.newHadoopConf()), path)
-    StoreFs.releaseLease(spark, lockPath(path))
-  }
 }

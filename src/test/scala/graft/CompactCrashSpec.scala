@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.sources.{SignatureStore, VectorStore}
-import graft.sources.SignatureStore.SwapCrash
+import graft.sources.StoreFs.SwapCrash
 
 /** Compaction crash-injection for both persisted stores: kill the
   * stage-then-swap at every window (staged written / live moved out /
@@ -17,10 +17,10 @@ import graft.sources.SignatureStore.SwapCrash
   * The old swap (delete live, then rename staged) had a real loss
   * window: a crash between the two left no live dir and nothing
   * marking the staged dir adoptable. The two-rename protocol plus
-  * [[SignatureStore.recoverSwap]] closes it; the AfterMoveOut cases
+  * [[StoreFs.recoverSwap]] closes it; the AfterMoveOut cases
   * here fail against the old implementation.
   */
-class CompactCrashSpec extends SparkSpec {
+class CompactCrashSpec extends SparkSpec with StoreCases {
   import spark.implicits._
 
   private def fs = new Path("/tmp").getFileSystem(
@@ -198,4 +198,33 @@ class CompactCrashSpec extends SparkSpec {
     oneCommittedLayout(path + "/shingles")
     assert(sigProbe(path) === baseline)
   }
+
+  // ---- every store, through the one StoreFs protocol -------------------
+
+  for (c <- storeCases)
+    test(s"${c.name}: crash at each swap window with a pending delete; " +
+        "recover() + compact() apply it") {
+      for (pt <- Seq(SwapCrash.AfterStage, SwapCrash.AfterMoveOut,
+          SwapCrash.AfterSwapIn)) {
+        val path = c.build()
+        val victim = c.stored(path).min
+        c.delete(path, c.tombstones(Seq(victim)))
+        val masked = c.visible(path)
+        assert(!masked(victim) && c.stored(path)(victim))
+        SwapCrash.reset()
+        SwapCrash.point = pt
+        try intercept[SwapCrash.Injected] { c.compact(path) }
+        finally SwapCrash.reset()
+        val lease = intercept[IllegalStateException] { c.compact(path) }
+        assert(lease.getMessage.contains("recover()"), lease.getMessage)
+        c.recover(path)
+        assert(c.visible(path) === masked, s"delete lost at window $pt")
+        c.compact(path)
+        c.surfaces(path).foreach(oneCommittedLayout)
+        assert(!exists(path + "/_tombstones"), s"tombstones left at window $pt")
+        assert(!exists(c.lockPath(path)), s"lease left at window $pt")
+        assert(!c.stored(path)(victim), s"delete not applied at window $pt")
+        assert(c.visible(path) === masked)
+      }
+    }
 }

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.operators.Pq
 import graft.sources.{SignatureStore, VectorStore}
-import graft.sources.SignatureStore.SwapPause
+import graft.sources.StoreFs.SwapPause
 
 /** Concurrent READER vs a running `compact()` — the serving-while-
   * maintaining posture at 100 TB, where compaction cannot take the
@@ -19,7 +19,7 @@ import graft.sources.SignatureStore.SwapPause
   * bare probe is shown to fail in that window (the hazard is real),
   * and a `withReadRetry`-wrapped probe retries through it and returns
   * the bit-identical pre-compaction result. */
-class ConcurrentCompactSpec extends SparkSpec {
+class ConcurrentCompactSpec extends SparkSpec with StoreCases {
   import spark.implicits._
 
   private def fs = new Path("/tmp").getFileSystem(
@@ -174,7 +174,7 @@ class ConcurrentCompactSpec extends SparkSpec {
 
   test("a crashed compactor leaves the lease (writers keep failing with " +
       "a message naming recover()); recover() clears it") {
-    import graft.sources.SignatureStore.SwapCrash
+    import graft.sources.StoreFs.SwapCrash
     val path = freshVecStore()
     SwapCrash.reset()
     SwapCrash.point = SwapCrash.AfterMoveOut
@@ -284,6 +284,41 @@ class ConcurrentCompactSpec extends SparkSpec {
     assert(spark.read.parquet(path)
       .filter(col("vec_id") === lateVictim).count() === 0L)
   }
+
+  // the other single-directory stores: the same rescue, one protocol
+  for (c <- storeCases.filter(c =>
+      c.surfaces("p") == Seq("p") && c.name != "VectorStore"))
+    test(s"${c.name}: a tombstone appended after the snapshot rides the " +
+        "old live dir into the trash and is rescued into the new live " +
+        "store, still masking probes") {
+      val path = c.build()
+      val ids = c.stored(path).toSeq.sorted
+      val (snapVictim, lateVictim) = (ids(0), ids(1))
+      c.delete(path, c.tombstones(Seq(snapVictim)))
+      val entered = new CountDownLatch(1)
+      val gate = new CountDownLatch(1)
+      SwapPause.enteredStage = entered
+      SwapPause.gateStage = gate
+      val compaction = Future(c.compact(path))
+      try {
+        assert(entered.await(60, TimeUnit.SECONDS), "swap never staged")
+        c.tombstones(Seq(lateVictim)).write.mode("append")
+          .parquet(path + "/_tombstones")
+      } finally {
+        gate.countDown()
+        SwapPause.reset()
+        Await.result(compaction, 120.seconds)
+      }
+      assert(exists(path + "/_tombstones"),
+        "late tombstone must be rescued out of the trash")
+      assert(!exists(path + ".trash"))
+      val stored = c.stored(path)
+      assert(!stored(snapVictim) && stored(lateVictim))
+      assert(!c.visible(path)(lateVictim))
+      c.compact(path)
+      assert(!exists(path + "/_tombstones"))
+      assert(!c.stored(path)(lateVictim))
+    }
 
   test("withReadRetry propagates non-recoverable errors unchanged and " +
       "exhausts attempts on a permanently missing store") {

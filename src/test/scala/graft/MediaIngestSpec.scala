@@ -135,7 +135,7 @@ class MediaIngestSpec extends SparkSpec {
   test("compact collapses per-batch ingest partitions with bit-identical " +
       "probes; delete masks immediately, survives every compact-crash " +
       "window, and the next compaction applies it physically") {
-    import graft.sources.SignatureStore.SwapCrash
+    import graft.sources.StoreFs.SwapCrash
     val (store, probe) = freshMediaStore()
     val baseline = probe()
     // both modalities matched their committed near-dup ancestors
@@ -200,8 +200,8 @@ class MediaIngestSpec extends SparkSpec {
     // through the window under withReadRetry
     val entered = new CountDownLatch(1)
     val gate = new CountDownLatch(1)
-    SignatureStore.SwapPause.entered = entered
-    SignatureStore.SwapPause.gate = gate
+    StoreFs.SwapPause.entered = entered
+    StoreFs.SwapPause.gate = gate
     val compaction = Future(MediaDedupStore.compact(spark, store))
     try {
       assert(entered.await(60, TimeUnit.SECONDS), "swap never paused")
@@ -213,7 +213,7 @@ class MediaIngestSpec extends SparkSpec {
       assert(Await.result(probing, 60.seconds) === baseline)
     } finally {
       gate.countDown()
-      SignatureStore.SwapPause.reset()
+      StoreFs.SwapPause.reset()
       Await.result(compaction, 120.seconds)
     }
     assert(probe() === baseline)

@@ -109,7 +109,7 @@ class ParagraphStoreSpec extends SparkSpec {
 
     // crash mid-compact: the tombstone survives, recover() + a fresh
     // compact() converge with the delete applied physically
-    import graft.sources.SignatureStore.SwapCrash
+    import graft.sources.StoreFs.SwapCrash
     SwapCrash.reset()
     SwapCrash.point = SwapCrash.AfterMoveOut
     try intercept[SwapCrash.Injected] { ParagraphStore.compact(spark, store, p) }

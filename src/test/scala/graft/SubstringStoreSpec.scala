@@ -129,7 +129,7 @@ class SubstringStoreSpec extends SparkSpec {
 
     // crash mid-compact: the tombstone survives, recover() + a fresh
     // compact() converge with the delete applied physically
-    import graft.sources.SignatureStore.SwapCrash
+    import graft.sources.StoreFs.SwapCrash
     SwapCrash.reset()
     SwapCrash.point = SwapCrash.AfterMoveOut
     try intercept[SwapCrash.Injected] { SubstringStore.compact(spark, store, p) }

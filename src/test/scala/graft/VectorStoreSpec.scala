@@ -271,6 +271,22 @@ class VectorStoreSpec extends SparkSpec {
     assert(top().head._1 === 0L)
   }
 
+  test("delete: a first delete naming a column the store lacks is " +
+      "rejected, leaving no tombstone and no lease; compact() still works") {
+    val dir = Files.createTempDirectory("graft_vecstore_misnamed").toString
+    val src = Tables.embeddings(spark, sf).select($"vec_id".as("id"), $"embedding")
+    VectorStore.write(src, "id", "embedding", dir, nBits)
+    val e = intercept[IllegalArgumentException] {
+      VectorStore.delete(spark, dir, Seq(1L).toDF("other"))
+    }
+    assert(e.getMessage.contains("'other'"), e.getMessage)
+    assert(!new java.io.File(dir + "/_tombstones").exists())
+    VectorStore.compact(spark, dir, nBits)
+    assert(!new java.io.File(dir + ".compact_lock").exists())
+    VectorStore.append(src.filter($"id" === 1L), "id", "embedding", dir, nBits)
+    assert(spark.read.parquet(dir).count() === src.count() + 1)
+  }
+
   test("pruned top-k equals brute-force top-k over the candidate buckets; self ranks first") {
     val probe = Tables.embeddings(spark, sf).filter($"vec_id" === 0)
       .select($"embedding").head().getSeq[Float](0).map(_.toDouble).toSeq
