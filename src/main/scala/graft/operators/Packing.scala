@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.streaming.Streams
 
 /** Sequence packing for pretraining: concatenate the corpus in a total
   * document order and cut it into fixed token-budget training shards —
@@ -182,9 +183,11 @@ object Packing {
     * `state/batch=<id>` — both with overwrite, and the state read is
     * batch `id-1`'s, so a crash between the two writes replays to
     * BIT-IDENTICAL output (the SignatureStore ingest-key pattern;
-    * spec-asserted by running the same batch twice). Driver state is
-    * one PackState row; the two special rows (carried continuation,
-    * new open boundary) are the only rows collected. */
+    * spec-asserted by running the same batch twice). Batch 0 starts a
+    * fresh stream: it clears a prior run's emissions and state from
+    * reused dirs. Driver state is one PackState row; the two special
+    * rows (carried continuation, new open boundary) are the only rows
+    * collected. */
   private[graft] def packBatch(batch: DataFrame, batchId: Long,
       idCol: String, tokensCol: String, seqLen: Long,
       outDir: String, stateDir: String): Unit = {
@@ -242,15 +245,11 @@ object Packing {
       .parquet(outDir)
     Seq(nextState).toDF()
       .write.mode("overwrite").parquet(statePath(stateDir, batchId))
-    // retention: replay only ever reads batch id-1's state (and a crash
-    // BEFORE this write replays batchId, which also reads id-1), so
-    // everything at id-2 and older is dead — prune it, or a long-running
-    // ingest accretes one tiny parquet dir per micro-batch forever
-    graft.sources.StoreFs.childNames(spark, stateDir)
-      .filter(_.startsWith("batch="))
-      .map(_.drop(6).toLong)
-      .filter(_ <= batchId - 2)
-      .foreach(b => graft.sources.StoreFs.delete(spark, statePath(stateDir, b)))
+    // a fresh stream over reused dirs: the prior run's emissions would
+    // join this run's in packedResult (its seq_ids restart at 0 too)
+    if (batchId == 0L)
+      Streams.dropBatchDirs(spark, outDir, "__batch_id=")(_ != 0L)
+    Streams.pruneState(spark, stateDir, batchId)
   }
 
   /** Continuous sequence packing (AvailableNow drain): each micro-batch
@@ -263,13 +262,8 @@ object Packing {
   def packStream(stream: DataFrame, idCol: String, tokensCol: String,
       seqLen: Long, outDir: String, stateDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        packBatch(batch, batchId, idCol, tokensCol, seqLen, outDir, stateDir)
-      }
-      .start()
+    Streams.drain(stream, checkpoint)(
+      packBatch(_, _, idCol, tokensCol, seqLen, outDir, stateDir))
 
   /** The stream's complete digest view: all closed emissions plus the
     * final state's open partial (if any). */

@@ -265,13 +265,8 @@ object Scale {
   def hotKeysStream(stream: DataFrame, keyCol: String, capacity: Int,
       stateDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hotKeysBatch(batch, batchId, keyCol, capacity, stateDir)
-      }
-      .start()
+    graft.streaming.Streams.drain(stream, checkpoint)(
+      hotKeysBatch(_, _, keyCol, capacity, stateDir))
 
   private def hotStatePath(stateDir: String, batchId: Long): String =
     s"$stateDir/batch=$batchId"
@@ -280,18 +275,6 @@ object Scale {
       keyCol: String, capacity: Int, stateDir: String): Unit = {
     require(capacity > 0, s"capacity must be positive: $capacity")
     val spark = batch.sparkSession
-    // batch 0 = a NEW stream (fresh checkpoint): any batch= dirs already
-    // under stateDir are a PRIOR run's state against a reused stateDir —
-    // batch ids reset to 0, so the old run's high-id summary would be
-    // served by hotKeySummary forever (the ≤ id-2 pruning never reaches
-    // above the current id). Purge them all; a replay of batch 0 under
-    // the SAME checkpoint re-purges and rewrites identically (AvailableNow
-    // replays only the last uncommitted batch, so batch 0 can only replay
-    // before batch 1 ever committed).
-    if (batchId == 0L)
-      graft.sources.StoreFs.childNames(spark, stateDir)
-        .filter(_.startsWith("batch="))
-        .foreach(b => graft.sources.StoreFs.delete(spark, s"$stateDir/$b"))
     val keys = batch.select(col(keyCol)).filter(col(keyCol).isNotNull)
     val partial = mergedSummary(keys, capacity)
     val batchN = keys.count()
@@ -314,13 +297,9 @@ object Scale {
     rows.add(org.apache.spark.sql.Row(null, prevN + batchN))
     spark.createDataFrame(rows, schema).coalesce(1)
       .write.mode("overwrite").parquet(hotStatePath(stateDir, batchId))
-    // replay only ever reads batch id-1's state — prune id-2 and older
-    // (the packStream retention rule)
-    graft.sources.StoreFs.childNames(spark, stateDir)
-      .filter(_.startsWith("batch=")).map(_.drop(6).toLong)
-      .filter(_ <= batchId - 2)
-      .foreach(b =>
-        graft.sources.StoreFs.delete(spark, hotStatePath(stateDir, b)))
+    // batch 0 also clears a prior run's state: its high-id summary
+    // would otherwise be served by hotKeySummary forever
+    graft.streaming.Streams.pruneState(spark, stateDir, batchId)
   }
 
   /** The latest carried summary: (key, wt, n_total) for the surviving

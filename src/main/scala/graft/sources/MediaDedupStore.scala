@@ -18,14 +18,7 @@ import org.apache.spark.sql.functions._
   * carries the same two sigs). Candidate recall is pigeonhole-complete
   * at `maxHamming` ≤ 3, the family contract.
   *
-  * Crash-replay idempotence is inherited wholesale from the
-  * SignatureStore contract (the r8/r9 design): each micro-batch writes
-  * BOTH sinks under its own `ingest=b<id>_<checkpoint-hash>` partition
-  * with dynamic partition overwrite, and the keep DECISION excludes
-  * that partition from the store it reads — a replayed batch re-derives
-  * the identical survivor set against exactly the pre-batch store state
-  * and overwrites only its own output, whether the crash hit before,
-  * between, or after the two writes.
+  * Crash replay follows the keyed-ingest contract ([[StoreFs]]).
   */
 object MediaDedupStore extends MaintainedStore {
 
@@ -55,20 +48,11 @@ object MediaDedupStore extends MaintainedStore {
         shiftright(col("sig"), 16 * b).bitwiseAND(lit(0xFFFFL))): _*))
         .as(Seq("band", "bucket")))
 
-  /** Idempotent per-micro-batch store write: this batch's partition is
-    * replaced, nothing else is touched. Fails fast while a [[compact]]
-    * holds the store lease (writer-vs-compact exclusion — a write
-    * landing in the swap's no-live window would recreate the live path
-    * and break the rename). */
+  /** Idempotent per-micro-batch store write
+    * ([[MaintainedStore.writeIngest]]). */
   private[graft] def appendBatch(sigs: DataFrame, path: String,
-      ingest: String): Unit = {
-    StoreFs.failIfLeased(sigs.sparkSession, lockPath(path),
-      s"MediaDedupStore write (ingest=$ingest)")
-    banded(sigs).withColumn("ingest", lit(ingest))
-      .write.partitionBy("ingest").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(path)
-  }
+      ingest: String): Unit =
+    writeIngest(path, ingest, banded(sigs))
 
   /** Near-dup pairs between a batch's signatures and the committed
     * store: band-bucket candidates, hamming verified BEFORE the
@@ -77,14 +61,11 @@ object MediaDedupStore extends MaintainedStore {
   private[graft] def dedupAgainstStore(sigs: DataFrame, path: String,
       maxHamming: Int, excludeIngest: Option[String]): DataFrame = {
     val spark = sigs.sparkSession
-    val stored0 = spark.read.parquet(path)
-    val scoped = excludeIngest
-      .fold(stored0)(ex => stored0.filter(col("ingest") =!= lit(ex)))
     // logically deleted media never act as dedup evidence — the
     // right-to-be-forgotten contract: a tombstoned image/clip cannot
     // keep suppressing re-ingests of similar content
-    val stored = StoreFs.tombstones(spark, path).fold(scoped)(t =>
-      scoped.join(broadcast(t.toDF("doc")), Seq("doc"), "left_anti"))
+    val stored = replayVisible(spark, path, spark.read.parquet(path),
+      excludeIngest)
     banded(sigs)
       .select(col("band"), col("bucket"), col("doc").as("id_new"),
         col("sig").as("__sa"))
@@ -120,7 +101,7 @@ object MediaDedupStore extends MaintainedStore {
                                       // store the first just changed
     if (!kept.isEmpty) {
       appendBatch(kept, path, ingest)
-      kept.write.mode("overwrite").parquet(acceptedPath + "/ingest=" + ingest)
+      writeSideSink(kept, acceptedPath, ingest)
     }
   }
 
@@ -129,17 +110,10 @@ object MediaDedupStore extends MaintainedStore {
     * committed — survivors land in the store and `acceptedPath`. */
   def ingestDedup(stream: DataFrame, path: String, acceptedPath: String,
       checkpoint: String, maxHamming: Int = 3)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val key = StoreFs.streamKey(checkpoint)
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, s"b${batchId}_$key", path, acceptedPath,
-          maxHamming)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestStream(stream, checkpoint) { (batch, ingest, _) =>
+      processBatch(batch, ingest, path, acceptedPath, maxHamming)
+    }
 
   // --- maintenance (the StoreFs protocol) -----------------------------
   //

@@ -27,25 +27,19 @@ import graft.operators.Dedup
   * Incremental semantics, pinned: a paragraph is kept while cumulative
   * df ≤ maxDf, so EARLY copies survive and later ones drop — the
   * standard incremental posture (re-running the corpus as one batch
-  * gives q154's symmetric answer instead). Crash-replay idempotence is
-  * the SignatureStore contract verbatim: both sinks write under the
-  * batch's own `ingest=b<id>_<checkpoint-hash>` partition with dynamic
-  * overwrite, and the keep decision EXCLUDES that partition from the
-  * store it reads.
+  * gives q154's symmetric answer instead). Crash replay follows the
+  * keyed-ingest contract ([[StoreFs]]).
   *
   * Maintenance is the [[StoreFs]] protocol. Deletes are by paragraph
   * digest (single column `h`, the sha2 hex of the trimmed paragraph):
   * known boilerplate or PII strings stop counting at once.
   */
-object ParagraphStore extends MaintainedStore {
+object ParagraphStore extends DigestCountStore {
 
   protected def storeName = "ParagraphStore"
-  override protected def idColumn = Some("h")
 
   /** `sep`/`nShards` MUST match between ingests of one store. */
   final case class Params(sep: String = "\n", nShards: Int = 32)
-
-  private def shardOf(h: Column, n: Int): Column = pmod(hash(h), lit(n))
 
   /** This batch's paragraph document frequencies: (h, cnt) with cnt =
     * DISTINCT batch docs containing the paragraph (q154's df axis). */
@@ -53,41 +47,17 @@ object ParagraphStore extends MaintainedStore {
     segs.select(col("__h").as("h"), col("__id")).distinct()
       .groupBy(col("h")).agg(count(lit(1)).as("cnt"))
 
-  /** Idempotent per-micro-batch store write: this batch's partition is
-    * replaced, nothing else is touched; fails fast on the compactor
-    * lease. */
+  /** Idempotent per-micro-batch store write ([[writeCounts]]). */
   private[graft] def appendBatch(counts: DataFrame, path: String,
-      ingest: String, p: Params): Unit = {
-    StoreFs.failIfLeased(counts.sparkSession, lockPath(path),
-      s"ParagraphStore write (ingest=$ingest)")
-    counts
-      .withColumn("shard", shardOf(col("h"), p.nShards))
-      .withColumn("ingest", lit(ingest))
-      .repartition(p.nShards, col("shard"))
-      .write.partitionBy("ingest", "shard").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(path)
-  }
+      ingest: String, p: Params): Unit =
+    writeCounts(counts, path, ingest, p.nShards)
 
-  /** Prior corpus df for exactly the hashes in `hashes`: shard-pruned
-    * scan (the probe's shard set is collected — ≤ nShards ints),
-    * `excludeIngest` scopes a replay to the pre-batch store state,
-    * tombstoned digests never count. */
+  /** Prior corpus df for exactly the hashes in `hashes`
+    * ([[digestPrior]]). */
   private[graft] def priorDf(spark: SparkSession, path: String,
       hashes: DataFrame, p: Params,
-      excludeIngest: Option[String]): DataFrame = {
-    val shards = hashes
-      .select(shardOf(col("h"), p.nShards).as("s")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val stored0 = spark.read.parquet(path)
-      .filter(col("shard").isin(shards: _*))
-    val scoped = excludeIngest
-      .fold(stored0)(ex => stored0.filter(col("ingest") =!= lit(ex)))
-    val visible = StoreFs.tombstones(spark, path).fold(scoped)(t =>
-      scoped.join(broadcast(t.toDF("h")), Seq("h"), "left_anti"))
-    visible.join(hashes.select(col("h")).distinct(), Seq("h"), "left_semi")
-      .groupBy(col("h")).agg(sum(col("cnt")).as("prior"))
-  }
+      excludeIngest: Option[String]): DataFrame =
+    digestPrior(spark, path, hashes, p.nShards, excludeIngest)
 
   /** One micro-batch: split paragraphs, decide keeps against the
     * CUMULATIVE df (committed store, excluding this batch's own
@@ -100,20 +70,13 @@ object ParagraphStore extends MaintainedStore {
     val segs = Dedup.paragraphSegments(batch, idCol, textCol, p.sep)
       .localCheckpoint() // three consumers: counts, keep join, reassembly
     val counts = batchCounts(segs).localCheckpoint()
-    val totals =
-      if (!StoreFs.hasCommittedData(spark, path))
-        counts.withColumn("__tot", col("cnt"))
-      else counts
-        .join(priorDf(spark, path, counts, p, Some(ingest)), Seq("h"), "left")
-        .withColumn("__tot", col("cnt") + coalesce(col("prior"), lit(0L)))
+    val totals = withCumulative(spark, path, counts, p.nShards, ingest)
     val keep = totals
       .select(col("h").as("__h"), (col("__tot") <= maxDf).as("__keep"))
     val cleaned = Dedup.reassembleKept(batch, idCol,
       segs.join(keep, Seq("__h")), p.sep)
       .localCheckpoint() // evaluate the decision ONCE, before any write
-    if (!cleaned.isEmpty)
-      cleaned.write.mode("overwrite")
-        .parquet(cleanedPath + "/ingest=" + ingest)
+    if (!cleaned.isEmpty) writeSideSink(cleaned, cleanedPath, ingest)
     if (!counts.isEmpty) appendBatch(counts, path, ingest, p)
   }
 
@@ -126,28 +89,77 @@ object ParagraphStore extends MaintainedStore {
       p: Params = Params(), maxDf: Long = 1)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(maxDf >= 1, s"maxDf must be >= 1: $maxDf")
-    val key = StoreFs.streamKey(checkpoint)
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, s"b${batchId}_$key", idCol, textCol, path,
-          cleanedPath, p, maxDf)
-      }
-      .start()
+    ingestStream(stream, checkpoint) { (batch, ingest, _) =>
+      processBatch(batch, ingest, idCol, textCol, path, cleanedPath, p,
+        maxDf)
+    }
   }
+
+  /** Compact ([[compactCounts]]): probe results are identical by
+    * construction (spec-asserted). */
+  def compact(spark: SparkSession, path: String,
+      p: Params = Params()): Unit =
+    compactCounts(spark, path, p.nShards)
+}
+
+/** A store of ADDITIVE digest counts, (h, cnt) rows under
+  * `ingest=<key>/shard=<s>/` with shard = pmod(hash(h), nShards): the
+  * shared layer of [[ParagraphStore]] (paragraph digests) and
+  * [[SubstringStore]] (char-gram digests). Probes sum `cnt` across
+  * ingest partitions, so folding them into `ingest=base` changes no
+  * probe. Tombstones mask by `h`. */
+private[graft] trait DigestCountStore extends MaintainedStore {
+
+  override protected def idColumn = Some("h")
+
+  protected def shardOf(h: Column, n: Int): Column = pmod(hash(h), lit(n))
+
+  /** One batch's (h, cnt) rows under its own ingest key, one file per
+    * shard directory. */
+  protected def writeCounts(counts: DataFrame, path: String, ingest: String,
+      nShards: Int): Unit =
+    writeIngest(path, ingest, counts
+      .withColumn("shard", shardOf(col("h"), nShards))
+      .repartition(nShards, col("shard")), Seq("shard"))
+
+  /** Prior corpus count per digest in `hashes`: a shard-pruned scan
+    * (the probe's shard set is collected, ≤ nShards ints), scoped and
+    * masked by [[MaintainedStore.replayVisible]]. */
+  protected def digestPrior(spark: SparkSession, path: String,
+      hashes: DataFrame, nShards: Int,
+      excludeIngest: Option[String]): DataFrame = {
+    val shards = hashes
+      .select(shardOf(col("h"), nShards).as("s")).distinct()
+      .collect().map(_.getInt(0)).toSeq
+    replayVisible(spark, path,
+      spark.read.parquet(path).filter(col("shard").isin(shards: _*)),
+      excludeIngest)
+      .join(hashes.select(col("h")).distinct(), Seq("h"), "left_semi")
+      .groupBy(col("h")).agg(sum(col("cnt")).as("prior"))
+  }
+
+  /** `counts` (h, cnt) with `__tot` = cnt + the prior corpus count
+    * outside the batch's own key: the cumulative count a batch decides
+    * on. */
+  protected def withCumulative(spark: SparkSession, path: String,
+      counts: DataFrame, nShards: Int, ingest: String): DataFrame =
+    if (!StoreFs.hasCommittedData(spark, path))
+      counts.withColumn("__tot", col("cnt"))
+    else counts
+      .join(digestPrior(spark, path, counts, nShards, Some(ingest)),
+        Seq("h"), "left")
+      .withColumn("__tot", col("cnt") + coalesce(col("prior"), lit(0L)))
 
   /** Compact ([[MaintainedStore.compactWith]]): fold every per-batch
     * `ingest=` partition into `ingest=base` with ONE row per surviving
-    * digest. Counts are additive, so probe results are identical by
-    * construction (probes sum either way; spec-asserted). */
-  def compact(spark: SparkSession, path: String,
-      p: Params = Params()): Unit =
+    * digest. */
+  protected def compactCounts(spark: SparkSession, path: String,
+      nShards: Int): Unit =
     compactWith(spark, path) { (_, rows, staged) =>
       rows.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
-        .withColumn("shard", shardOf(col("h"), p.nShards))
+        .withColumn("shard", shardOf(col("h"), nShards))
         .withColumn("ingest", lit("base"))
-        .repartition(p.nShards, col("shard"))
+        .repartition(nShards, col("shard"))
         .write.partitionBy("ingest", "shard").mode("overwrite")
         .parquet(staged)
     }

@@ -27,14 +27,12 @@ import graft.operators.Dedup
   * join: they rejoin per SURVIVING pair from `shingles/`, the same
   * late-materialization shape as `minhashNearDups` (r2 q48 finding).
   *
-  * The `ingest` partition level is what makes streaming ingest
-  * CRASH-REPLAY IDEMPOTENT ([[ingestDedup]]): each micro-batch writes
-  * both its sinks under its own ingest key with dynamic partition
-  * overwrite, so a replayed batch REPRODUCES its prior write instead of
-  * re-deciding against it (the r8 data-loss window: with plain appends,
-  * a crash between the store append and the accepted append made the
-  * replayed rows near-dups of their own prior insertion — they dropped
-  * out and never reached the accepted sink).
+  * The `ingest` partition level makes streaming ingest crash-replay
+  * idempotent under the keyed-ingest contract ([[StoreFs]]). With plain
+  * appends, a crash between the store append and the accepted append
+  * made the replayed rows near-dups of their own prior insertion: they
+  * dropped out and never reached the accepted sink (the r8 data-loss
+  * window).
   *
   * Maintenance is the [[StoreFs]] protocol over two surfaces, `bands/`
   * and `shingles/`, with the lease at `<path>/_compact_lock` and the
@@ -86,38 +84,30 @@ object SignatureStore extends MaintainedStore {
     fanned(df, idCol, textCol)
       .select(col("doc"), Dedup.shingles(col("__text"), p.shingleK).as("sh"))
 
-  /** One write of (banded index, shingle payload) under `ingest`.
-    * `dynamicOverwrite = true` is the batch-replay mode: only the
-    * partitions present in THIS data are replaced, so re-running the
-    * same micro-batch overwrites its own prior (possibly partial)
-    * output and touches nothing else. The index write re-exchanges on
-    * `shard` so each shard directory gets one file per write, not one
-    * per compute task. */
-  private def writeAs(df: DataFrame, idCol: String, textCol: String,
-      path: String, ingest: String, p: Params, mode: String,
-      dynamicOverwrite: Boolean): Unit = {
-    // writer-vs-compact exclusion: fail fast instead of writing into a
-    // surface compact() is about to rename away (see StoreFs lease note)
-    StoreFs.failIfLeased(df.sparkSession, lockPath(path),
-      s"SignatureStore write (ingest=$ingest)")
-    def w(out: DataFrame, parts: Seq[String], dest: String): Unit = {
-      val writer = out.write.partitionBy(parts: _*).mode(mode)
-      (if (dynamicOverwrite) writer.option("partitionOverwriteMode", "dynamic")
-       else writer).parquet(dest)
-    }
-    w(banded(df, idCol, textCol, p).withColumn("ingest", lit(ingest))
-        .repartition(p.nShards, col("shard")),
-      Seq("ingest", "shard"), path + "/bands")
-    w(shingleRows(df, idCol, textCol, p).withColumn("ingest", lit(ingest)),
-      Seq("ingest"), path + "/shingles")
-  }
+  /** The two surfaces' rows for one write of `df`, each with its
+    * surface dir and its partition columns below `ingest`. The index
+    * re-exchanges on `shard` so each shard directory gets one file per
+    * write, not one per compute task. */
+  private def surfaceRows(df: DataFrame, idCol: String, textCol: String,
+      p: Params): Seq[(String, DataFrame, Seq[String])] = Seq(
+    ("/bands", banded(df, idCol, textCol, p)
+      .repartition(p.nShards, col("shard")), Seq("shard")),
+    ("/shingles", shingleRows(df, idCol, textCol, p), Nil))
 
   /** Build (or extend, with mode=append) the store from a document
     * frame — two linear passes over the input (banded index, then
-    * shingle payload). */
+    * shingle payload), both under `ingest=base`. */
   def write(df: DataFrame, idCol: String, textCol: String, path: String,
-      p: Params = Params(), mode: String = "overwrite"): Unit =
-    writeAs(df, idCol, textCol, path, "base", p, mode, dynamicOverwrite = false)
+      p: Params = Params(), mode: String = "overwrite"): Unit = {
+    // writer-vs-compact exclusion: fail fast instead of writing into a
+    // surface compact() is about to rename away (see StoreFs lease note)
+    failIfLeased(df.sparkSession, path, "base")
+    surfaceRows(df, idCol, textCol, p).foreach { case (surface, rows, parts) =>
+      rows.withColumn("ingest", lit("base"))
+        .write.partitionBy("ingest" +: parts: _*).mode(mode)
+        .parquet(path + surface)
+    }
+  }
 
   /** Incremental index maintenance — new files land inside the existing
     * `ingest=base` directories, no reorganization (same posture as
@@ -127,29 +117,23 @@ object SignatureStore extends MaintainedStore {
     write(df, idCol, textCol, path, p, mode = "append")
 
   /** Idempotent per-micro-batch write: both store surfaces land under
-    * `ingest=<key>` with dynamic partition overwrite — replaying the
-    * batch replaces its own partitions bit-for-bit. */
+    * `ingest=<key>` through [[MaintainedStore.writeIngest]]. */
   private[graft] def appendBatch(df: DataFrame, idCol: String,
       textCol: String, path: String, ingest: String,
       p: Params = Params()): Unit =
-    writeAs(df, idCol, textCol, path, ingest, p, mode = "overwrite",
-      dynamicOverwrite = true)
+    surfaceRows(df, idCol, textCol, p).foreach { case (surface, rows, parts) =>
+      writeIngest(path, ingest, rows, parts, surface)
+    }
 
   /** Streaming ingest into the signature store (AvailableNow drain —
-    * the reference's drain-then-stop shape). Replay-idempotent: each
-    * batch writes its own `ingest` partitions with dynamic overwrite. */
+    * the reference's drain-then-stop shape). Replay-idempotent per the
+    * keyed-ingest contract ([[StoreFs]]). */
   def appendStream(stream: DataFrame, idCol: String, textCol: String,
       path: String, checkpoint: String,
-      p: Params = Params()): org.apache.spark.sql.streaming.StreamingQuery = {
-    val key = StoreFs.streamKey(checkpoint)
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatch(batch, idCol, textCol, path, s"b${batchId}_$key", p)
-      }
-      .start()
-  }
+      p: Params = Params()): org.apache.spark.sql.streaming.StreamingQuery =
+    ingestStream(stream, checkpoint) { (batch, ingest, _) =>
+      appendBatch(batch, idCol, textCol, path, ingest, p)
+    }
 
   /** Near-dup pairs between a NEW batch and the persisted corpus:
     * (id_new, id_stored, jaccard ≥ threshold). The batch's banded rows
@@ -183,14 +167,9 @@ object SignatureStore extends MaintainedStore {
       textCol: String, path: String, p: Params,
       excludeIngest: Option[String]): DataFrame = {
     val spark = batch.sparkSession
-    val dead = StoreFs.tombstones(spark, path)
-    def visible(df: DataFrame): DataFrame = {
-      val scoped =
-        excludeIngest.fold(df)(ex => df.filter(col("ingest") =!= lit(ex)))
-      // logically deleted docs never act as dedup evidence
-      dead.fold(scoped)(t =>
-        scoped.join(broadcast(t.toDF("doc")), Seq("doc"), "left_anti"))
-    }
+    // logically deleted docs never act as dedup evidence
+    def visible(df: DataFrame): DataFrame =
+      replayVisible(spark, path, df, excludeIngest)
     val batchBanded = banded(batch, idCol, textCol, p)
     val shards = batchBanded.select(col("shard")).distinct()
       .collect().map(_.getInt(0)).toSeq
@@ -279,7 +258,7 @@ object SignatureStore extends MaintainedStore {
       jaccardThreshold)
     if (!kept.isEmpty) {
       appendBatch(kept, idCol, textCol, path, ingest, p)
-      kept.write.mode("overwrite").parquet(acceptedPath + "/ingest=" + ingest)
+      writeSideSink(kept, acceptedPath, ingest)
     }
   }
 
@@ -291,26 +270,18 @@ object SignatureStore extends MaintainedStore {
     * reference ships, `src/rag/sqlx.rs:34-45`: its ingest re-inserts
     * every row). Batch→batch ordering is serial under AvailableNow.
     *
-    * Crash-replay idempotence (the r8 defect, fixed): both sinks are
-    * written under the batch's own `ingest=` partition with dynamic
-    * overwrite, and the keep DECISION excludes that partition from the
-    * store it reads — so a replayed batch re-derives the identical
+    * Crash-replay idempotence (the r8 defect, fixed) is the keyed-ingest
+    * contract ([[StoreFs]]): a replayed batch re-derives the identical
     * survivor set and overwrites its own partitions, whether the crash
     * hit before, between, or after the two writes. */
   def ingestDedup(stream: DataFrame, idCol: String, textCol: String,
       path: String, acceptedPath: String, checkpoint: String,
       p: Params = Params(), jaccardThreshold: Double = 0.8)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val key = StoreFs.streamKey(checkpoint)
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, s"b${batchId}_$key", idCol, textCol, path,
-          acceptedPath, p, jaccardThreshold)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestStream(stream, checkpoint) { (batch, ingest, _) =>
+      processBatch(batch, ingest, idCol, textCol, path, acceptedPath, p,
+        jaccardThreshold)
+    }
 
   /** Compact the store in place ([[MaintainedStore.compactWith]]):
     * rewrite both surfaces into the single `ingest=base` partition at

@@ -2,8 +2,10 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
+import graft.streaming.Streams
 
 /** The persisted stores' file layer and their ONE maintenance
   * protocol, which the seven stores share through [[MaintainedStore]].
@@ -47,7 +49,26 @@ import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
   *    compacted layout gives bit-identical probe results.
   *  - Recover: a compactor crash leaves the lease held and a swap half
   *    done. recover() repairs every surface's swap and clears the
-  *    lease; it is the one gate back to writing and compacting. */
+  *    lease; it is the one gate back to writing and compacting.
+  *
+  * The keyed-ingest replay contract (six stores stream through
+  * [[MaintainedStore.ingestStream]]; `VectorStore` does not):
+  *  - Own key: micro-batch `id` of the stream checkpointed at `ckpt`
+  *    writes under `ingest=b<id>_<hex of ckpt's hash>`, so two streams'
+  *    batch 0 never share a partition and a restart on the same
+  *    checkpoint replays onto its own.
+  *  - Dynamic overwrite: [[MaintainedStore.writeIngest]] replaces only
+  *    the partitions present in the batch's rows, so a replay replaces
+  *    its own prior, possibly partial, write and touches nothing else.
+  *  - The decision excludes its own key: every read that decides what
+  *    a batch keeps or emits goes through
+  *    [[MaintainedStore.replayVisible]] with the batch's key, so a replay
+  *    decides against exactly the store state the first attempt saw.
+  *  - Side sink under the same key: a store's second output (accepted
+  *    docs, cleaned docs, scores, pairs) lands at `<sink>/ingest=<key>`
+  *    with overwrite ([[MaintainedStore.writeSideSink]]).
+  * Together a crash before, between or after a batch's writes replays
+  * to the uninterrupted run's rows (`RestartEquivalenceSpec`). */
 private[graft] object StoreFs {
 
   def fileSystem(spark: SparkSession, dir: String): (FileSystem, Path) = {
@@ -160,13 +181,6 @@ private[graft] object StoreFs {
     fs.delete(p, true)
     ()
   }
-
-  /** Stable per-stream ingest key: the streaming checkpoint IS the
-    * batch-id namespace, so two streams' batch 0 never share an
-    * `ingest=` partition, and a restart (same checkpoint) replays onto
-    * its own partitions. */
-  def streamKey(checkpoint: String): String =
-    Integer.toHexString(checkpoint.hashCode)
 
   /** Absolute paths of `dir`'s immediate committed data files (the
     * `_`/`.` rule), empty when absent: the tombstone snapshot. */
@@ -443,6 +457,61 @@ private[graft] trait MaintainedStore {
   def recover(spark: SparkSession, path: String): Unit = {
     surfaces(path).foreach(StoreFs.recoverSwap(spark, _))
     StoreFs.releaseLease(spark, lockPath(path))
+  }
+
+  // --- keyed ingest (the replay contract in the StoreFs header) --------
+
+  /** Drain `stream` on `checkpoint`, handing `body` each micro-batch,
+    * its ingest key and its batch id. The checkpoint is the batch-id
+    * namespace, so its hash completes the key. */
+  protected def ingestStream(stream: DataFrame, checkpoint: String)(
+      body: (DataFrame, String, Long) => Unit): StreamingQuery = {
+    val key = Integer.toHexString(checkpoint.hashCode)
+    Streams.drain(stream, checkpoint) { (batch, batchId) =>
+      body(batch, s"b${batchId}_$key", batchId)
+    }
+  }
+
+  /** The writer-side lease probe of a write under `ingest`. */
+  protected def failIfLeased(spark: SparkSession, path: String,
+      ingest: String): Unit =
+    StoreFs.failIfLeased(spark, lockPath(path),
+      s"$storeName write (ingest=$ingest)")
+
+  /** The per-batch store writer: after the lease probe, `rows` land in
+    * the surface `path + surface` under `ingest=<ingest>/<parts…>` with
+    * dynamic partition overwrite. The caller's exchange, if any, sets
+    * the files per directory. */
+  protected def writeIngest(path: String, ingest: String, rows: DataFrame,
+      parts: Seq[String] = Nil, surface: String = ""): Unit = {
+    failIfLeased(rows.sparkSession, path, ingest)
+    rows.withColumn("ingest", lit(ingest))
+      .write.partitionBy("ingest" +: parts: _*).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(path + surface)
+  }
+
+  /** A batch's side output at `<sink>/ingest=<ingest>`, replaced whole. */
+  protected def writeSideSink(rows: DataFrame, sink: String,
+      ingest: String): Unit =
+    rows.write.mode("overwrite").parquet(sink + "/ingest=" + ingest)
+
+  /** `rows` (a read of one of the store's surfaces) without the
+    * `ingest` partition `exclude`: a replayed batch's view of the store
+    * before its own first attempt. */
+  protected def replayScoped(rows: DataFrame,
+      exclude: Option[String]): DataFrame =
+    exclude.fold(rows)(ex => rows.filter(col("ingest") =!= lit(ex)))
+
+  /** [[replayScoped]] `rows` with the pending tombstones masked under
+    * the store's id column: what a batch's decision may read. */
+  protected def replayVisible(spark: SparkSession, path: String,
+      rows: DataFrame, exclude: Option[String]): DataFrame = {
+    val scoped = replayScoped(rows, exclude)
+    StoreFs.tombstones(spark, path).fold(scoped) { t =>
+      val c = idColumn.getOrElse(t.columns.head)
+      scoped.join(broadcast(t.toDF(c)), Seq(c), "left_anti")
+    }
   }
 
   /** The compaction frame: take the lease, snapshot the tombstones, and

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -31,23 +31,17 @@ import graft.operators.Dedup
   * retro-update when later copies arrive — the standard incremental
   * posture (re-run the corpus as one batch for the symmetric answer).
   *
-  * Crash-replay idempotence is the SignatureStore contract verbatim:
-  * both sinks write under the batch's own `ingest=b<id>_<ckpt-hash>`
-  * partition with dynamic overwrite, and the scoring decision EXCLUDES
-  * that partition from the store it reads. Maintenance is the
-  * [[StoreFs]] protocol. Deletes are by gram digest (single column
+  * Crash replay follows the keyed-ingest contract ([[StoreFs]]), and
+  * maintenance is the [[StoreFs]] protocol. Deletes are by gram digest (single column
   * `h`, the md5 hex of the char k-gram): known boilerplate stops
   * counting at once.
   */
-object SubstringStore extends MaintainedStore {
+object SubstringStore extends DigestCountStore {
 
   protected def storeName = "SubstringStore"
-  override protected def idColumn = Some("h")
 
   /** `k`/`nShards` MUST match between ingests of one store. */
   final case class Params(k: Int = 32, nShards: Int = 32)
-
-  private def shardOf(h: Column, n: Int): Column = pmod(hash(h), lit(n))
 
   /** This batch's (doc, h) gram-digest stream: DISTINCT char k-grams
     * per doc (the q87 span semantics), md5-digested. Docs shorter than
@@ -57,40 +51,17 @@ object SubstringStore extends MaintainedStore {
     Dedup.spanStream(batch, idCol, textCol, p.k)
       .select(col("doc"), md5(col("span")).as("h"))
 
-  /** Idempotent per-micro-batch store write: this batch's partition is
-    * replaced, nothing else touched; fails fast on the compactor
-    * lease. */
+  /** Idempotent per-micro-batch store write ([[writeCounts]]). */
   private[graft] def appendBatch(counts: DataFrame, path: String,
-      ingest: String, p: Params): Unit = {
-    StoreFs.failIfLeased(counts.sparkSession, lockPath(path),
-      s"SubstringStore write (ingest=$ingest)")
-    counts
-      .withColumn("shard", shardOf(col("h"), p.nShards))
-      .withColumn("ingest", lit(ingest))
-      .repartition(p.nShards, col("shard"))
-      .write.partitionBy("ingest", "shard").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(path)
-  }
+      ingest: String, p: Params): Unit =
+    writeCounts(counts, path, ingest, p.nShards)
 
-  /** Prior corpus df for exactly the digests in `hashes`: shard-pruned
-    * scan, `excludeIngest` scopes a replay to the pre-batch store
-    * state, tombstoned digests never count. */
+  /** Prior corpus df for exactly the digests in `hashes`
+    * ([[digestPrior]]). */
   private[graft] def priorDf(spark: SparkSession, path: String,
       hashes: DataFrame, p: Params,
-      excludeIngest: Option[String]): DataFrame = {
-    val shards = hashes
-      .select(shardOf(col("h"), p.nShards).as("s")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val stored0 = spark.read.parquet(path)
-      .filter(col("shard").isin(shards: _*))
-    val scoped = excludeIngest
-      .fold(stored0)(ex => stored0.filter(col("ingest") =!= lit(ex)))
-    val visible = StoreFs.tombstones(spark, path).fold(scoped)(t =>
-      scoped.join(broadcast(t.toDF("h")), Seq("h"), "left_anti"))
-    visible.join(hashes.select(col("h")).distinct(), Seq("h"), "left_semi")
-      .groupBy(col("h")).agg(sum(col("cnt")).as("prior"))
-  }
+      excludeIngest: Option[String]): DataFrame =
+    digestPrior(spark, path, hashes, p.nShards, excludeIngest)
 
   /** One micro-batch: digest grams, decide duplication against the
     * CUMULATIVE df (committed store excluding this batch's own
@@ -115,12 +86,7 @@ object SubstringStore extends MaintainedStore {
     val counts = grams.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     try {
-      val totals =
-        if (!StoreFs.hasCommittedData(spark, path))
-          counts.withColumn("__tot", col("cnt"))
-        else counts
-          .join(priorDf(spark, path, counts, p, Some(ingest)), Seq("h"), "left")
-          .withColumn("__tot", col("cnt") + coalesce(col("prior"), lit(0L)))
+      val totals = withCumulative(spark, path, counts, p.nShards, ingest)
       // agg-then-rejoin over the gram stream: merge hint (the r13 rule —
       // the digest side is gram-mass-sized on mostly-unique text)
       val scored = grams
@@ -132,9 +98,7 @@ object SubstringStore extends MaintainedStore {
           expr("dup_spans * 1000000L DIV total_spans").as("dup_ppm"))
         .localCheckpoint() // evaluate the decision ONCE, before any write
       val noGrams = scored.isEmpty
-      if (!noGrams)
-        scored.write.mode("overwrite")
-          .parquet(scoredPath + "/ingest=" + ingest)
+      if (!noGrams) writeSideSink(scored, scoredPath, ingest)
       // scored is empty IFF no doc emitted a gram IFF counts is empty
       // (every gram belongs to a doc and every doc with >= 1 gram gets
       // a scored row) — reuse the checkpointed decision instead of
@@ -155,15 +119,9 @@ object SubstringStore extends MaintainedStore {
       p: Params = Params())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(p.k >= 1, s"gram length must be >= 1: ${p.k}")
-    val key = StoreFs.streamKey(checkpoint)
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, s"b${batchId}_$key", idCol, textCol, path,
-          scoredPath, p)
-      }
-      .start()
+    ingestStream(stream, checkpoint) { (batch, ingest, _) =>
+      processBatch(batch, ingest, idCol, textCol, path, scoredPath, p)
+    }
   }
 
   /** The id rule: every delete must name its column `h`, not just
@@ -177,18 +135,9 @@ object SubstringStore extends MaintainedStore {
     ids
   }
 
-  /** Compact ([[MaintainedStore.compactWith]]): fold every per-batch
-    * `ingest=` partition into `ingest=base` with ONE row per surviving
-    * digest. Counts are additive, so probe results are identical by
+  /** Compact ([[compactCounts]]): probe results are identical by
     * construction (spec-asserted). */
   def compact(spark: SparkSession, path: String,
       p: Params = Params()): Unit =
-    compactWith(spark, path) { (_, rows, staged) =>
-      rows.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
-        .withColumn("shard", shardOf(col("h"), p.nShards))
-        .withColumn("ingest", lit("base"))
-        .repartition(p.nShards, col("shard"))
-        .write.partitionBy("ingest", "shard").mode("overwrite")
-        .parquet(staged)
-    }
+    compactCounts(spark, path, p.nShards)
 }

@@ -25,10 +25,8 @@ import graft.operators.Vamana
   * serializes writers vs maintenance, and foreachBatch is sequential
   * within a stream.
   *
-  * Crash-replay idempotence is the SignatureStore contract verbatim:
-  * the batch's insertion reads the store EXCLUDING its own ingest
-  * partition and rewrites that partition with dynamic overwrite —
-  * a replayed batch recomputes bit-identically (the whole build is
+  * Crash replay follows the keyed-ingest contract ([[StoreFs]]): a
+  * replayed batch recomputes bit-identically (the whole build is
   * exact-integer; VamanaStoreSpec replays and compares bytes).
   * Batch rows whose id already exists in the visible store are
   * DROPPED (re-ingest is a no-op; delete-then-reinsert goes through
@@ -64,12 +62,9 @@ object VamanaStore extends MaintainedStore {
     * probe's job. */
   private[graft] def visibleRows(spark: SparkSession, path: String,
       excludeIngest: Option[String]): DataFrame = {
-    val all = spark.read.parquet(path)
-    val scoped = excludeIngest
-      .fold(all)(ex => all.filter(col("ingest") =!= lit(ex)))
     // latest-per-id: max_by over seq; ids are unique per seq so the
     // (seq) ordering is total per id
-    scoped
+    replayScoped(spark.read.parquet(path), excludeIngest)
       .groupBy(col("shard"), col("id"))
       .agg(max_by(struct(col("vec6"), col("nbrs"), col("medoid")),
         col("seq")).as("__r"), max(col("seq")).as("seq"))
@@ -89,8 +84,9 @@ object VamanaStore extends MaintainedStore {
       p: Vamana.Params): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    StoreFs.failIfLeased(spark, lockPath(path),
-      s"VamanaStore write (ingest=$ingest)")
+    // fail fast: a batch of already-stored ids writes nothing, and the
+    // insert pass is the costly part
+    failIfLeased(spark, path, ingest)
     // lift with Vamana.lift6 (Math.round) — SQL round() is HALF_UP and
     // diverges on negative .5 boundaries (the r10 replica distinction).
     // Null/empty vectors (and null ids) are DROPPED before the lift —
@@ -155,13 +151,10 @@ object VamanaStore extends MaintainedStore {
         }
       }
       .toDF("shard", "id", "vec6", "nbrs", "medoid", "seq")
-      .withColumn("ingest", lit(ingest))
       .localCheckpoint() // decide fully before touching the store
     if (!out.isEmpty)
-      out.repartition(p.nShards, col("shard"))
-        .write.partitionBy("ingest", "shard").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
+      writeIngest(path, ingest, out.repartition(p.nShards, col("shard")),
+        Seq("shard"))
   }
 
   /** Drain a vector stream with AvailableNow: each micro-batch runs
@@ -169,17 +162,10 @@ object VamanaStore extends MaintainedStore {
     * the store contract; one stream per store between compactions. */
   def ingest(stream: DataFrame, idCol: String, vecCol: String,
       path: String, checkpoint: String, p: Vamana.Params)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val key = StoreFs.streamKey(checkpoint)
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, s"b${batchId}_$key", batchId, idCol, vecCol,
-          path, p)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestStream(stream, checkpoint) { (batch, ingest, batchId) =>
+      processBatch(batch, ingest, batchId, idCol, vecCol, path, p)
+    }
 
   /** Batch scatter-gather probe — ONE materialization of each shard's
     * graph amortized over every probe in `probes` (probeIdCol,

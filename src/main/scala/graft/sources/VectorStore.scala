@@ -49,9 +49,9 @@ object VectorStore extends MaintainedStore {
     * (task, bucket), because every file's footer, `.crc` and
     * permission calls cost more than a micro-batch's bytes
     * ([[StoreFs.writePartitioned]]). This is the `foreachBatch` body
-    * of a streaming ingest ([[appendStream]]); idempotence across batch
-    * replays comes from the streaming checkpoint, as in
-    * `Streams.runIngest`. */
+    * of a streaming ingest ([[appendStream]]). It appends plainly, so a
+    * replayed batch appends its rows again: delivery into the store is
+    * at-least-once. */
   def append(df: DataFrame, idCol: String, vecCol: String, path: String,
       nBits: Int = 4): Unit =
     StoreFs.writePartitioned(withBucket(df, idCol, vecCol, nBits), "bucket",
@@ -67,17 +67,17 @@ object VectorStore extends MaintainedStore {
     * [[append]], so it adds one file per bucket directory it touches,
     * whatever the batch's task count. A store built by streaming
     * micro-batches equals a batch-built store — asserted in
-    * VectorStoreSpec. */
+    * VectorStoreSpec. Delivery is AT-LEAST-ONCE: a batch whose append
+    * landed but whose checkpoint commit did not (a crash between the
+    * two) is appended again on restart, so its rows are stored twice.
+    * The keyed stores' replay rule ([[StoreFs]]) would need an `ingest`
+    * level under `bucket`, a layout change. */
   def appendStream(stream: DataFrame, idCol: String, vecCol: String,
       path: String, checkpoint: String,
       nBits: Int = 4): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        append(batch, idCol, vecCol, path, nBits)
-      }
-      .start()
+    graft.streaming.Streams.drain(stream, checkpoint) { (batch, _) =>
+      append(batch, idCol, vecCol, path, nBits)
+    }
 
   // --- deletes (the StoreFs protocol) ---------------------------------
 

@@ -31,11 +31,8 @@ import graft.operators.Dedup
   * any time and are IDENTICAL to `Dedup.winnowedNearDups` on the same
   * documents (spec-asserted).
   *
-  * Crash-replay idempotence is the SignatureStore contract verbatim:
-  * both sinks write under the batch's own `ingest=b<id>_<ckpt-hash>`
-  * partition with dynamic overwrite and the match decision EXCLUDES
-  * that partition from the store it reads. Maintenance is the
-  * [[StoreFs]] protocol. Deletes are by DOC id (single column `doc`):
+  * Crash replay follows the keyed-ingest contract ([[StoreFs]]), and
+  * maintenance is the [[StoreFs]] protocol. Deletes are by DOC id (single column `doc`):
   * a deleted document stops matching at once. */
 object WinnowStore extends MaintainedStore {
 
@@ -57,20 +54,13 @@ object WinnowStore extends MaintainedStore {
       .select(substring(col("__mk"), 1, 32).as("fp"), col("doc"))
       .distinct()
 
-  /** Idempotent per-micro-batch store write; fails fast on the
-    * compactor lease. */
+  /** Idempotent per-micro-batch store write, one file per shard
+    * directory ([[MaintainedStore.writeIngest]]). */
   private[graft] def appendBatch(sel: DataFrame, path: String,
-      ingest: String, p: Params): Unit = {
-    StoreFs.failIfLeased(sel.sparkSession, lockPath(path),
-      s"WinnowStore write (ingest=$ingest)")
-    sel
+      ingest: String, p: Params): Unit =
+    writeIngest(path, ingest, sel
       .withColumn("shard", shardOf(col("fp"), p.nShards))
-      .withColumn("ingest", lit(ingest))
-      .repartition(p.nShards, col("shard"))
-      .write.partitionBy("ingest", "shard").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(path)
-  }
+      .repartition(p.nShards, col("shard")), Seq("shard"))
 
   /** The store's visible distinct (fp, doc) rows: shard-pruned to the
     * probe's fingerprints when given, `excludeIngest` scopes a replay
@@ -87,11 +77,8 @@ object WinnowStore extends MaintainedStore {
           .join(fps.select(col("fp")).distinct(), Seq("fp"), "left_semi")
       case None => spark.read.parquet(path)
     }
-    val scoped = excludeIngest
-      .fold(stored0)(ex => stored0.filter(col("ingest") =!= lit(ex)))
-    val visible = StoreFs.tombstones(spark, path).fold(scoped)(t =>
-      scoped.join(broadcast(t.toDF("doc")), Seq("doc"), "left_anti"))
-    visible.select(col("fp"), col("doc")).distinct()
+    replayVisible(spark, path, stored0, excludeIngest)
+      .select(col("fp"), col("doc")).distinct()
   }
 
   /** Cross-batch MOSS matching: pairs (id_a < id_b, n_shared ≥
@@ -134,8 +121,7 @@ object WinnowStore extends MaintainedStore {
     val sel = batchSelections(batch, idCol, textCol, p).localCheckpoint()
     val pairs = matchBatch(spark, sel, path, p, Some(ingest))
       .localCheckpoint() // decide ONCE, before either write
-    if (!pairs.isEmpty)
-      pairs.write.mode("overwrite").parquet(pairsPath + "/ingest=" + ingest)
+    if (!pairs.isEmpty) writeSideSink(pairs, pairsPath, ingest)
     if (!sel.isEmpty) appendBatch(sel, path, ingest, p)
   }
 
@@ -146,17 +132,10 @@ object WinnowStore extends MaintainedStore {
   def ingestMatch(stream: DataFrame, idCol: String, textCol: String,
       path: String, pairsPath: String, checkpoint: String,
       p: Params = Params())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val key = StoreFs.streamKey(checkpoint)
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, s"b${batchId}_$key", idCol, textCol, path,
-          pairsPath, p)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestStream(stream, checkpoint) { (batch, ingest, _) =>
+      processBatch(batch, ingest, idCol, textCol, path, pairsPath, p)
+    }
 
   /** Whole-store q171 matching — IDENTICAL to
     * `Dedup.winnowedNearDups` over the ingested documents (same

@@ -83,19 +83,52 @@ object Streams {
       .withColumnRenamed("props", "body")
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
+    drain(stream, checkpoint)(ingestBatch(_, _, outDir))
+  }
+
+  /** One [[runIngest]] micro-batch: the transformed rows replace the
+    * batch's own `__batch_id` partition of `outDir`. */
+  private[graft] def ingestBatch(batch: DataFrame, batchId: Long,
+      outDir: String): Unit =
+    ingestTransform(batch)
+      .withColumn("__batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__batch_id")
+      .parquet(outDir)
+
+  /** The one micro-batch drain every streamed surface runs on:
+    * AvailableNow processes the backlog present at start and stops,
+    * checkpointing each batch to `checkpoint`. A batch whose sink
+    * writes landed but whose commit did not is re-run with the same
+    * id and the same input after a restart, so `body` must reproduce
+    * its own output (each surface's replay rule is in its scaladoc). */
+  def drain(stream: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestTransform(batch)
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id")
-          .parquet(outDir)
-      }
+      .foreachBatch(body)
       .start()
-  }
+
+  /** The one retention rule for per-batch state under
+    * `stateDir/batch=<id>`: a batch reads only batch id−1's state (and
+    * its replay reads the same), so every dir at id−2 and older is
+    * dead. Batch 0 is a fresh checkpoint, so every other `batch=` dir
+    * is a prior run's against a reused `stateDir`; it goes too, or a
+    * reader of the newest state would serve the old run's. */
+  private[graft] def pruneState(spark: SparkSession, stateDir: String,
+      batchId: Long): Unit =
+    dropBatchDirs(spark, stateDir, "batch=")(b =>
+      b <= batchId - 2 || (batchId == 0L && b != 0L))
+
+  /** Delete every `<prefix><id>` child of `dir` whose id is `stale`. */
+  private[graft] def dropBatchDirs(spark: SparkSession, dir: String,
+      prefix: String)(stale: Long => Boolean): Unit =
+    graft.sources.StoreFs.childNames(spark, dir)
+      .filter(_.startsWith(prefix))
+      .filter(n => stale(n.drop(prefix.length).toLong))
+      .foreach(n => graft.sources.StoreFs.delete(spark, s"$dir/$n"))
 
   /** ST6 — stateful mid-stream lookup as a stream-static join: each
     * reaction micro-batch joins the STATIC message store to format the
@@ -156,8 +189,6 @@ object Streams {
       .start()
   }
 
-  /** Watermarked tumbling-window aggregation (ST5): 1-hour windows on
-    * event time, 2-hour watermark for late data. */
   /** Streaming continuation of [[graft.operators.Analytics.rollingAnomaly]]:
     * per-key trailing-window anomaly flags over a micro-batch stream,
     * with the lookback context carried across batches as durable state
@@ -169,8 +200,8 @@ object Streams {
     * State rides `stateDir/batch=<id>` with the packStream replay
     * contract: the read is batch id−1's state, the write overwrites
     * batch id's own dirs (state AND output), so a crash between write
-    * and checkpoint commit replays bit-identically; state at id−2 and
-    * older is pruned. State volume is |keys|·window rows — bounded by
+    * and checkpoint commit replays bit-identically; [[pruneState]] keeps
+    * only ids id−1..id. State volume is |keys|·window rows — bounded by
     * construction, never the stream's history. Out-of-order rows are
     * judged against whatever context the bounded state still holds —
     * the inherent trade of bounded streaming state (same contract as
@@ -179,14 +210,10 @@ object Streams {
       orderCols: Seq[String], valueCol: String, window: Int, k: Int,
       minPeriods: Int, stateDir: String, outDir: String,
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        anomalyBatch(batch, batchId, keyCol, orderCols, valueCol,
-          window, k, minPeriods, stateDir, outDir)
-      }
-      .start()
+    drain(stream, checkpoint) { (batch, batchId) =>
+      anomalyBatch(batch, batchId, keyCol, orderCols, valueCol,
+        window, k, minPeriods, stateDir, outDir)
+    }
 
   private def anomalyStatePath(stateDir: String, batchId: Long): String =
     s"$stateDir/batch=$batchId"
@@ -216,11 +243,7 @@ object Streams {
       .select(cols :+ row_number().over(w).as("__rn"): _*)
       .filter(col("__rn") <= window).drop("__rn")
       .write.mode("overwrite").parquet(anomalyStatePath(stateDir, batchId))
-    graft.sources.StoreFs.childNames(spark, stateDir)
-      .filter(_.startsWith("batch=")).map(_.drop(6).toLong)
-      .filter(_ <= batchId - 2)
-      .foreach(b => graft.sources.StoreFs.delete(spark,
-        anomalyStatePath(stateDir, b)))
+    pruneState(spark, stateDir, batchId)
   }
 
   /** Streaming distribution-drift monitor — q143's PSI as a per-batch
@@ -239,14 +262,10 @@ object Streams {
   def driftStream(stream: DataFrame, groupCol: String, valueCol: String,
       bucketWidth: Double, stateDir: String, outDir: String,
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        driftBatch(batch, batchId, groupCol, valueCol, bucketWidth,
-          stateDir, outDir)
-      }
-      .start()
+    drain(stream, checkpoint) { (batch, batchId) =>
+      driftBatch(batch, batchId, groupCol, valueCol, bucketWidth,
+        stateDir, outDir)
+    }
 
   private[graft] def driftBatch(batch: DataFrame, batchId: Long,
       groupCol: String, valueCol: String, bucketWidth: Double,
@@ -264,11 +283,7 @@ object Streams {
     cur.unionByName(prev)
       .groupBy(col("dd_g"), col("dd_b")).agg(sum(col("c")).as("c"))
       .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-    graft.sources.StoreFs.childNames(spark, stateDir)
-      .filter(_.startsWith("batch=")).map(_.drop(6).toLong)
-      .filter(_ <= batchId - 2)
-      .foreach(b => graft.sources.StoreFs.delete(spark,
-        s"$stateDir/batch=$b"))
+    pruneState(spark, stateDir, batchId)
   }
 
   /** Streaming curation-funnel observability — q199's per-micro-batch
@@ -288,13 +303,9 @@ object Streams {
       stages: Seq[(String, DataFrame => DataFrame)],
       stateDir: String, outDir: String, checkpoint: String)
       : StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        funnelBatch(batch, batchId, stages, stateDir, outDir)
-      }
-      .start()
+    drain(stream, checkpoint) { (batch, batchId) =>
+      funnelBatch(batch, batchId, stages, stateDir, outDir)
+    }
 
   private[graft] def funnelBatch(batch: DataFrame, batchId: Long,
       stages: Seq[(String, DataFrame => DataFrame)],
@@ -318,11 +329,7 @@ object Streams {
       .orderBy(col("stage_idx"))
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     cum.write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-    graft.sources.StoreFs.childNames(spark, stateDir)
-      .filter(_.startsWith("batch=")).map(_.drop(6).toLong)
-      .filter(_ <= batchId - 2)
-      .foreach(b => graft.sources.StoreFs.delete(spark,
-        s"$stateDir/batch=$b"))
+    pruneState(spark, stateDir, batchId)
   }
 
   /** Streaming exact-quantile monitor — q41's stateful continuation:
@@ -338,14 +345,10 @@ object Streams {
   def quantileStream(stream: DataFrame, groupCol: String,
       valueCol: String, stateDir: String, outDir: String,
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        quantileBatch(batch, batchId, groupCol, valueCol, stateDir,
-          outDir)
-      }
-      .start()
+    drain(stream, checkpoint) { (batch, batchId) =>
+      quantileBatch(batch, batchId, groupCol, valueCol, stateDir,
+        outDir)
+    }
 
   private[graft] def quantileBatch(batch: DataFrame, batchId: Long,
       groupCol: String, valueCol: String, stateDir: String,
@@ -363,11 +366,7 @@ object Streams {
     Analytics.quantilesFromHist(merged, groupCol)
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     merged.write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-    graft.sources.StoreFs.childNames(spark, stateDir)
-      .filter(_.startsWith("batch=")).map(_.drop(6).toLong)
-      .filter(_ <= batchId - 2)
-      .foreach(b => graft.sources.StoreFs.delete(spark,
-        s"$stateDir/batch=$b"))
+    pruneState(spark, stateDir, batchId)
   }
 
   /** Streaming KMV distinct-count monitor — q181's stateful
@@ -383,13 +382,9 @@ object Streams {
   def kmvStream(stream: DataFrame, groupCol: String, valueCol: String,
       k: Int, stateDir: String, outDir: String,
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        kmvBatch(batch, batchId, groupCol, valueCol, k, stateDir, outDir)
-      }
-      .start()
+    drain(stream, checkpoint) { (batch, batchId) =>
+      kmvBatch(batch, batchId, groupCol, valueCol, k, stateDir, outDir)
+    }
 
   private[graft] def kmvBatch(batch: DataFrame, batchId: Long,
       groupCol: String, valueCol: String, k: Int, stateDir: String,
@@ -419,11 +414,7 @@ object Streams {
           .as("n_est"))
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     merged.write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-    graft.sources.StoreFs.childNames(spark, stateDir)
-      .filter(_.startsWith("batch=")).map(_.drop(6).toLong)
-      .filter(_ <= batchId - 2)
-      .foreach(b => graft.sources.StoreFs.delete(spark,
-        s"$stateDir/batch=$b"))
+    pruneState(spark, stateDir, batchId)
   }
 
   /** Streaming EXACT-count stratified sampler — q177's stateful
@@ -446,14 +437,10 @@ object Streams {
   def stratifiedStream(stream: DataFrame, idCol: String,
       strataCol: String, budget: Long, stateDir: String, outDir: String,
       checkpoint: String, maxStrata: Int = 1 << 20): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        stratifiedBatch(batch, batchId, idCol, strataCol, budget,
-          stateDir, outDir, maxStrata)
-      }
-      .start()
+    drain(stream, checkpoint) { (batch, batchId) =>
+      stratifiedBatch(batch, batchId, idCol, strataCol, budget,
+        stateDir, outDir, maxStrata)
+    }
 
   private[graft] def stratifiedBatch(batch: DataFrame, batchId: Long,
       idCol: String, strataCol: String, budget: Long, stateDir: String,
@@ -510,11 +497,7 @@ object Streams {
       .parquet(s"$stateDir/batch=$batchId/list")
     counts.write.mode("overwrite")
       .parquet(s"$stateDir/batch=$batchId/counts")
-    graft.sources.StoreFs.childNames(spark, stateDir)
-      .filter(_.startsWith("batch=")).map(_.drop(6).toLong)
-      .filter(_ <= batchId - 2)
-      .foreach(b => graft.sources.StoreFs.delete(spark,
-        s"$stateDir/batch=$b"))
+    pruneState(spark, stateDir, batchId)
   }
 
   /** Streaming period-over-period movers — q192's stateful
@@ -532,14 +515,10 @@ object Streams {
   def moversStream(stream: DataFrame, keyCol: String, tsCol: String,
       periodUs: Long, k: Int, stateDir: String, outDir: String,
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        moversBatch(batch, batchId, keyCol, tsCol, periodUs, k,
-          stateDir, outDir)
-      }
-      .start()
+    drain(stream, checkpoint) { (batch, batchId) =>
+      moversBatch(batch, batchId, keyCol, tsCol, periodUs, k,
+        stateDir, outDir)
+    }
 
   private[graft] def moversBatch(batch: DataFrame, batchId: Long,
       keyCol: String, tsCol: String, periodUs: Long, k: Int,
@@ -578,11 +557,7 @@ object Streams {
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     kept.select(col("__k"), col("__p"), col("__n"))
       .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-    graft.sources.StoreFs.childNames(spark, stateDir)
-      .filter(_.startsWith("batch=")).map(_.drop(6).toLong)
-      .filter(_ <= batchId - 2)
-      .foreach(b => graft.sources.StoreFs.delete(spark,
-        s"$stateDir/batch=$b"))
+    pruneState(spark, stateDir, batchId)
   }
 
   /** Streaming Markov transition monitor — q166's stateful
@@ -601,14 +576,10 @@ object Streams {
   def transitionStream(stream: DataFrame, keyCol: String,
       orderCols: Seq[String], stateCol: String, stateDir: String,
       outDir: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        transitionBatch(batch, batchId, keyCol, orderCols, stateCol,
-          stateDir, outDir)
-      }
-      .start()
+    drain(stream, checkpoint) { (batch, batchId) =>
+      transitionBatch(batch, batchId, keyCol, orderCols, stateCol,
+        stateDir, outDir)
+    }
 
   private[graft] def transitionBatch(batch: DataFrame, batchId: Long,
       keyCol: String, orderCols: Seq[String], stateCol: String,
@@ -651,13 +622,11 @@ object Streams {
     union.select(cols :+ row_number().over(wd).as("__rn"): _*)
       .filter(col("__rn") === 1).drop("__rn")
       .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId/last")
-    graft.sources.StoreFs.childNames(spark, stateDir)
-      .filter(_.startsWith("batch=")).map(_.drop(6).toLong)
-      .filter(_ <= batchId - 2)
-      .foreach(b => graft.sources.StoreFs.delete(spark,
-        s"$stateDir/batch=$b"))
+    pruneState(spark, stateDir, batchId)
   }
 
+  /** Watermarked tumbling-window aggregation (ST5): 1-hour windows on
+    * event time, 2-hour watermark for late data. */
   def windowedCounts(stream: DataFrame): DataFrame =
     stream
       .withWatermark("ts", "2 hours")

@@ -52,18 +52,8 @@ object StreamScaleBench {
         .withColumnRenamed("props", "body")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
-      stream.writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$root/ingest_ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          graft.streaming.Streams.ingestTransform(batch)
-            .withColumn("__batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(s"$root/ingest_out")
-        }
-        .start()
+      graft.streaming.Streams.drain(stream, s"$root/ingest_ckpt")(
+        graft.streaming.Streams.ingestBatch(_, _, s"$root/ingest_out"))
     }
 
     // --- incremental store dedup (ST4/ST7: probe + keep + append) ---

@@ -216,6 +216,31 @@ class PackingSpec extends SparkSpec {
     assert(got === Seq((0L, 4L, 2L, 1, 4, 30L), (1L, 1L, 1L, 5, 5, 5L)))
   }
 
+  test("a fresh stream over reused dirs: batch 0 clears the prior run's " +
+      "emissions and state") {
+    import java.nio.file.Files
+    val tmp = "file://" + Files.createTempDirectory("graft_pack_reuse").toString
+    val (out, state) = (tmp + "/o", tmp + "/s")
+    def corpus(ids: Seq[Long]) = ids.map(i =>
+      (i, (0 until ((i % 7).toInt + 3)).map(j => ((i * 31 + j * 7) % 97).toInt)))
+      .toDF("doc_id", "toks")
+    // run A: three batches on one checkpoint
+    Seq(1L to 20L, 21L to 40L, 41L to 60L).zipWithIndex.foreach {
+      case (ids, b) =>
+        Packing.packBatch(corpus(ids), b.toLong, "doc_id", "toks", 16,
+          out, state)
+    }
+    // run B: a new checkpoint starts at batch 0 over the same dirs
+    val b = corpus(101L to 105L)
+    Packing.packBatch(b, 0L, "doc_id", "toks", 16, out, state)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy($"seq_id")
+      .as[(Long, Long, Long, Int, Int, Long)].collect().toSeq
+    assert(rows(Packing.packedResult(spark, out, state)) ===
+      rows(Packing.packSequences(b, "doc_id", "toks", 16)))
+    assert(graft.sources.StoreFs.childNames(spark, state)
+      .filter(_.startsWith("batch=")) === Seq("batch=0"))
+  }
+
   test("paddingEfficiency: hand-exact bucket ladder, chunked oversize " +
       "docs, exact waste ppm, guards, partition independence") {
     import graft.operators.Packing

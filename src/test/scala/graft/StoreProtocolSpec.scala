@@ -9,18 +9,21 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The store maintenance protocol has one home, `StoreFs.scala`
   * (`StoreFs` + `MaintainedStore`): no other main source calls its
   * lease, swap or retry primitives, or defines a store's delete,
-  * reader retry or recover. */
+  * reader retry or recover. The micro-batch replay protocol has one
+  * home each: the drain and the state prune in `Streams`, the keyed
+  * store ingest on `MaintainedStore`. */
 class StoreProtocolSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
 
   /** `pattern`'s first group per match, as `file: group`, over every
-    * main source but StoreFs.scala. */
-  private def hits(pattern: scala.util.matching.Regex): List[String] = {
+    * main source but StoreFs.scala (or every one, `all`). */
+  private def hits(pattern: scala.util.matching.Regex,
+      all: Boolean = false): List[String] = {
     val stream = Files.walk(mainSrc)
     try stream.iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "StoreFs.scala")
+      .filter(p => all || p.getFileName.toString != "StoreFs.scala")
       .flatMap { p =>
         pattern.findAllMatchIn(Files.readString(p))
           .map(m => s"${mainSrc.relativize(p)}: ${m.group(1)}")
@@ -39,5 +42,33 @@ class StoreProtocolSpec extends AnyFunSuite {
     val offenders = hits("""\bdef\s+(delete|withReadRetry|recover)\b""".r)
     assert(offenders.isEmpty,
       s"inherit the StoreFs protocol from MaintainedStore: $offenders")
+  }
+
+  test("the AvailableNow drain is defined once, in Streams.drain") {
+    val found = hits("""(Trigger\.AvailableNow\(\)|"checkpointLocation")""".r,
+      all = true)
+    assert(found.sorted === List(
+      "graft/streaming/Streams.scala: \"checkpointLocation\"",
+      "graft/streaming/Streams.scala: Trigger.AvailableNow()"),
+      s"drain through Streams.drain: $found")
+  }
+
+  test("no store source but StoreFs writes with dynamic partition overwrite") {
+    val offenders = hits("""(partitionOverwriteMode)""".r)
+      .filter(_.startsWith("graft/sources/"))
+    assert(offenders.isEmpty,
+      s"write a batch through MaintainedStore.writeIngest: $offenders")
+  }
+
+  test("the ingest key is built only in StoreFs") {
+    val offenders = hits("""(streamKey\s*\(|b\$\{batchId\}_)""".r)
+    assert(offenders.isEmpty,
+      s"key a store batch through MaintainedStore.ingestStream: $offenders")
+  }
+
+  test("the batch-state prune is defined once, in Streams.pruneState") {
+    val found = hits("""(batchId\s*-\s*2)""".r, all = true)
+    assert(found === List("graft/streaming/Streams.scala: batchId - 2"),
+      s"prune per-batch state through Streams.pruneState: $found")
   }
 }
