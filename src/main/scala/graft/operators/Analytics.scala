@@ -25,6 +25,13 @@ object Analytics {
   def davg(c: Column): Column =
     sum(c.cast(DecimalType(18, 4))).cast("double") / count(c)
 
+  /** The 6-dp lift (the q104 discipline): round to 6 dp, then
+    * DECIMAL(18,6) → ×1e6 → BIGINT, so sums and products of lifted
+    * terms are exact integers in both engines and every later
+    * decimal→double conversion is of an integer. */
+  def lift6(c: Column): Column =
+    round(c, 6).cast(DecimalType(18, 6)).multiply(lit(1000000)).cast("long")
+
   /** TPC-H Q1-shaped pricing summary over lineitem. */
   def pricingSummary(lineitem: DataFrame): DataFrame =
     lineitem
@@ -108,154 +115,128 @@ object Analytics {
       dsum(col("l_quantity")).as("sum_qty"),
       max(col("l_extendedprice")).as("max_price"))
 
-  /** Exact interpolated quantiles per group. Oracle-expressible
-    * because both engines interpolate over the sorted exact values;
-    * the interpolation below replicates Spark's `Percentile` formula
-    * exactly — position = p·(n−1), and (ceil−pos)·lower +
-    * (pos−floor)·upper when the position is fractional — so the
-    * output is bit-identical to the built-in (spec-asserted).
+  /** The one cumulative-rank kernel of the quantile family. `rows`
+    * carry (`groupCol`, `valueCol`) and a non-negative integral
+    * `weight`: `lit(1L)` for raw rows, the count column for a
+    * (group, value) histogram. Adds each row's cumulative rank range
+    * `[__lo, __hi)`, the 0-based weighted ranks its value holds in its
+    * group, and, with `withTotal`, the group's total weight `__n`.
     *
-    * SCALE SHAPE: the built-in `percentile` buffers EVERY row of a
-    * group inside one aggregation buffer — a 100× group is an executor
-    * OOM. This plan buffers no group: it ranks the RAW rows with an
-    * ordered window whose default RANGE frame counts all peers of the
-    * current value, so every copy of a value carries that value's
-    * cumulative count, and a peer-count window recovers the exclusive
-    * lower bound. Broadcast group totals and conditional aggregates
-    * then select the two bracketing values per percentile. Spark's
-    * window sort is a spill-able external sort, so memory per task is
-    * bounded by the spill threshold regardless of group size. The
-    * price is shuffle volume: the window exchange moves every row, so
-    * it grows with rows, not with distinct values — duplicates do not
-    * collapse before the shuffle. [[quantilesFromHist]] remains for
-    * the streaming twin (`Streams.quantileStream`), whose state IS an
-    * additive per-(group, value) histogram. [[quantilesApprox]]
-    * remains the sketch alternative when a rank-error tolerance is
-    * acceptable. */
-  def quantiles(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    // raw rows, not a per-(group, value) pre-aggregate: on near-unique
-    // value columns the pre-aggregate collapsed nothing yet cost a
-    // full-stream exchange + hash agg (OPTIMIZATION_r21.md). Batch and
-    // stream share the interpolation via [[quantilesFromCum]].
-    val rows = df.select(col(groupCol), col(valueCol).as("__v"))
-    val nn = rows.filter(col("__v").isNotNull)
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("__v"))
-    val wp = Window.partitionBy(col(groupCol), col("__v"))
-    val totals = nn.groupBy(col(groupCol)).agg(count(lit(1)).as("__n"))
-    val cum = nn
-      .withColumn("__hi", sum(lit(1L)).over(w))
-      .withColumn("__lo",
-        (col("__hi") - count(lit(1)).over(wp)).cast("double"))
-      .withColumn("__hid", col("__hi").cast("double"))
-      .join(broadcast(totals), Seq(groupCol))
-    quantilesFromCum(cum, rows.select(col(groupCol)).distinct(), groupCol)
+    * Peers: `__hi` is ONE ordered per-group window sum whose default
+    * RANGE frame sums every peer of the current value, so each copy of
+    * a value carries exactly the cumulative weight the (group, value)
+    * histogram gives it, and raw rows and histogram rows select the
+    * same values. `__lo` subtracts the value's peer weight: the row's
+    * own weight when the rows are already one per (group, value)
+    * (`distinct`), otherwise a per-(group, value) window sum that
+    * rides the same exchange and sort (Catalyst drops it when no
+    * picker reads `__lo`). `__n` is a group aggregate of the same rows
+    * joined back by broadcast (one row per group).
+    *
+    * Scale shape: no group is ever buffered whole (the built-in
+    * `percentile` holds a group in one aggregation buffer, so a 100×
+    * group is an executor OOM): the window sort is Spark's spill-able
+    * external sort. The price is one exchange on the group that moves
+    * every input row, and one sort task per group. Raw rows skip the
+    * pre-aggregate, which collapses nothing on near-unique values
+    * (OPTIMIZATION_r21.md); histogram rows collapse duplicates before
+    * the exchange. */
+  private[graft] def rankRange(rows: DataFrame, groupCol: String,
+      valueCol: String, weight: Column = lit(1L), distinct: Boolean = false,
+      withTotal: Boolean = true): DataFrame = {
+    val byValue = Window.partitionBy(col(groupCol)).orderBy(col(valueCol))
+    val peers =
+      if (distinct) weight
+      else sum(weight).over(Window.partitionBy(col(groupCol), col(valueCol)))
+    val cum = rows.withColumn("__hi", sum(weight).over(byValue))
+      .withColumn("__lo", col("__hi") - peers)
+    if (!withTotal) cum
+    else cum.join(broadcast(rows.groupBy(col(groupCol))
+      .agg(sum(weight).as("__n"))), Seq(groupCol))
   }
 
-  /** The rank math of [[quantiles]] over a precomputed additive
-    * (group, __v, __cnt) histogram. */
-  private[graft] def quantilesFromHist(all: DataFrame,
-      groupCol: String): DataFrame = {
-    // the null-filtered view feeds the rank math, while the
-    // unfiltered histogram also yields every group key — so a group
-    // whose values are all null still emits a row (null p50/p90/p99),
-    // matching the built-in `percentile` contract. Both views share the
-    // same aggregate subtree, so the exchange is reused and the source
-    // is scanned once.
-    val hist = all.filter(col("__v").isNotNull)
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("__v"))
-    // group totals as a broadcast join, not a second (unordered) window
-    // pass over the histogram — the totals frame is one row per group.
-    // Derived from the HISTOGRAM (sum of counts), not from `rows`: the
-    // identical hist subtree lets Spark reuse the aggregate exchange,
-    // so the source table is scanned exactly once — a second full scan
-    // is real money at the 100 TB design point even when column-pruned
-    val totals = hist.groupBy(col(groupCol)).agg(sum(col("__cnt")).as("__n"))
-    val cum = hist
-      .withColumn("__hi", sum(col("__cnt")).over(w))
-      .withColumn("__lo", (col("__hi") - col("__cnt")).cast("double"))
-      .withColumn("__hid", col("__hi").cast("double"))
-      .join(broadcast(totals), Seq(groupCol))
-    // one row per group key seen in the input, even when every value
-    // was null (picked has no row there → outs evaluate to null, as
-    // the built-in does)
-    quantilesFromCum(cum, all.select(col(groupCol)).distinct(), groupCol)
-  }
-
-  /** The shared Percentile-formula rank math of [[quantiles]] (raw-row
-    * cums) and [[quantilesFromHist]] (additive-histogram cums): `cum`
-    * carries (`groupCol`, __v, __lo, __hid, __n) where a value's
-    * cumulative range [__lo, __hi) holds 0-based ranks __lo..__hi−1;
-    * `groups` is one row per group key (all-null groups emit null
-    * percentiles via the left join — the built-in contract). */
-  private def quantilesFromCum(cum: DataFrame, groups: DataFrame,
-      groupCol: String): DataFrame = {
-    val ps = Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99)
+  /** Interpolating picker over [[rankRange]] rows whose value is
+    * `__v`: Spark's `Percentile` formula exactly, position
+    * r = p·(n−1), the values at ranks ⌊r⌋ and ⌈r⌉, and
+    * (⌈r⌉−r)·lower + (r−⌊r⌋)·upper when r is fractional, so the output
+    * is bit-identical to the built-in. One row per group: `groupCol`
+    * and each named percentile, rounded to 6 dp. */
+  private def interpolate(cum: DataFrame, groupCol: String,
+      ps: Seq[(String, Double)]): DataFrame = {
     def pos(p: Double): Column = lit(p) * (col("__n") - 1).cast("double")
     def valueAtRank(k: Column): Column =
-      max(when(col("__lo") <= k && k < col("__hid"), col("__v")))
+      max(when(col("__lo") <= k && k < col("__hi"), col("__v")))
         .cast("double")
-    val aggs = ps.flatMap { case (nme, p) =>
-      Seq(valueAtRank(floor(pos(p)).cast("double")).as(s"__f_$nme"),
-        valueAtRank(ceil(pos(p)).cast("double")).as(s"__c_$nme"))
+    val picks = ps.flatMap { case (nme, p) =>
+      Seq(valueAtRank(floor(pos(p))).as(s"__f_$nme"),
+        valueAtRank(ceil(pos(p))).as(s"__c_$nme"))
     } :+ first(col("__n")).as("__n")
-    val picked = cum.groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
-    val outs = ps.map { case (nme, p) =>
-      val r = lit(p) * (col("__n") - 1).cast("double")
-      val kf = floor(r).cast("double")
-      val kc = ceil(r).cast("double")
-      val vf = col(s"__f_$nme")
-      val vc = col(s"__c_$nme")
-      round(when(kf === kc, vf)
-        .otherwise((kc - r) * vf + (r - kf) * vc), 6).as(nme)
-    }
-    groups.join(broadcast(picked), Seq(groupCol), "left")
-      .select(col(groupCol) +: outs: _*).orderBy(col(groupCol))
+    cum.groupBy(col(groupCol)).agg(picks.head, picks.tail: _*)
+      .select(col(groupCol) +: ps.map { case (nme, p) =>
+        val (r, vf, vc) = (pos(p), col(s"__f_$nme"), col(s"__c_$nme"))
+        round(when(floor(r) === ceil(r), vf)
+          .otherwise((ceil(r) - r) * vf + (r - floor(r)) * vc), 6).as(nme)
+      }: _*)
   }
 
-  /** Exact WEIGHTED quantiles per group (r17) — the token-budget
-    * question the unweighted q41 cannot answer: "the median document
+  /** Lower-rule picker over [[rankRange]] rows whose value is `__v`:
+    * the num/den quantile is the SMALLEST value whose cumulative weight
+    * `__hi` reaches ceil(W·num/den), W = `__n`. The threshold is pure
+    * BIGINT, `(W·num + den − 1) DIV den`, never a float of W, and the
+    * selection a conditional `min` of existing values: nothing is
+    * interpolated, so the result is bit-exact in any engine. One row
+    * per group: `groupCol`, `__n` and each named quantile. */
+  private def lowerRule(cum: DataFrame, groupCol: String,
+      ps: Seq[(String, Long, Long)]): DataFrame =
+    cum.groupBy(col(groupCol)).agg(first(col("__n")).as("__n"),
+      ps.map { case (nme, num, den) =>
+        min(when(col("__hi") >= expr(s"(__n * $num + ${den - 1}) div $den"),
+          col("__v"))).as(nme)
+      }: _*)
+
+  /** Exact interpolated quantiles (p50, p90, p99) per group over the
+    * raw rows: [[rankRange]] + [[interpolate]], bit-identical to the
+    * built-in `percentile` (spec-asserted) without buffering any group.
+    * A group whose values are all null keeps its row with null
+    * percentiles, as the built-in does; null values are not ranked.
+    * [[quantilesApprox]] is the sketch alternative when a rank-error
+    * tolerance is acceptable. */
+  def quantiles(df: DataFrame, groupCol: String, valueCol: String): DataFrame =
+    quantilesOf(df.select(col(groupCol), col(valueCol).as("__v")), groupCol,
+      lit(1L), distinct = false)
+
+  /** [[quantiles]] over an additive (group, __v, __cnt) histogram: the
+    * state of the streaming twin, `Streams.quantileStream`. */
+  private[graft] def quantilesFromHist(all: DataFrame,
+      groupCol: String): DataFrame =
+    quantilesOf(all, groupCol, col("__cnt"), distinct = true)
+
+  private def quantilesOf(all: DataFrame, groupCol: String, weight: Column,
+      distinct: Boolean): DataFrame = {
+    val cum = rankRange(all.filter(col("__v").isNotNull), groupCol, "__v",
+      weight, distinct)
+    val picked = interpolate(cum, groupCol,
+      Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99))
+    all.select(col(groupCol)).distinct()
+      .join(broadcast(picked), Seq(groupCol), "left").orderBy(col(groupCol))
+  }
+
+  /** Exact WEIGHTED quantiles per group (r17): the token-budget
+    * question the unweighted q41 cannot answer ("the median document
     * BY TOKEN MASS", "the price below which half the shipped quantity
-    * sits". Lower-value rule, fully integer-exact: with integral
-    * weights, the q-quantile is the SMALLEST value whose cumulative
-    * weight reaches ceil(W·num/den) — thresholds in pure BIGINT
-    * arithmetic (never a float of W), selection a conditional `min`
-    * of EXISTING values (no interpolation ⇒ nothing to replicate,
-    * bit-exact cross-engine by construction). Weights must be
-    * non-negative integers after the `cast("long")`; null values /
-    * weights drop. Output wide: (group, p25, p50, p75).
-    *
-    * Scale shape (r21, guide §2.4): the cumulative weight rides the
-    * RAW row stream — the ordered window's default RANGE frame sums
-    * ALL peers of the current value, so every copy of a value carries
-    * exactly the per-(group, value) histogram's cumulative weight and
-    * the selected quantile values are identical with or without the
-    * pre-aggregate. On near-unique value columns the per-(group,
-    * value) groupBy collapsed nothing yet cost a full-stream exchange
-    * + hash aggregate (measured: 1.42 → 1.08-1.37 s BenchOne at
-    * sf0.1 dropping it); broadcast totals come from a map-side-combined
-    * group aggregate of the same scan. One full-stream exchange total
-    * (the window's), spill-able sort, same serial-per-group regime
-    * the histogram window already had. */
+    * sits"). [[rankRange]] over the raw rows weighted by `weightCol`,
+    * then [[lowerRule]]: fully integer-exact. Weights must be
+    * non-negative integers after the `cast("long")`; null values or
+    * weights drop. Output wide: (group, p25, p50, p75). */
   def weightedQuantiles(df: DataFrame, groupCol: String, valueCol: String,
       weightCol: String): DataFrame = {
-    val ps = Seq("p25" -> ((1L, 4L)), "p50" -> ((1L, 2L)),
-      "p75" -> ((3L, 4L)))
     val base = df
       .filter(col(valueCol).isNotNull && col(weightCol).isNotNull)
       .select(col(groupCol), col(valueCol).as("__v"),
         col(weightCol).cast("long").as("__w"))
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("__v"))
-    val totals = base.groupBy(col(groupCol)).agg(sum(col("__w")).as("__tw"))
-    val cum = base
-      .withColumn("__cw", sum(col("__w")).over(w))
-      .join(broadcast(totals), Seq(groupCol))
-    val aggs = ps.map { case (nme, (num, den)) =>
-      // ceil(W·num/den) in exact integers: (W·num + den − 1) DIV den
-      val t = expr(s"(__tw * $num + ${den - 1}) div $den")
-      min(when(col("__cw") >= t, col("__v"))).as(nme)
-    }
-    cum.groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
-      .orderBy(col(groupCol))
+    lowerRule(rankRange(base, groupCol, "__v", col("__w")), groupCol,
+      Seq(("p25", 1L, 4L), ("p50", 1L, 2L), ("p75", 3L, 4L)))
+      .drop("__n").orderBy(col(groupCol))
   }
 
   /** Scale-safe quantiles: `approx_percentile` (Greenwald-Khanna
@@ -314,28 +295,21 @@ object Analytics {
         lit(s"quantilesHdr: negative value in $valueCol: "),
         col(valueCol).cast("string"))))
     val hist = df.filter(col(valueCol).isNotNull)
-      .select(col(groupCol), guarded.as("__v"))
-      .withColumn("__e", (length(bin(col("__v"))) - 1).cast("int"))
+      .select(col(groupCol), guarded.as("__u"))
+      .withColumn("__e", (length(bin(col("__u"))) - 1).cast("int"))
       // bucket id: small values map to themselves (ids 0..2^(m+1)-1);
       // past that, (exponent << m) | top-m mantissa bits — monotone in
       // the value, ids from (m+1)·2^m up, no overlap with the small
       // range
-      .withColumn("__bkt", when(col("__e") <= m, col("__v"))
+      .withColumn("__v", when(col("__e") <= m, col("__u"))
         .otherwise(expr(s"shiftleft(cast(__e as bigint), $m) + " +
-          s"(shiftright(__v, __e - $m) & ${sub - 1})")))
-      .groupBy(col(groupCol), col("__bkt"))
+          s"(shiftright(__u, __e - $m) & ${sub - 1})")))
+      .groupBy(col(groupCol), col("__v"))
       .agg(count(lit(1)).as("__cnt"))
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("__bkt"))
-    val totals = hist.groupBy(col(groupCol)).agg(sum(col("__cnt")).as("__n"))
-    val cum = hist.withColumn("__cum", sum(col("__cnt")).over(w))
-      .join(broadcast(totals), Seq(groupCol))
-    // nearest-rank ceil(p·n) in pure integers: (n·num + 99) DIV 100
-    def pick(num: Int): Column =
-      min(when(col("__cum") >= expr(s"(__n * $num + 99) div 100"),
-        col("__bkt")))
-    val picked = cum.groupBy(col(groupCol)).agg(
-      pick(50).as("__b50"), pick(90).as("__b90"), pick(99).as("__b99"),
-      first(col("__n")).as("n"))
+    // nearest rank ceil(p·n) is the lower rule at den = 100
+    val picked = lowerRule(
+      rankRange(hist, groupCol, "__v", col("__cnt"), distinct = true),
+      groupCol, Seq(50L, 90L, 99L).map(q => (s"__b$q", q, 100L)))
     // bucket → exact lower bound (centi-units), then one exact-integer
     // division to the reported estimate
     def lb(b: String): Column =
@@ -344,7 +318,7 @@ object Analytics {
           s"shiftleft($b & ${sub - 1}, cast(shiftright($b, $m) as int) - $m)"))
     def est(b: String, out: String): Column =
       round(lb(b).cast("double") / lit(100.0), 6).as(out)
-    picked.select(col(groupCol), col("n"),
+    picked.select(col(groupCol), col("__n").as("n"),
       est("__b50", "p50_est"), est("__b90", "p90_est"), est("__b99", "p99_est"))
       .orderBy(col(groupCol))
   }
@@ -380,8 +354,6 @@ object Analytics {
       (col("n_a") + col("n_bins")).cast("double")
     val pb = (col("__cb") + 1).cast("double") /
       (col("n_b") + col("n_bins")).cast("double")
-    def lift6(c: Column): Column =
-      round(c, 6).cast(DecimalType(18, 6)).multiply(lit(1000000)).cast("long")
     val term = lift6(pa - pb) * lift6(log(pa / pb))
     j.groupBy(col(keyCol)).agg(
       first(col("n_a")).as("n_a"), first(col("n_b")).as("n_b"),
@@ -606,43 +578,6 @@ object Analytics {
       .orderBy(col(keyCol), col("span_start"))
   }
 
-  /** Exact per-group median straight off (`__g`, `__v`) ROWS — the
-    * q174 raw-stream discipline: the ordered window's default RANGE
-    * frame sums all peers, so every copy of a value carries the
-    * per-(group, value) histogram's cumulative count, and the peer
-    * count recovers the exclusive lower bound — no pre-aggregate, no
-    * aggregate exchange (r21; the pre-r21 hist shape cost two extra
-    * full-stream exchanges and its 18-scan initial plan paid ~4 more
-    * AQE stage materializations). Value-identical to the histogram
-    * form by the peers argument. */
-  private def medianFromRows(rows: DataFrame, outCol: String): DataFrame = {
-    val w = Window.partitionBy(col("__g")).orderBy(col("__v"))
-    val wp = Window.partitionBy(col("__g"), col("__v"))
-    val totals = rows.groupBy(col("__g")).agg(count(lit(1)).as("__n"))
-    val cum = rows
-      .withColumn("__hi", sum(lit(1L)).over(w))
-      .withColumn("__lo",
-        (col("__hi") - count(lit(1)).over(wp)).cast("double"))
-      .withColumn("__hid", col("__hi").cast("double"))
-      .join(broadcast(totals), Seq("__g"))
-    val r = lit(0.5) * (col("__n") - 1).cast("double")
-    def valueAtRank(k: Column): Column =
-      max(when(col("__lo") <= k && k < col("__hid"), col("__v")))
-        .cast("double")
-    cum.groupBy(col("__g"))
-      .agg(valueAtRank(floor(r).cast("double")).as("__vf"),
-        valueAtRank(ceil(r).cast("double")).as("__vc"),
-        first(col("__n")).as("__n"))
-      .select(col("__g"), {
-        val rr = lit(0.5) * (col("__n") - 1).cast("double")
-        val kf = floor(rr).cast("double")
-        val kc = ceil(rr).cast("double")
-        round(when(kf === kc, col("__vf"))
-          .otherwise((kc - rr) * col("__vf") + (rr - kf) * col("__vc")), 6)
-          .as(outCol)
-      })
-  }
-
   /** Robust per-group outlier detection via median absolute deviation —
     * the quality-curation anomaly gate (MAD tolerates the very
     * outliers it hunts, unlike mean/stddev z-scores where one huge
@@ -651,13 +586,11 @@ object Analytics {
     * MAD to σ-equivalents under normality and kMilli=3500 is the
     * conventional 3.5σ fence.
     *
-    * Exact and engine-replayable end to end: both medians come from
-    * [[medianFromRows]] (the q41 interpolation formula over raw-row
-    * RANGE-frame cums — value-identical to the histogram plan, two
-    * exchanges cheaper each; the MAD rows derive from the value rows
-    * by a broadcast |x − med| projection);
-    * the fence comparison lifts 6-dp deviation and MAD to 1e6-scaled
-    * integers (the q104 lift) and compares
+    * Exact and engine-replayable end to end: both medians are
+    * [[rankRange]] over the raw rows + [[interpolate]] at p = 0.5 (the
+    * MAD rows derive from the value rows by a broadcast |x − med|
+    * projection); the fence comparison lifts 6-dp deviation and MAD
+    * to 1e6-scaled integers ([[lift6]]) and compares
     * devL·10⁷ > madL·14826·kMilli in DECIMAL(38,0) — no float
     * boundary anywhere. A zero-MAD group (over half its mass on one
     * value) flags every row off the median, with a null robust_z.
@@ -668,14 +601,11 @@ object Analytics {
     val rows = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("__g"), col(idCol).as("__id"),
         col(valueCol).cast("double").as("__x"))
-    val med = medianFromRows(
-      rows.select(col("__g"), col("__x").as("__v")), "med")
-    val devRows = rows.join(broadcast(med), Seq("__g"))
-      .select(col("__g"), abs(col("__x") - col("med")).as("__v"))
-    val mad = medianFromRows(devRows, "mad")
-    def lift6(c: Column): Column =
-      round(c, 6).cast(DecimalType(18, 6)).multiply(lit(1000000))
-        .cast("long")
+    def median(vs: DataFrame, out: String): DataFrame =
+      interpolate(rankRange(vs, "__g", "__v"), "__g", Seq(out -> 0.5))
+    val med = median(rows.select(col("__g"), col("__x").as("__v")), "med")
+    val mad = median(rows.join(broadcast(med), Seq("__g"))
+      .select(col("__g"), abs(col("__x") - col("med")).as("__v")), "mad")
     val big = DecimalType(38, 0)
     rows.join(broadcast(med), Seq("__g")).join(broadcast(mad), Seq("__g"))
       .withColumn("__devl", lift6(abs(col("__x") - col("med"))))
@@ -719,9 +649,6 @@ object Analytics {
       minPeriods: Int = 4): DataFrame = {
     require(window >= 1 && k >= 1 && minPeriods >= 1 && minPeriods <= window,
       s"bad window/k/minPeriods: $window/$k/$minPeriods")
-    def lift6(c: Column): Column =
-      round(c, 6).cast(DecimalType(18, 6)).multiply(lit(1000000))
-        .cast("long")
     val med = DecimalType(19, 0)
     val w = Window.partitionBy(col(keyCol))
       .orderBy(orderCols.map(col): _*)
@@ -1003,8 +930,6 @@ object Analytics {
     * half of [[distributionDrift]], unchanged. */
   private[graft] def driftFromCounts(aCounts: DataFrame, bCounts: DataFrame,
       groupCol: String): DataFrame = {
-    def lift6(c: Column): Column =
-      round(c, 6).cast(DecimalType(18, 6)).multiply(lit(1000000)).cast("long")
     val j = aCounts.select(col("dd_g"), col("dd_b"), col("c").as("c_a"))
       .join(bCounts.select(col("dd_g"), col("dd_b"), col("c").as("c_b")),
         Seq("dd_g", "dd_b"), "full_outer")
@@ -1138,9 +1063,6 @@ object Analytics {
   def tailIndex(df: DataFrame, groupCol: String, valueCol: String,
       k: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    def lift6(c: Column): Column =
-      round(c, 6).cast(DecimalType(18, 6))
-        .multiply(lit(1000000)).cast("long")
     // ties in the window order are harmless — equal values give equal
     // ln terms, so the summed top-k multiset is tie-order invariant
     val w = Window.partitionBy(col("__g")).orderBy(col("__v").desc)
@@ -1244,11 +1166,9 @@ object Analytics {
   def concentration(df: DataFrame, groupCol: String, valueCol: String)
       : DataFrame = {
     val dec = DecimalType(38, 0)
-    val v6 = round(col(valueCol), 6).cast(DecimalType(18, 6))
-      .multiply(lit(1000000)).cast("long")
     val lifted = df
       .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(groupCol).as("cc_g"), v6.as("__v6"))
+      .select(col(groupCol).as("cc_g"), lift6(col(valueCol)).as("__v6"))
     val w = Window.partitionBy(col("cc_g")).orderBy(col("__v6").desc)
     val ranked = lifted.withColumn("__i", row_number().over(w))
     val tot = lifted.groupBy(col("cc_g"))
@@ -1350,9 +1270,6 @@ object Analytics {
     * the per-key max rejoined under an explicit `merge` hint. */
   def changePoint(df: DataFrame, keyCol: String, tsCol: String,
       seqCol: String, valueCol: String): DataFrame = {
-    def lift6(c: Column): Column =
-      round(c, 6).cast(DecimalType(18, 6)).multiply(lit(1000000))
-        .cast("long")
     val dec = DecimalType(38, 0)
     val wOrd = Window.partitionBy(col(keyCol))
       .orderBy(col(tsCol), col(seqCol))
@@ -1556,8 +1473,6 @@ object Analytics {
       orderCols: Seq[String], valueCol: String, lag: Int): DataFrame = {
     require(lag >= 1, s"lag must be >= 1: $lag")
     val dec = DecimalType(38, 0)
-    def lift6(c: Column): Column =
-      round(c, 6).cast(DecimalType(18, 6)).multiply(lit(1000000)).cast("long")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(keyCol)).orderBy(orderCols.map(col): _*)
     val p = df
@@ -1716,28 +1631,28 @@ object Analytics {
     * q146's Pearson (monotone association, outlier-immune: one corrupt
     * price can't swing it) with TIE-EXACT fractional ranks: a value
     * tied m times gets the average of its rank block. Ranks are
-    * DOUBLED to stay integral (avg rank = (2·cum_before + m + 1)/2 ⇒
-    * r2 = 2·cum_before + m + 1 — exact BIGINT at any group size), so
-    * Spearman is Pearson over exact integers: DECIMAL(38,0) moments
-    * (HUGEINT in the oracle), one IEEE sqrt/divide tree at the end
-    * (the q146 discipline; the doubling cancels in the ratio).
+    * DOUBLED to stay integral: over a value's [[rankRange]]
+    * [lo, hi) the average 1-based rank is (lo + hi + 1)/2, so
+    * r2 = lo + hi + 1, exact BIGINT at any group size. Spearman is then
+    * Pearson over exact integers: DECIMAL(38,0) moments (HUGEINT in the
+    * oracle), one IEEE sqrt/divide tree at the end (the q146
+    * discipline; the doubling cancels in the ratio).
     *
-    * Scale shape: two per-(group, value) histograms (map-side
-    * combine) + spill-able ordered windows (the q41 plan), rank
-    * tables rejoined merge-hinted (the r13 agg-rejoin lesson), one
-    * moments aggregate. Rows with a null group/x/y drop (pairwise
+    * Scale shape: each rank column is [[rankRange]] over a
+    * per-(group, value) histogram (map-side combine; no group totals),
+    * the rank tables rejoined merge-hinted (the r13 agg-rejoin lesson),
+    * one moments aggregate. Rows with a null group/x/y drop (pairwise
     * deletion is Pearson's contract; Spearman ranks both columns over
     * the SAME row set, so deletion must precede ranking). Zero
     * variance in either rank column (all-tied) reads NULL.
     *
     * r21 tried and REVERTED by measurement: ranks as row-stream
-    * windows (r2 = 2·rank() + peer_count − 1, one group exchange, no
-    * joins, 1 scan) read 2.51 s vs this shape's 1.56 BenchOne at
-    * sf0.1 — with few groups the full row stream serializes through
-    * per-group window tasks TWICE, while here only the value
-    * histogram's ordered window is serial and the rank rejoins sort
-    * in parallel. Don't re-derive (the r20 fan rejection is the same
-    * lesson from the other side). */
+    * windows (one group exchange, no joins, 1 scan) read 2.51 s vs
+    * this shape's 1.56 BenchOne at sf0.1. With few groups the full row
+    * stream serializes through per-group window tasks TWICE, while
+    * here only the value histogram's ordered window is serial and the
+    * rank rejoins sort in parallel. Don't re-derive (the r20 fan
+    * rejection is the same lesson from the other side). */
   def spearman(df: DataFrame, groupCol: String, xCol: String,
       yCol: String): DataFrame = {
     val dec = DecimalType(38, 0)
@@ -1745,16 +1660,11 @@ object Analytics {
         col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("__g"), col(xCol).as("__x"),
         col(yCol).as("__y"))
-    def ranks(vc: String, out: String): DataFrame = {
-      val w = Window.partitionBy(col("__g")).orderBy(col(vc))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      base.groupBy(col("__g"), col(vc))
-        .agg(count(lit(1)).as("__c"))
-        .withColumn("__cum", sum(col("__c")).over(w))
+    def ranks(vc: String, out: String): DataFrame =
+      rankRange(base.groupBy(col("__g"), col(vc)).agg(count(lit(1)).as("__c")),
+        "__g", vc, col("__c"), distinct = true, withTotal = false)
         .select(col("__g"), col(vc),
-          (lit(2L) * (col("__cum") - col("__c")) + col("__c") + lit(1L))
-            .as(out))
-    }
+          (col("__lo") + col("__hi") + lit(1L)).as(out))
     val withR = base
       .join(ranks("__x", "__rx").hint("merge"), Seq("__g", "__x"))
       .join(ranks("__y", "__ry").hint("merge"), Seq("__g", "__y"))
@@ -1849,9 +1759,6 @@ object Analytics {
   def kaplanMeier(df: DataFrame, groupCol: String, userCol: String,
       tsCol: String, censorDays: Int = 7): DataFrame = {
     require(censorDays >= 0, s"censorDays must be >= 0: $censorDays")
-    def lift6(c: Column): Column =
-      round(c, 6).cast(DecimalType(18, 6))
-        .multiply(lit(1000000)).cast("long")
     val users = df
       .filter(col(groupCol).isNotNull && col(userCol).isNotNull &&
         col(tsCol).isNotNull)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.operators.Analytics.lift6
 
 /** Pretraining-corpus curation operators beyond the dedup ladder:
   * PII/URL scrubbing, within-document repetition statistics
@@ -317,9 +318,6 @@ object Curation {
       s"alphaPermille must be in [0, 1000]: $alphaPermille")
     require(budgetDocs > 0 && budgetDocs <= Long.MaxValue / 1000000L,
       s"budgetDocs must be in (0, 2^63/1e6]: $budgetDocs")
-    def lift6(c: Column): Column =
-      round(c, 6).cast(org.apache.spark.sql.types.DecimalType(18, 6))
-        .multiply(lit(1000000)).cast("long")
     // localCheckpoint the |strata|-row aggregate ONCE: lmax, wsum and
     // rates each sit in a separate broadcast subtree of the final plan,
     // and without the barrier every subtree recomputes the corpus scan
@@ -630,19 +628,18 @@ object Curation {
       .toDF("__s", "__quota")
     // phase A: bucket histogram of the LCG key (2^31 space / 2^20)
     val rows = base.withColumn("__hb", expr("__lcg DIV 1048576"))
-    val w = Window.partitionBy(col("__s")).orderBy(col("__hb"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = rows.groupBy(col("__s"), col("__hb"))
-      .agg(count(lit(1)).as("__c"))
-      .withColumn("__cum", sum(col("__c")).over(w))
+    // each bucket's cumulative count range [__lo, __hi) in its stratum
+    val cum = Analytics.rankRange(
+        rows.groupBy(col("__s"), col("__hb")).agg(count(lit(1)).as("__c")),
+        "__s", "__hb", col("__c"), distinct = true, withTotal = false)
       .join(broadcast(quotas), Seq("__s"))
       .localCheckpoint() // tiny; boundary + need both read it
-    val boundary = cum.filter(col("__cum") >= col("__quota"))
+    val boundary = cum.filter(col("__hi") >= col("__quota"))
       .groupBy(col("__s")).agg(min(col("__hb")).as("__bhb"))
     val bInfo = cum.join(broadcast(boundary), Seq("__s"))
       .filter(col("__hb") === col("__bhb"))
       .select(col("__s"), col("__bhb"),
-        (col("__quota") - (col("__cum") - col("__c"))).as("__need"))
+        (col("__quota") - col("__lo")).as("__need"))
     // phase B: earlier buckets keep outright; only the boundary slice
     // pays the exact (lcg, id) row_number cut
     val withB = rows.join(broadcast(bInfo), Seq("__s"))
@@ -1049,9 +1046,6 @@ object Curation {
     * stream. */
   def vocabDivergence(df: DataFrame, textCol: String, groupCol: String)
       : DataFrame = {
-    def lift6(c: Column): Column =
-      round(c, 6).cast(org.apache.spark.sql.types.DecimalType(18, 6))
-        .multiply(lit(1000000)).cast("long")
     val words = df
       .filter(col(textCol).isNotNull)
       .select(col(groupCol).as("vd_g"),
@@ -1306,9 +1300,6 @@ object Curation {
   def tfidfKeywords(df: DataFrame, idCol: String, textCol: String,
       k: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    def lift6ln(c: Column): Column =
-      round(log(c), 6).cast(org.apache.spark.sql.types.DecimalType(18, 6))
-        .multiply(lit(1000000)).cast("long")
     val words = df
       .filter(col(textCol).isNotNull)
       .select(col(idCol).as("tk_d"),
@@ -1324,8 +1315,8 @@ object Curation {
       .orderBy(col("__s6").desc, col("tk_w"))
     tf.join(dfw.hint("merge"), Seq("tk_w"))
       .crossJoin(broadcast(nd))
-      .withColumn("__s6", col("tf") * lift6ln(
-        col("__n_docs").cast("double") / col("df_w").cast("double")))
+      .withColumn("__s6", col("tf") * lift6(log(
+        col("__n_docs").cast("double") / col("df_w").cast("double"))))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("tk_d").as(idCol), col("rank"),
@@ -1360,9 +1351,6 @@ object Curation {
     * either column) are excluded. */
   def fieldAssociation(df: DataFrame, colA: String, colB: String)
       : DataFrame = {
-    def lift6(c: Column): Column =
-      round(c, 6).cast(org.apache.spark.sql.types.DecimalType(18, 6))
-        .multiply(lit(1000000)).cast("long")
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val base = df.filter(col(colA).isNotNull && col(colB).isNotNull)
       .select(col(colA).as("fa_a"), col(colB).as("fa_b"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 import graft.functions.TextOps
+import graft.operators.Analytics.lift6
 
 /** Deduplication operators for the training-data pipeline surface. The
   * reference has NO dedup at all — re-running ingest re-inserts every
@@ -578,9 +579,6 @@ object Dedup {
   def nearDupLinkPrediction(df: DataFrame, idCol: String,
       textCol: String, maxHamming: Int = 3, selfJoinBlocks: Int = 1,
       maxWedgeDegree: Int = 128): DataFrame = {
-    def lift6(c: Column): Column =
-      round(c, 6).cast(org.apache.spark.sql.types.DecimalType(18, 6))
-        .multiply(lit(1000000)).cast("long")
     val sigs = df.select(col(idCol).as("doc"), col(textCol))
       .repartition(par(df), col("doc"))
       .select(col("doc"), simhash(col(textCol), 64).as("sig"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorOps
+import graft.operators.Analytics.lift6
 
 /** Similarity search over an embedding column — the capability the
   * reference implies but never implements (pgvectorscale is installed
@@ -278,9 +279,6 @@ object Similarity {
   def centroidDrift(df: DataFrame, groupCol: String, vecCol: String,
       splitA: Column): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 12)
-    def lift6(c: Column): Column =
-      round(c, 6).cast(org.apache.spark.sql.types.DecimalType(18, 6))
-        .multiply(lit(1000000)).cast("long")
     val cells = df
       .select(col(groupCol).as("cd_g"), splitA.cast("boolean").as("cd_a"),
         posexplode(col(vecCol)).as(Seq("cd_pos", "cd_v")))
@@ -423,9 +421,6 @@ object Similarity {
   def embeddingAffinity(df: DataFrame, groupCol: String,
       vecCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 12)
-    def lift6(c: Column): Column =
-      round(c, 6).cast(org.apache.spark.sql.types.DecimalType(18, 6))
-        .multiply(lit(1000000)).cast("long")
     val cells = df.filter(col(groupCol).isNotNull)
       .select(col(groupCol).as("ea_g"),
         posexplode(col(vecCol)).as(Seq("ea_pos", "ea_v")))

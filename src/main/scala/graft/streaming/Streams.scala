@@ -338,10 +338,10 @@ object Streams {
     * driftStream state contract verbatim: read batch id−1, write own
     * `batch=<id>`, prune ≤ id−2 — crash-replay bit-identical). The
     * output of each batch equals `Analytics.quantiles` over the
-    * concatenation of all batches BY CONSTRUCTION — both run the same
-    * from-histogram rank math, and histogram merge is additive. State
-    * is bounded by groups × distinct values, the same spill posture
-    * as the batch plan. */
+    * concatenation of all batches BY CONSTRUCTION: histogram merge is
+    * additive, and both run the same rank kernel and picker, the
+    * stream over histogram rows weighted by their counts, the batch
+    * over raw rows. State is bounded by groups × distinct values. */
   def quantileStream(stream: DataFrame, groupCol: String,
       valueCol: String, stateDir: String, outDir: String,
       checkpoint: String): StreamingQuery =

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Plan-shape guards for the SURVEY §4 "free in Catalyst" claims: the
   * scale posture is enforced here, not hoped for — dimension joins must
@@ -200,5 +202,29 @@ class PlanShapeSpec extends SparkSpec {
     assert(!cl.contains("Window"), s"q160 grew a window:\n$cl")
     assert(cl.contains("partial_min") || cl.contains("partial_"),
       s"q160 lost map-side combine:\n$cl")
+  }
+
+  test("quantile family keeps its Exchange and Sort counts on the rank kernel") {
+    // (exchanges, sorts) of each consumer's initial physical plan,
+    // recorded before the family shared `Analytics.rankRange`: the
+    // kernel may not add a shuffle, broadcast or sort to any of them
+    val recorded = Map(
+      "q41_quantiles" -> ((9, 3)), "q116_hdr_quantiles" -> ((8, 2)),
+      "q124_robust_outliers" -> ((17, 7)),
+      "q174_weighted_quantiles" -> ((4, 2)),
+      "q177_stratified_exact" -> ((8, 2)), "q184_spearman" -> ((10, 7)))
+    val got = Seq("q41_quantiles", "q116_hdr_quantiles",
+        "q124_robust_outliers", "q174_weighted_quantiles",
+        "q177_stratified_exact", "q184_spearman").map { q =>
+      val plan = SparkEntry.queries(q)(spark, sf).queryExecution
+        .executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val nodes = plan.collectWithSubqueries { case n => n }
+      q -> ((nodes.count(_.isInstanceOf[Exchange]),
+        nodes.count(_.isInstanceOf[SortExec])))
+    }.toMap
+    assert(got === recorded)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.operators.{Chunker, Dedup}
+import graft.operators.{Analytics, Chunker, Dedup}
 import graft.functions.{TextOps, VectorOps}
 
 /** SURVEY §5.3 property tests. Inputs are ScalaCheck-generated (fixed
@@ -130,5 +130,138 @@ class PropertySpec extends SparkSpec {
         round(element_at($"__q", 3), 6).as("p99"))
       .orderBy($"g").collect().toSeq
     assert(viaHistogram === viaBuiltin)
+  }
+
+  // The quantile family's differential shape: a small value domain
+  // (heavy ties), ~10% nulls (Gen.option), group 0 holding most rows,
+  // and an all-null group 99 appended per test.
+  private val skewedGroup: Gen[Int] =
+    Gen.frequency(6 -> Gen.const(0), 4 -> Gen.chooseNum(1, 11))
+  private val smallValue: Gen[Double] = Gen.chooseNum(-50, 50).map(_ * 0.25)
+
+  /** Spark's `round(double, scale)` (HALF_UP over the decimal form). */
+  private def round6(d: Double): Double =
+    BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  test("weightedQuantiles == brute-force lower rule on random groups") {
+    val rows = sample(for {
+      g <- skewedGroup
+      v <- Gen.option(smallValue)
+      w <- Gen.option(Gen.chooseNum(0, 5))
+    } yield (g, v, w), 2500) ++ Seq.fill(5)((99, Option.empty[Double], Option(1)))
+    val got = Analytics.weightedQuantiles(rows.toDF("g", "v", "w"), "g", "v", "w")
+      .as[(Int, Double, Double, Double)].collect().toSeq
+    val expected = rows.collect { case (g, Some(v), Some(w)) => (g, v, w.toLong) }
+      .groupBy(_._1).toSeq.sortBy(_._1).map { case (g, rs) =>
+        val byValue = rs.groupBy(_._2).toSeq.sortBy(_._1)
+          .map { case (v, vs) => (v, vs.map(_._3).sum) }
+        val cums = byValue.map(_._1).zip(byValue.map(_._2).scan(0L)(_ + _).tail)
+        val total = cums.last._2
+        // smallest value whose cumulative weight reaches ceil(W·num/den)
+        def pick(num: Long, den: Long): Double =
+          cums.find(_._2 >= (total * num + den - 1) / den).get._1
+        (g, pick(1, 4), pick(1, 2), pick(3, 4))
+      }
+    assert(got === expected)
+  }
+
+  test("quantilesHdr == brute-force nearest rank over HDR buckets on random groups") {
+    val m = 5
+    val rows = sample(for {
+      g <- skewedGroup
+      v <- Gen.option(Gen.chooseNum(0, 400).map(_ * 0.25))
+    } yield (g, v), 2500) ++ Seq.fill(5)((99, Option.empty[Double]))
+    val got = Analytics.quantilesHdr(rows.toDF("g", "v"), "g", "v", m)
+      .as[(Int, Long, Double, Double, Double)].collect().toSeq
+    def bucket(centi: Long): Long = {
+      val e = 63 - java.lang.Long.numberOfLeadingZeros(centi)
+      if (e <= m) centi else (e.toLong << m) + ((centi >> (e - m)) & ((1L << m) - 1))
+    }
+    def lowerBound(b: Long): Long =
+      if (b < (2L << m)) b
+      else (1L << (b >> m)) + ((b & ((1L << m) - 1)) << ((b >> m) - m))
+    val expected = rows.collect { case (g, Some(v)) =>
+        (g, bucket(BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP)
+          .*(100).toLongExact))
+      }
+      .groupBy(_._1).toSeq.sortBy(_._1).map { case (g, rs) =>
+        val sorted = rs.map(_._2).sorted
+        val n = sorted.length.toLong
+        // nearest rank ceil(n·q/100), 1-based
+        def est(q: Long): Double =
+          round6(lowerBound(sorted(((n * q + 99) / 100 - 1).toInt)) / 100.0)
+        (g, n, est(50), est(90), est(99))
+      }
+    assert(got === expected)
+  }
+
+  test("spearman == brute-force average-rank Pearson on random groups") {
+    val rows = sample(for {
+      g <- skewedGroup
+      x <- Gen.option(smallValue)
+      y <- Gen.option(Gen.chooseNum(-8, 8).map(_ * 0.5))
+    } yield (g, x, y), 2500) ++ Seq.fill(5)((99, Option.empty[Double], Option(1.0)))
+    val got = Analytics.spearman(rows.toDF("g", "x", "y"), "g", "x", "y")
+      .as[(Int, Long, Option[Double])].collect().toSeq
+    // doubled average ranks: a value tied c times after `below` smaller
+    // rows holds ranks below+1..below+c, average (2·below + c + 1)/2
+    def ranks2(vs: Seq[Double]): Seq[BigInt] = {
+      val counts = vs.groupBy(identity).view.mapValues(_.size.toLong).toMap
+      val keys = counts.keys.toSeq.sorted
+      val below = keys.zip(keys.map(counts).scan(0L)(_ + _)).toMap
+      vs.map(v => BigInt(2 * below(v) + counts(v) + 1))
+    }
+    val expected = rows.collect { case (g, Some(x), Some(y)) => (g, x, y) }
+      .groupBy(_._1).toSeq.sortBy(_._1).map { case (g, rs) =>
+        val (rx, ry) = (ranks2(rs.map(_._2)), ranks2(rs.map(_._3)))
+        val n = BigInt(rs.length)
+        val (sx, sy) = (rx.sum, ry.sum)
+        val num = n * rx.zip(ry).map { case (a, b) => a * b }.sum - sx * sy
+        val da = n * rx.map(a => a * a).sum - sx * sx
+        val db = n * ry.map(b => b * b).sum - sy * sy
+        (g, rs.length.toLong, Option.when(da > 0 && db > 0)(round6(
+          num.toDouble / (math.sqrt(da.toDouble) * math.sqrt(db.toDouble)))))
+      }
+    assert(got === expected)
+  }
+
+  test("robustOutliers med/mad == built-in percentile on random groups") {
+    val kMilli = 500
+    // mostly the small domain, one row in ten a far outlier
+    val value = Gen.frequency(9 -> smallValue,
+      1 -> Gen.chooseNum(100, 200).map(_.toDouble))
+    val rows = sample(for { g <- skewedGroup; v <- Gen.option(value) }
+      yield (g, v), 2500).zipWithIndex
+      .map { case ((g, v), i) => (g, i.toLong, v) } ++
+      (0 until 5).map(i => (99, 10000L + i, Option.empty[Double]))
+    val df = rows.toDF("g", "id", "v")
+    val got = Analytics.robustOutliers(df, "g", "id", "v", kMilli)
+      .as[(Int, Long, Double, Double, Double, Option[Double])].collect().toSeq
+    val vals = df.filter($"v".isNotNull)
+    val med = vals.groupBy($"g").agg(round(percentile($"v", lit(0.5)), 6).as("med"))
+    val mad = vals.join(med, "g").groupBy($"g")
+      .agg(round(percentile(abs($"v" - $"med"), lit(0.5)), 6).as("mad"))
+    val mm = med.join(mad, "g").as[(Int, Double, Double)].collect()
+      .map { case (g, a, b) => g -> ((a, b)) }.toMap
+    // the fence in lifted integers: round 6 dp → DECIMAL(18,6) → ×1e6
+    def lift(d: Double): BigInt = {
+      val r = BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      (BigDecimal(r).setScale(6, BigDecimal.RoundingMode.HALF_UP) * 1000000)
+        .toBigInt
+    }
+    val expected = rows.collect { case (g, id, Some(v)) =>
+        val (md, ma) = mm(g)
+        val (devL, madL) = (lift(math.abs(v - md)), lift(ma))
+        (g, id, v, md, ma, devL, madL)
+      }
+      .filter { case (_, _, _, _, _, devL, madL) =>
+        devL * 10000000L > madL * 14826L * kMilli }
+      .map { case (g, id, v, md, ma, devL, madL) =>
+        (g, id, v, md, ma, Option.when(madL > 0)(
+          round6(devL.toDouble * 10000.0 / (madL.toDouble * 14826.0))))
+      }.sortBy(r => (r._1, r._2))
+    assert(expected.map(_._1).distinct.size >= 10,
+      "too few groups flag a row to show their med/mad")
+    assert(got === expected)
   }
 }

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * lease, swap or retry primitives, or defines a store's delete,
   * reader retry or recover. The micro-batch replay protocol has one
   * home each: the drain and the state prune in `Streams`, the keyed
-  * store ingest on `MaintainedStore`. */
+  * store ingest on `MaintainedStore`. So does the quantile family's
+  * rank math: the cumulative rank range in `Analytics.rankRange`, the
+  * interpolating and the lower-rule selections in its two pickers. */
 class StoreProtocolSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -70,5 +72,21 @@ class StoreProtocolSpec extends AnyFunSuite {
     val found = hits("""(batchId\s*-\s*2)""".r, all = true)
     assert(found === List("graft/streaming/Streams.scala: batchId - 2"),
       s"prune per-batch state through Streams.pruneState: $found")
+  }
+
+  test("the cumulative rank and its two selection rules are defined once") {
+    val analytics = "graft/operators/Analytics.scala"
+    val ranks = hits("""withColumn\(\s*"(__(?:hi|lo|hid|cum|cw))"""".r,
+      all = true)
+    assert(ranks.sorted === List(s"$analytics: __hi", s"$analytics: __lo"),
+      s"rank through Analytics.rankRange: $ranks")
+    val interpolated =
+      hits("""(def\s+valueAtRank|col\("__lo"\)\s*<=)""".r, all = true)
+    assert(interpolated.sorted === List(s"$analytics: col(\"__lo\") <=",
+      s"$analytics: def valueAtRank"),
+      s"interpolate through Analytics.interpolate: $interpolated")
+    val lower = hits("""\b(div (?:\$\{?\w+\}?|100\b))""".r, all = true)
+    assert(lower === List(s"$analytics: div $$den"),
+      s"pick the lower rule through Analytics.lowerRule: $lower")
   }
 }
