@@ -1996,8 +1996,8 @@ object SparkEntry {
 
     // pairwise source-contamination matrix: q105's corpus-vs-benchmark
     // overlap generalized to every source pair in one pass (distinct
-    // (source, shingle) aggregate + merge-hinted shingle self-join;
-    // pair cost bounded by |sources|² per shingle, never doc²).
+    // (source, shingle) aggregate + the shared-key pair kernel over
+    // sources; pair cost bounded by |sources|² per shingle, never doc²).
     "q134_source_overlap_matrix" -> ((s, d) =>
       Curation.sourceOverlapMatrix(fan(Tables.documents(s, d), "doc_id"),
         "source", "text", k = 3)),

@@ -225,10 +225,7 @@ object Curation {
         Dedup.shingles(col(textCol), shingleK).as("__bsh"))
     def banded(df: DataFrame, id: String, sh: String): DataFrame =
       df.withColumn("__sig", Dedup.minhashSignature(col(sh), nHashes))
-        .select(col(id), posexplode(transform(
-          sequence(lit(0), lit(nBands - 1)),
-          b => array_join(
-            slice(col("__sig"), b * rowsPerBand + 1, lit(rowsPerBand)), ":")))
+        .select(col(id), Dedup.bandKeys(col("__sig"), nBands, rowsPerBand, ":")
           .as(Seq("__band", "__bucket")))
     val candidates = banded(corp, "__cid", "__csh")
       .join(broadcast(banded(bench, "__bid", "__bsh")),
@@ -952,30 +949,26 @@ object Curation {
     * matrix is sparse by construction — a zero cell carries no row).
     *
     * Scale shape: one distinct (group, shingle) aggregate feeds
-    * everything; the shingle-keyed self-join is `merge`-hinted (both
-    * sides are the same aggregate — the AQE broadcast-estimate OOM
-    * hazard from the duplicatedSpans lesson) and its cost is
-    * Σ_sh df_g(sh)² bounded by vocab·|groups|² — a boilerplate
-    * shingle present in EVERY group costs |groups|² pairs, never
-    * doc² (contrast q22, where hot shingles pair documents). Group
-    * sizes broadcast back (|groups| rows). Returns (source_a,
-    * source_b, n_a, n_b, n_shared, jaccard) for source_a < source_b. */
+    * everything; the pairs are [[Dedup.sharedKeyPairs]] with the
+    * groups as its documents, so a boilerplate shingle present in
+    * EVERY group costs |groups|² pairs, never doc² (contrast q22,
+    * where hot shingles pair documents). Group sizes broadcast back
+    * (|groups| rows). Returns (source_a, source_b, n_a, n_b, n_shared,
+    * jaccard) for source_a < source_b. */
   def sourceOverlapMatrix(df: DataFrame, groupCol: String,
       textCol: String, k: Int): DataFrame = {
     val sh = df.filter(col(textCol).isNotNull)
-      .select(col(groupCol).as("__g"),
+      .select(col(groupCol).as("doc"),
         explode(Dedup.shingles(col(textCol), k)).as("__shingle"))
       .distinct()
       .localCheckpoint()
-    val sizes = sh.groupBy(col("__g")).agg(count(lit(1)).as("__n"))
-    val inter = sh.select(col("__g").as("source_a"), col("__shingle"))
-      .hint("merge")
-      .join(sh.select(col("__g").as("source_b"), col("__shingle")),
-        Seq("__shingle"))
-      .filter(col("source_a") < col("source_b"))
-      .groupBy(col("source_a"), col("source_b"))
-      .agg(count(lit(1)).as("n_shared"))
-    inter
+    val sizes = sh.groupBy(col("doc").as("__g")).agg(count(lit(1)).as("__n"))
+    // a cap no shingle reaches (its df counts groups) keeps the matrix
+    // exact on the kernel's capped plan, which never broadcasts the
+    // corpus-sized postings on an estimate
+    Dedup.sharedKeyPairs(sh, Nil, Seq("__shingle"), maxDf = Int.MaxValue - 1)
+      .select(col("id_a").as("source_a"), col("id_b").as("source_b"),
+        col("n_shared"))
       .join(broadcast(sizes.select(col("__g").as("source_a"),
         col("__n").as("n_a"))), Seq("source_a"))
       .join(broadcast(sizes.select(col("__g").as("source_b"),

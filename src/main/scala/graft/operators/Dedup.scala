@@ -55,8 +55,8 @@ object Dedup {
 
   /** MinHash + LSH banding near-dup candidates: split the signature
     * into `nBands` bands of `rowsPerBand`; documents sharing any band
-    * value are candidates; candidates are verified with exact Jaccard
-    * over shingle sets. The band equi-join is the scale path — the
+    * value are candidates ([[sharedKeyPairs]] over the band keys);
+    * candidates are verified with exact Jaccard over shingle sets. The
     * all-pairs comparison never materializes. */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, nBands: Int = 8, rowsPerBand: Int = 2,
@@ -69,32 +69,36 @@ object Dedup {
     val base = df.select(col(idCol).as("doc"), col(textCol))
       .repartition(par(df), col("doc"))
       .select(col("doc"), shingles(col(textCol), shingleK).as("sh"))
-    // Late materialization (same shape as the q48 vector LSH): only
-    // (band, bucket, doc) flows through the candidate equi-join — the
-    // shingle sets, the bulk of the shuffle bytes at scale, rejoin per
-    // SURVIVING distinct pair. The rejoin recomputes the shingle
-    // kernel per reference, which measured cheaper than materializing
-    // it (r5 CollapseProject finding).
+    // the shingle sets rejoin per candidate pair, recomputing the
+    // shingle kernel per reference, which measured cheaper than
+    // materializing it (r5 CollapseProject finding)
     val banded = base
       .withColumn("sig", minhashSignature(col("sh"), nHashes))
-      .select(col("doc"),
-        posexplode(transform(
-          sequence(lit(0), lit(nBands - 1)),
-          b => array_join(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), ":")))
-          .as(Seq("band", "bucket")))
-    val a = banded.select(col("band"), col("bucket"), col("doc").as("id_a"))
-    val b = banded.select(col("band"), col("bucket"), col("doc").as("id_b"))
-    val candidates = a.join(b, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
+      .select(col("doc"), bandKeys(col("sig"), nBands, rowsPerBand, ":")
+        .as(Seq("band", "bucket")))
+    sharedKeyPairs(banded, Nil, Seq("band", "bucket"))
       .select(col("id_a"), col("id_b"))
-      .distinct()
-    candidates
       .join(base.select(col("doc").as("id_a"), col("sh").as("__sha")), "id_a")
       .join(base.select(col("doc").as("id_b"), col("sh").as("__shb")), "id_b")
       .withColumn("jaccard", jaccard(col("__sha"), col("__shb")))
       .filter(col("jaccard") >= jaccardThreshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
+
+  /** LSH band keys: `posexplode` of the `nBands` consecutive
+    * `width`-element slices of a signature array, each joined with
+    * `sep` — alias it `(band, bucket)`. `SignatureStore` persists these
+    * strings, so their format is part of its store layout. */
+  private[graft] def bandKeys(sig: Column, nBands: Int, width: Int,
+      sep: String): Column =
+    posexplode(transform(sequence(lit(0), lit(nBands - 1)),
+      b => array_join(slice(sig, b * width + 1, lit(width)), sep)))
+
+  /** The four 16-bit bands of a 64-bit SimHash signature, low band
+    * first. */
+  private[graft] def simhashBands(sig: Column): Column =
+    array((0 until 4).map(b =>
+      shiftright(sig, 16 * b).bitwiseAND(lit(0xFFFFL))): _*)
 
   /** Exact Jaccard over two DISTINCT element arrays. */
   def jaccard(a: Column, b: Column): Column = {
@@ -146,10 +150,8 @@ object Dedup {
     * distinct signature). */
   private[graft] def simhashBandPairs(sigs: DataFrame, maxHamming: Int,
       selfJoinBlocks: Int = 1, subBandHotThreshold: Int = 0): DataFrame = {
-    val bandsArr = array((0 until 4).map(b =>
-      shiftright(col("sig"), 16 * b).bitwiseAND(lit(0xFFFFL))): _*)
     val banded = sigs.select(col("doc"), col("sig"),
-      posexplode(bandsArr).as(Seq("band", "half")))
+      posexplode(simhashBands(col("sig"))).as(Seq("band", "half")))
     // hamming-verify BEFORE dropDuplicates: the dedup is a full
     // shuffle of every candidate row, and on a dense signature cloud
     // candidates dwarf survivors (m10 scaling fixture: 61.6M bucket
@@ -1058,83 +1060,129 @@ object Dedup {
     df.join(pairs.select(col(dropCol).as(idCol)).distinct(),
       Seq(idCol), "left_anti")
 
-  /** Exact n-gram Jaccard near-dup pairs within a group, by the
-    * scalable explode-join formulation: explode each document's
-    * distinct shingle set, equi-join on (group, shingle), and COUNT the
-    * matches per pair — |A∩B| without ever materializing a quadratic
-    * pairwise array intersection. Cost is Σ_shingle |docs(shingle)|²,
-    * which for natural text is dominated by true near-dups — the same
-    * reason a shuffle join scales to 100 TB where the all-pairs
-    * `array_intersect` (quadratic in group size, recomputed per pair)
-    * does not. Pairs sharing zero shingles never appear, which is
-    * correct for any threshold > 0. Results identical to the all-pairs
-    * definition (arrays are distinct, so each common shingle counts
-    * once). */
+  /** The shared-key pair kernel of the near-dup family: every pair of
+    * documents that share at least one key, with how many they share.
+    * `postings` holds one DISTINCT row per (by…, key…, doc) — a
+    * document's shingles, winnowed fingerprints, char grams, blocking
+    * keys or LSH band buckets — plus riding columns that
+    * `pairPredicate` reads; the predicate names the two sides `a.<col>`
+    * and `b.<col>` and rides the join condition. Returns
+    * (by…, id_a, id_b, n_shared = the number of shared keys), one row
+    * per pair with id_a < id_b, plus `<c>_a` and `<c>_b` for each
+    * `carry` column, a per-doc value that rides the join.
+    *
+    * Cost: the self-join emits Σ_key df(key)² rows, which for natural
+    * text is dominated by true near-dups — but one stop-phrase key held
+    * by 1M docs adds 10^12. `maxDf` caps that: a key held by more than
+    * `maxDf` postings (per `by` group) is dropped before the join. Such
+    * keys are corpus boilerplate and carry no near-dup signal. A caller
+    * that also reads per-doc set sizes counts them over the same capped
+    * postings ([[shingleOverlap]]), so a capped similarity is the
+    * similarity of the capped SETS, in both the counts and the sizes.
+    *
+    * Join strategy. Capped, the postings pass ONE exchange on
+    * (by…, key…) ([[withDf]]): the df window, which also drops the keys
+    * held by a single posting (they pair with nothing, and they are
+    * most char grams and shingles), and both sides of a `shuffle_hash`
+    * self-join read it, so the per-row posting work runs once and no
+    * side broadcasts. Catalyst's size estimate of exploded postings runs
+    * far below their real size (q190 at sf0.1: 1.33M postings, a
+    * 240 MiB broadcast relation, estimated under the 10 MiB threshold),
+    * so an unhinted join would broadcast them. Uncapped (`Int.MaxValue`,
+    * the default), there is no df pass and no exchange of the postings,
+    * and Catalyst picks the join: it broadcasts a side estimated under
+    * the threshold, and the pair aggregate then runs on the streamed
+    * side's doc partitioning. That is the cheaper plan for small,
+    * bounded postings (q48's LSH bands read 1.8× slower at sf0.1 when
+    * shuffled), so a corpus-scale caller passes a cap.
+    *
+    * Late materialization: per-doc payload (texts, vectors, capped set
+    * sizes) joins the aggregated PAIRS, never rides the key stream
+    * through the self-join (riding the gram stream cost 2× at the m10
+    * scale fixture). A narrow value known before the join, such as an
+    * uncapped set size, is cheaper carried: its rejoin costs two more
+    * exchanges and a recomputed shingle kernel (q56 1.57 → 2.28 s at
+    * sf0.1). */
+  private[graft] def sharedKeyPairs(postings: DataFrame, by: Seq[String],
+      keys: Seq[String], maxDf: Int = Int.MaxValue,
+      pairPredicate: Column = lit(true), carry: Seq[String] = Nil): DataFrame = {
+    val on = by ++ keys
+    val (a, b) =
+      if (maxDf == Int.MaxValue) (postings.as("a"), postings.as("b"))
+      else {
+        val kept = withDf(postings, on)
+          .filter(col("__df").between(2, maxDf)).drop("__df")
+        (kept.as("a"), kept.as("b").hint("shuffle_hash"))
+      }
+    val shared = on.map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _)
+    a.join(b, shared && col("a.doc") < col("b.doc") && pairPredicate)
+      .select(by.map(c => col(s"a.$c")) ++ Seq(col("a.doc").as("id_a"),
+        col("b.doc").as("id_b")) ++ carry.flatMap(c =>
+        Seq(col(s"a.$c").as(s"${c}_a"), col(s"b.$c").as(s"${c}_b"))): _*)
+      .groupBy((by ++ Seq("id_a", "id_b") ++
+        carry.flatMap(c => Seq(s"${c}_a", s"${c}_b"))).map(col): _*)
+      .agg(count(lit(1)).as("n_shared"))
+  }
+
+  /** `postings` hash-partitioned on `keys`, each row with its key's df
+    * (`__df`, the key's posting count): one explicit-n exchange, so a
+    * small posting set is not coalesced into one task ahead of a large
+    * pair stream. */
+  private def withDf(postings: DataFrame, keys: Seq[String]): DataFrame =
+    postings.repartition(par(postings), keys.map(col): _*)
+      .withColumn("__df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)))
+
+  /** Word k-shingle overlap of every pair sharing a shingle within a
+    * `by` group: (by…, id_a, id_b, n_shared, __sza, __szb). Uncapped,
+    * the set sizes ride the kernel's join; capped, both are counted
+    * over the kernel's capped postings and rejoin the pairs,
+    * merge-hinted, as they are corpus-sized. `df` is parallelized
+    * first: the fixture tables are single-row-group files (one scan
+    * partition), so the per-row shingle kernel must run after an
+    * exchange or it executes on one core. */
+  private def shingleOverlap(df: DataFrame, by: Seq[String], idCol: String,
+      textCol: String, k: Int, maxDf: Int): DataFrame = {
+    val postings = df
+      .select(by.map(col) ++ Seq(col(idCol).as("doc"), col(textCol)): _*)
+      .repartition(par(df), col("doc"))
+      .select(by.map(col) ++ Seq(col("doc"),
+        shingles(col(textCol), k).as("sh")): _*)
+      .select(by.map(col) ++ Seq(col("doc"), size(col("sh")).as("sz"),
+        explode(col("sh")).as("s")): _*)
+    if (maxDf == Int.MaxValue)
+      sharedKeyPairs(postings, by, Seq("s"), carry = Seq("sz"))
+        .withColumnRenamed("sz_a", "__sza").withColumnRenamed("sz_b", "__szb")
+    else {
+      val sz = withDf(postings.drop("sz"), by :+ "s")
+        .filter(col("__df") <= maxDf)
+        .groupBy((by :+ "doc").map(col): _*).agg(count(lit(1)).as("sz"))
+      def sizeOf(id: String, as: String) = sz.select(by.map(col) ++
+        Seq(col("doc").as(id), col("sz").as(as)): _*).hint("merge")
+      sharedKeyPairs(postings.drop("sz"), by, Seq("s"), maxDf)
+        .join(sizeOf("id_a", "__sza"), by :+ "id_a")
+        .join(sizeOf("id_b", "__szb"), by :+ "id_b")
+    }
+  }
+
+  /** Exact n-gram Jaccard near-dup pairs within a group: the distinct
+    * word k-shingle sets meet in [[sharedKeyPairs]] on (group,
+    * shingle), so |A∩B| is a count per pair and the quadratic pairwise
+    * `array_intersect` never runs. Pairs sharing zero shingles never
+    * appear, which is correct for any threshold > 0. Results identical
+    * to the all-pairs definition (arrays are distinct, so each common
+    * shingle counts once). `maxShingleDf` is the kernel's hot-key cap:
+    * jaccard over the capped sets. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       groupCol: String, k: Int, threshold: Double,
-      maxShingleDf: Int = Int.MaxValue): DataFrame = {
-    // parallelize-first: the fixture tables are single-row-group files
-    // (one scan partition), so the per-row shingle transform must run
-    // after an exchange or it executes on one core
-    val base = df.select(col(groupCol).as("grp"), col(idCol).as("doc"), col(textCol))
-      .repartition(par(df), col("doc"))
-      .select(col("grp"), col("doc"), shingles(col(textCol), k).as("sh"))
-      .withColumn("sz", size(col("sh")))
-    // Hot-shingle skew guard for the 100 TB regime: the join cost is
-    // Σ_shingle df(shingle)², so one stop-phrase shingle shared by 1M
-    // docs adds 10^12 candidate rows. Shingles with df > maxShingleDf
-    // carry no dedup signal (they are corpus boilerplate by definition)
-    // and are dropped from the shingle SETS — both intersection counts
-    // and set sizes — i.e. jaccard over the capped sets. The hot set is
-    // tiny by construction (only shingles in >maxShingleDf docs), so it
-    // broadcasts. Default disables the guard and keeps the exact plan.
-    val pairs =
-      if (maxShingleDf == Int.MaxValue) {
-        val ex = base.select(col("grp"), col("doc"), col("sz"),
-          explode(col("sh")).as("s"))
-        val a = ex.select(col("grp"), col("s"), col("doc").as("id_a"),
-          col("sz").as("__sza"))
-        val b = ex.select(col("grp"), col("s"), col("doc").as("id_b"),
-          col("sz").as("__szb"))
-        a.join(b, Seq("grp", "s"))
-          .filter(col("id_a") < col("id_b"))
-          .groupBy(col("grp"), col("id_a"), col("id_b"),
-            col("__sza"), col("__szb"))
-          .agg(count(lit(1)).as("__inter"))
-      } else {
-        val ex0 = base.select(col("grp"), col("doc"), explode(col("sh")).as("s"))
-        val hot = ex0.groupBy(col("grp"), col("s"))
-          .agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxShingleDf)
-          .select(col("grp"), col("s"))
-        val kept = ex0.join(broadcast(hot), Seq("grp", "s"), "left_anti")
-        val cappedSz = kept.groupBy(col("grp"), col("doc"))
-          .agg(count(lit(1)).as("sz"))
-        // capped sizes LATE-MATERIALIZE onto the PAIR stream (r19): the
-        // intersection counts need only (grp, s, doc), so the sz rejoin
-        // runs against the aggregated pairs — duplicated-mass-sized —
-        // instead of the full gram stream (measured at m10: riding the
-        // gram stream cost 2× even with the broadcast AQE picks at
-        // fixture bytes). merge-hinted: per-doc counts are corpus-sized
-        // at 100 TB, past any broadcast (the r13 rule).
-        val a = kept.select(col("grp"), col("s"), col("doc").as("id_a"))
-        val b = kept.select(col("grp"), col("s"), col("doc").as("id_b"))
-        a.join(b, Seq("grp", "s"))
-          .filter(col("id_a") < col("id_b"))
-          .groupBy(col("grp"), col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("__inter"))
-          .join(cappedSz.select(col("grp"), col("doc").as("id_a"),
-            col("sz").as("__sza")).hint("merge"), Seq("grp", "id_a"))
-          .join(cappedSz.select(col("grp"), col("doc").as("id_b"),
-            col("sz").as("__szb")).hint("merge"), Seq("grp", "id_b"))
-      }
-    pairs
+      maxShingleDf: Int = Int.MaxValue): DataFrame =
+    shingleOverlap(df.select(col(groupCol).as("grp"), col(idCol), col(textCol)),
+        Seq("grp"), idCol, textCol, k, maxShingleDf)
       .withColumn("jaccard", round(
-        col("__inter").cast("double")
-          / (col("__sza") + col("__szb") - col("__inter")).cast("double"), 6))
+        col("n_shared").cast("double")
+          / (col("__sza") + col("__szb") - col("n_shared")).cast("double"), 6))
       .filter(col("jaccard") >= threshold)
       .select(col("grp"), col("id_a"), col("id_b"), col("jaccard"))
-  }
 
   /** Directional containment near-dup pairs — the ASYMMETRIC member
     * of the shingle family: contain(A→B) = |A∩B| / |A| over distinct
@@ -1144,11 +1192,9 @@ object Dedup {
     * a long one has contain(short→long) ≈ 1 while
     * jaccard ≈ |short|/|long| ≈ 0 — the quote/subset/excerpt relation
     * (Broder's containment, the original resemblance paper's second
-    * measure). Same shingle machinery, same Σdf² join cost and the
-    * same optional `maxShingleDf` boilerplate cap as
-    * [[ngramJaccardPairs]] (capped sets on BOTH counts — containment
-    * over the capped sets); both scores 6-dp rounded BEFORE the
-    * threshold (the q99 rule) so the keep set is bit-stable
+    * measure). Same shingle overlap as [[ngramJaccardPairs]],
+    * containment over the capped sets; both scores 6-dp rounded BEFORE
+    * the threshold (the q99 rule) so the keep set is bit-stable
     * cross-engine.
     *
     * The DEFAULT is the capped production regime (`maxShingleDf = 64`,
@@ -1160,51 +1206,16 @@ object Dedup {
     * `maxShingleDf = Int.MaxValue` explicitly (declared q191 does). */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int, threshold: Double,
-      maxShingleDf: Int = 64): DataFrame = {
-    val base = df.select(col(idCol).as("doc"), col(textCol))
-      .repartition(par(df), col("doc"))
-      .select(col("doc"), shingles(col(textCol), k).as("sh"))
-      .withColumn("sz", size(col("sh")))
-    val pairs =
-      if (maxShingleDf == Int.MaxValue) {
-        val ex = base.select(col("doc"), col("sz"), explode(col("sh")).as("s"))
-        val a = ex.select(col("s"), col("doc").as("id_a"), col("sz").as("__sza"))
-        val b = ex.select(col("s"), col("doc").as("id_b"), col("sz").as("__szb"))
-        a.join(b, Seq("s"))
-          .filter(col("id_a") < col("id_b"))
-          .groupBy(col("id_a"), col("id_b"), col("__sza"), col("__szb"))
-          .agg(count(lit(1)).as("__inter"))
-      } else {
-        val ex0 = base.select(col("doc"), explode(col("sh")).as("s"))
-        val hot = ex0.groupBy(col("s"))
-          .agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxShingleDf)
-          .select(col("s"))
-        val kept = ex0.join(broadcast(hot), Seq("s"), "left_anti")
-        val cappedSz = kept.groupBy(col("doc")).agg(count(lit(1)).as("sz"))
-        // capped sizes late-materialize onto the PAIR stream, merge-
-        // hinted — see ngramJaccardPairs (same r19 rewrite)
-        val a = kept.select(col("s"), col("doc").as("id_a"))
-        val b = kept.select(col("s"), col("doc").as("id_b"))
-        a.join(b, Seq("s"))
-          .filter(col("id_a") < col("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("__inter"))
-          .join(cappedSz.select(col("doc").as("id_a"),
-            col("sz").as("__sza")).hint("merge"), Seq("id_a"))
-          .join(cappedSz.select(col("doc").as("id_b"),
-            col("sz").as("__szb")).hint("merge"), Seq("id_b"))
-      }
-    pairs
+      maxShingleDf: Int = 64): DataFrame =
+    shingleOverlap(df, Nil, idCol, textCol, k, maxShingleDf)
       .withColumn("contain_ab", round(
-        col("__inter").cast("double") / col("__sza").cast("double"), 6))
+        col("n_shared").cast("double") / col("__sza").cast("double"), 6))
       .withColumn("contain_ba", round(
-        col("__inter").cast("double") / col("__szb").cast("double"), 6))
+        col("n_shared").cast("double") / col("__szb").cast("double"), 6))
       .filter(greatest(col("contain_ab"), col("contain_ba")) >= threshold)
       .select(col("id_a"), col("id_b"), col("contain_ab"),
         col("contain_ba"))
       .orderBy(col("id_a"), col("id_b"))
-  }
 
   /** Exact substring-span dedup (the char-level duplicated-content
     * metric of Lee et al. 2021, "Deduplicating Training Data Makes
@@ -1296,47 +1307,22 @@ object Dedup {
     * Completes the char-level family: q87 scores spans per DOC, q170/
     * q171 sample fingerprints, this enumerates the exact PAIRS.
     *
-    * Scale posture: grams digest to md5 hex (uniform 32-char key, the
-    * q170 idiom — bit-identical both engines so the oracle is pure
-    * ANSI); df per gram aggregates first and the rejoin carries
-    * `merge` (the agg-then-self-rejoin rule); grams with df >
-    * `maxGramDf` drop BEFORE the pair join — the cap is
-    * ANSI-expressible, so the declared query carries it and the
-    * oracle mirrors it (the q171 discipline; boilerplate substrings
-    * are exactly what it removes), bounding pair fan-out at
-    * C(maxGramDf, 2) per gram; the pair self-join carries
-    * `shuffle_hash` (hot-gram buckets must hash-partition, never
-    * broadcast — the q98 lesson). Linear in char mass up to the
-    * capped pair stream. */
+    * Grams digest to md5 hex (uniform 32-char key, the q170 idiom —
+    * bit-identical both engines so the oracle is pure ANSI), distinct
+    * per doc; the pairs are [[sharedKeyPairs]] over them, and its cap
+    * drops grams whose df exceeds `maxGramDf` — ANSI-expressible, so the
+    * declared query carries it and the oracle mirrors it (the q171
+    * discipline; boilerplate substrings are exactly what it removes).
+    * Linear in char mass up to the capped pair stream. */
   def sharedSubstringPairs(df: DataFrame, idCol: String, textCol: String,
       minLen: Int = 32, maxGramDf: Int = 64, minShared: Int = 1)
       : DataFrame = {
     require(minLen >= 1 && maxGramDf >= 2 && minShared >= 1,
       s"bad sharedSubstringPairs params ($minLen, $maxGramDf, $minShared)")
-    // r20 restructure (optimization guide §2.3/§2.4): the before-plan
-    // shuffled the RAW gram stream (corpus char mass) twice — once for
-    // the df groupBy and once (plus a sort) for the merge-hinted df
-    // rejoin. Now the stream collapses ONCE into the per-(fp, doc)
-    // occurrence aggregate (map-side combined); the occurrence df is a
-    // window count over that aggregate (one exchange, no join — the
-    // merge join the r18 note guarded against no longer exists), and
-    // the pair join both consumes the SAME fp-partitioned exchange
-    // (reused) and carries Σ occ_a·occ_b, which is exactly the old
-    // per-occurrence pair count. Result bit-identical; the df >= 2
-    // singleton filter and the cap are unchanged in meaning (df still
-    // counts occurrences).
-    val g2 = spanStream(df, idCol, textCol, minLen)
+    val grams = spanStream(df, idCol, textCol, minLen)
       .select(col("doc"), md5(col("span")).as("fp"))
-      .groupBy(col("fp"), col("doc")).agg(count(lit(1)).as("__k"))
-    val wdf = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
-    val kept = g2.withColumn("__df", sum(col("__k")).over(wdf))
-      .filter(col("__df") >= 2 && col("__df") <= maxGramDf)
-      .select(col("fp"), col("doc"), col("__k"))
-    kept.as("a")
-      .join(kept.as("b").hint("shuffle_hash"),
-        col("a.fp") === col("b.fp") && col("a.doc") < col("b.doc"))
-      .groupBy(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
-      .agg(sum(col("a.__k") * col("b.__k")).as("n_shared"))
+      .distinct()
+    sharedKeyPairs(grams, Nil, Seq("fp"), maxGramDf)
       .filter(col("n_shared") >= minShared)
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -1418,14 +1404,12 @@ object Dedup {
     * distinct selected fingerprints (each shared fingerprint is a
     * guaranteed k-char exact match inside a w-window; a shared run of
     * length ≥ w+k−1 always contributes at least one). Fingerprints
-    * with document frequency above `maxFpDf` are dropped BEFORE the
-    * pair join — boilerplate grams appear in thousands of documents
-    * and contribute df² candidate pairs of pure noise (the
-    * maxShingleDf lesson); unlike the shingle caps this cap is
+    * with document frequency above `maxFpDf` are dropped by the
+    * [[sharedKeyPairs]] cap — boilerplate grams contribute df²
+    * candidate pairs of pure noise; unlike the shingle caps this cap is
     * ANSI-expressible, so the DECLARED query carries it and the
-    * oracle mirrors it exactly. The df rejoin is merge-hinted (the
-    * duplicatedSpans AQE-broadcast-OOM class). Returns (id_a, id_b,
-    * n_shared) with id_a < id_b, ordered. */
+    * oracle mirrors it exactly. Returns (id_a, id_b, n_shared) with
+    * id_a < id_b, ordered. */
   def winnowedNearDups(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, w: Int = 4, maxFpDf: Int = 64,
       minShared: Int = 30): DataFrame = {
@@ -1442,15 +1426,12 @@ object Dedup {
     * BLOCKING: candidates must share a length-`blockLen` prefix OR
     * suffix (two-pass blocking — an edit inside one block's window
     * still matches through the other; only pairs edited in BOTH ends
-    * are outside the declared contract). Blocks hotter than
-    * `maxBlockDf` are dropped before the pair join (boilerplate
-    * prefixes are df² noise — the q171 cap, ANSI-expressible so the
-    * declared query and oracle carry it identically).
-    *
-    * Plan shape: (id, block-key) rows only through the self-join,
-    * DISTINCT pairs first, text payload late-materialized per
-    * surviving pair (the LSH lesson — verify needs the heavy payload,
-    * so dedup first); the verify is Spark's BANDED levenshtein
+    * are outside the declared contract). The candidates are
+    * [[sharedKeyPairs]] over the block keys, capped at `maxBlockDf`
+    * (boilerplate prefixes are df² noise — the q171 cap,
+    * ANSI-expressible so the declared query and oracle carry it
+    * identically), text payload late-materialized per surviving pair;
+    * the verify is Spark's BANDED levenshtein
     * (threshold form, O(len·maxDist) instead of O(len²), exact when ≤
     * maxDist). Both engines' levenshtein is the standard integer DP —
     * bit-identical on the ASCII fixture (probed cell-by-cell), so the
@@ -1463,28 +1444,21 @@ object Dedup {
       s"bad editDistancePairs params ($maxDist, $blockLen, $maxBlockDf)")
     val d = df.filter(col(idCol).isNotNull && col(textCol).isNotNull)
       .select(col(idCol).as("__id"), col(textCol).as("__t"))
-    val keyed = d.select(col("__id"), length(col("__t")).as("__ln"),
+    val keyed = d.select(col("__id").as("doc"), length(col("__t")).as("__ln"),
         concat(lit("p"), substring(col("__t"), 1, blockLen)).as("__bk"))
-      .unionByName(d.select(col("__id"), length(col("__t")).as("__ln"),
+      .unionByName(d.select(col("__id").as("doc"), length(col("__t")).as("__ln"),
         concat(lit("s"), substring(reverse(col("__t")), 1, blockLen))
           .as("__bk")))
-    val dfq = keyed.groupBy(col("__bk")).agg(count(lit(1)).as("__df"))
-    val kept = keyed.join(dfq.hint("merge"), Seq("__bk"))
-      .filter(col("__df") <= maxBlockDf)
-      .select(col("__bk"), col("__id"), col("__ln"))
     // the length prefilter rides the candidate join: edit distance is
     // at least the length difference, so |ln_a − ln_b| > maxDist pairs
     // can never survive the verify — result-identical, and it is the
     // cheap compare that prunes the duplicated-text skew fixture's
     // candidate mass 5.3× (m30z: 873k → 165k pairs) BEFORE the
     // expensive levenshtein ever runs.
-    val cand = kept.as("a")
-      .join(kept.as("b").hint("shuffle_hash"),
-        col("a.__bk") === col("b.__bk") && col("a.__id") < col("b.__id")
-          && abs(col("a.__ln") - col("b.__ln")) <= maxDist.toLong)
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-      .distinct()
-      // explicit-n repartition: the distinct's exchange is tiny in
+    val cand = sharedKeyPairs(keyed, Nil, Seq("__bk"), maxBlockDf,
+        pairPredicate = abs(col("a.__ln") - col("b.__ln")) <= maxDist.toLong)
+      .select(col("id_a"), col("id_b"))
+      // explicit-n repartition: the pair aggregate's exchange is tiny in
       // BYTES, so AQE coalesces it to ~1 partition — and the verify
       // stage (broadcast payload joins + levenshtein, which Catalyst
       // pulls into the join condition) inherits that partitioning,
@@ -1492,7 +1466,7 @@ object Dedup {
       // straggler). The r2 lesson: per-row-expensive work rides
       // behind repartition(n, col). Keyed by id_a ONLY — a
       // repartition on (id_a, id_b) is partitioning-identical to the
-      // distinct's own exchange and gets REMOVED as redundant, putting
+      // pair aggregate's exchange and gets REMOVED as redundant, putting
       // the verify right back on the coalesced reads (measured).
       .repartition(par(df), col("id_a"))
     cand
@@ -1511,24 +1485,8 @@ object Dedup {
     * [[winnowedNearDups]] and the streaming `WinnowStore`, so the
     * whole-store matching is q171-identical by construction. */
   private[graft] def winnowedPairsFromSelections(sel: DataFrame,
-      maxFpDf: Int, minShared: Int): DataFrame = {
-    // r20 restructure (optimization guide §2.4): the df attach was a
-    // groupBy + merge-hinted rejoin — two exchanges plus a sort of the
-    // selection stream. A window count over the same key is
-    // result-identical and needs ONE exchange, which the shuffle_hash
-    // pair join then reuses on both sides (kept is already
-    // fp-partitioned, so the join adds no exchange of its own).
-    val wdf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__fp"))
-    val kept = sel.withColumn("__df", count(lit(1)).over(wdf))
-      .filter(col("__df") <= maxFpDf)
-      .select(col("__fp"), col("doc"))
-    kept.as("a")
-      .join(kept.as("b").hint("shuffle_hash"),
-        col("a.__fp") === col("b.__fp") && col("a.doc") < col("b.doc"))
-      .groupBy(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
+      maxFpDf: Int, minShared: Int): DataFrame =
+    sharedKeyPairs(sel, Nil, Seq("__fp"), maxFpDf)
       .filter(col("n_shared") >= minShared)
       .orderBy(col("id_a"), col("id_b"))
-  }
 }

@@ -199,10 +199,8 @@ object Similarity {
     // fetched afterwards by id, so payload moves once per SURVIVING
     // pair, not once per collision.
     def banded(df: DataFrame, id: String): DataFrame =
-      df.select(col(id), posexplode(
-          transform(sequence(lit(0), lit(nBands - 1)),
-            b => array_join(slice(col("__bits"), b * bandBits + 1, lit(bandBits)), "")))
-        .as(Seq("band", "sig")))
+      df.select(col(id),
+        Dedup.bandKeys(col("__bits"), nBands, bandBits, "").as(Seq("band", "sig")))
     val p = withSig(probes.select(col(probeId).as("probe_id"), col(vecCol)), "probe_id")
     val c = withSig(corpus.select(col(corpusId).as("neighbor_id"), col(vecCol)), "neighbor_id")
     val pairs = banded(p, "probe_id").join(banded(c, "neighbor_id"), Seq("band", "sig"))
@@ -939,24 +937,13 @@ object Similarity {
       .withColumn("__n", VectorOps.norm2(col(vecCol)))
       .withColumn("__bits", VectorOps.hyperplaneBits(col(vecCol), nBands * bandBits))
       .repartition(par(df), col(idCol))
-    // Late materialization: only (band, sig, id) flows through the
-    // candidate join — the vector payload would multiply the shuffle by
-    // nBands and ride along on every bucket collision. Distinct pairs
-    // are aggregated from the narrow stream first; vectors and norms
-    // are fetched afterwards by id (Catalyst broadcasts the payload
-    // side when it is small; at cluster scale it becomes a hash join
-    // keyed on the 8-byte id — either way payload moves once per
-    // SURVIVING pair, not once per collision).
-    val banded = withSig.select(col(idCol), posexplode(
-        transform(sequence(lit(0), lit(nBands - 1)),
-          b => array_join(slice(col("__bits"), b * bandBits + 1, lit(bandBits)), "")))
-      .as(Seq("band", "sig")))
-    val pairs = banded.select(col("band"), col("sig"), col(idCol).as("id_a"))
-      .join(banded.select(col("band"), col("sig"), col(idCol).as("id_b")),
-        Seq("band", "sig"))
-      .filter(col("id_a") < col("id_b"))
+    // candidates share a (band, sig) key; vectors and norms join back
+    // per candidate pair (Catalyst broadcasts the payload side when it
+    // is small, a hash join on the 8-byte id at cluster scale)
+    val banded = withSig.select(col(idCol).as("doc"),
+      Dedup.bandKeys(col("__bits"), nBands, bandBits, "").as(Seq("band", "sig")))
+    val pairs = Dedup.sharedKeyPairs(banded, Nil, Seq("band", "sig"))
       .select(col("id_a"), col("id_b"))
-      .distinct()
     val payload = withSig.select(col(idCol), col(vecCol), col("__n"))
     pairs
       .join(payload.select(col(idCol).as("id_a"), col(vecCol).as("__va"),

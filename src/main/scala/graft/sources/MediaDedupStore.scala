@@ -44,8 +44,7 @@ object MediaDedupStore extends MaintainedStore {
 
   private def banded(sigs: DataFrame): DataFrame =
     sigs.select(col("doc"), col("sig"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("sig"), 16 * b).bitwiseAND(lit(0xFFFFL))): _*))
+      posexplode(graft.operators.Dedup.simhashBands(col("sig")))
         .as(Seq("band", "bucket")))
 
   /** Idempotent per-micro-batch store write

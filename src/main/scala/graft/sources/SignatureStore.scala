@@ -71,10 +71,7 @@ object SignatureStore extends MaintainedStore {
       .select(col("doc"),
         Dedup.minhashSignature(col("sh"), nHashes).as("sig"))
       .select(col("doc"),
-        posexplode(transform(
-          sequence(lit(0), lit(p.nBands - 1)),
-          b => array_join(
-            slice(col("sig"), b * p.rowsPerBand + 1, lit(p.rowsPerBand)), ":")))
+        Dedup.bandKeys(col("sig"), p.nBands, p.rowsPerBand, ":")
           .as(Seq("band", "bucket")))
       .withColumn("shard", pmod(hash(col("bucket")), lit(p.nShards)))
   }

@@ -97,16 +97,8 @@ object WinnowStore extends MaintainedStore {
     val union = sel.withColumn("__new", lit(true))
       .unionByName(stored.join(sel.select(col("doc")).distinct(),
         Seq("doc"), "left_anti"))
-    val dfq = union.groupBy(col("fp")).agg(count(lit(1)).as("__df"))
-    val kept = union.join(dfq.hint("merge"), Seq("fp"))
-      .filter(col("__df") <= p.maxFpDf)
-      .select(col("fp"), col("doc"), col("__new"))
-    kept.as("a")
-      .join(kept.as("b").hint("shuffle_hash"),
-        col("a.fp") === col("b.fp") && col("a.doc") < col("b.doc"))
-      .filter(col("a.__new") || col("b.__new"))
-      .groupBy(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
+    Dedup.sharedKeyPairs(union, Nil, Seq("fp"), p.maxFpDf,
+        pairPredicate = col("a.__new") || col("b.__new"))
       .filter(col("n_shared") >= p.minShared)
   }
 

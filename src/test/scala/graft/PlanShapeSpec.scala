@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
 
 /** Plan-shape guards for the SURVEY §4 "free in Catalyst" claims: the
   * scale posture is enforced here, not hoped for — dimension joins must
@@ -137,14 +137,16 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("q41 quantiles: histogram aggregates partially; rank window stays partitioned") {
-    // the scale contract of the histogram quantile plan: the
-    // (group, value) histogram must combine map-side (duplicates
-    // collapse BEFORE the shuffle), and the cumulative-rank window
-    // must be partitioned by the group column — a global orderBy
-    // window would serialize the whole histogram through one task
+  test("q41 quantiles: group totals aggregate partially; rank window stays partitioned") {
+    // q41 ranks raw rows: the cumulative-rank window must be
+    // partitioned by the group column (a global orderBy window would
+    // serialize every row through one task), and the broadcast group
+    // totals must combine map-side before their shuffle
     val plan = physical(SparkEntry.queries("q41_quantiles")(spark, sf))
-    assert(plan.contains("partial_"), s"q41 lost partial agg:\n$plan")
+    val partials = plan.split("\n").filter(_.contains("partial_"))
+    assert(partials.exists(_.contains("partial_sum")) &&
+      partials.forall(_.contains("l_returnflag")),
+      s"q41 group totals lost partial agg:\n$plan")
     val windows = plan.split("\n").filter(_.contains("Window"))
       .filterNot(_.contains("WindowGroupLimit"))
     assert(windows.nonEmpty && windows.forall(_.contains("l_returnflag")),
@@ -204,6 +206,13 @@ class PlanShapeSpec extends SparkSpec {
       s"q160 lost map-side combine:\n$cl")
   }
 
+  /** Every node of `df`'s initial physical plan, subqueries included. */
+  private def planNodes(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] =
+    (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collectWithSubqueries { case n => n }
+
   test("quantile family keeps its Exchange and Sort counts on the rank kernel") {
     // (exchanges, sorts) of each consumer's initial physical plan,
     // recorded before the family shared `Analytics.rankRange`: the
@@ -213,18 +222,46 @@ class PlanShapeSpec extends SparkSpec {
       "q124_robust_outliers" -> ((17, 7)),
       "q174_weighted_quantiles" -> ((4, 2)),
       "q177_stratified_exact" -> ((8, 2)), "q184_spearman" -> ((10, 7)))
-    val got = Seq("q41_quantiles", "q116_hdr_quantiles",
-        "q124_robust_outliers", "q174_weighted_quantiles",
-        "q177_stratified_exact", "q184_spearman").map { q =>
-      val plan = SparkEntry.queries(q)(spark, sf).queryExecution
-        .executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      val nodes = plan.collectWithSubqueries { case n => n }
+    val got = recorded.keys.map { q =>
+      val nodes = planNodes(SparkEntry.queries(q)(spark, sf))
       q -> ((nodes.count(_.isInstanceOf[Exchange]),
         nodes.count(_.isInstanceOf[SortExec])))
     }.toMap
+    assert(got === recorded)
+  }
+
+  test("near-dup pair family keeps its plan counts on the shared-key kernel") {
+    // (exchanges, sorts, broadcast exchanges) of each consumer's initial
+    // physical plan on `Dedup.sharedKeyPairs`, "curate" being the capped
+    // call perfbench curate makes. All but curate and q173 keep the
+    // counts they had before the family shared the kernel; curate's
+    // postings no longer broadcast, and q173's df cap lost its rejoin
+    val consumers = Map[String, () => org.apache.spark.sql.DataFrame](
+      "curate" -> (() => graft.operators.Dedup.ngramJaccardPairs(
+        Tables.documents(spark, sf), "doc_id", "text", "source", 3, 0.5,
+        maxShingleDf = 64))) ++
+      Seq("q22_ngram_jaccard", "q24_minhash_neardup",
+        "q47_dedup_keep_first", "q48_neardup_lsh",
+        "q134_source_overlap_matrix", "q171_winnowed_neardups",
+        "q173_edit_distance_pairs", "q190_shared_substrings",
+        "q191_containment_pairs")
+        .map(q => q -> (() => SparkEntry.queries(q)(spark, sf)))
+    val recorded = Map(
+      "curate" -> ((13, 8, 0)), "q24_minhash_neardup" -> ((8, 1, 3)),
+      "q48_neardup_lsh" -> ((8, 1, 3)),
+      "q22_ngram_jaccard" -> ((4, 1, 1)),
+      "q47_dedup_keep_first" -> ((6, 3, 1)),
+      "q134_source_overlap_matrix" -> ((8, 3, 2)),
+      "q171_winnowed_neardups" -> ((6, 5, 0)),
+      "q173_edit_distance_pairs" -> ((7, 3, 2)),
+      "q190_shared_substrings" -> ((6, 3, 0)),
+      "q191_containment_pairs" -> ((4, 1, 1)))
+    val got = consumers.map { case (q, build) =>
+      val nodes = planNodes(build())
+      q -> ((nodes.count(_.isInstanceOf[Exchange]),
+        nodes.count(_.isInstanceOf[SortExec]),
+        nodes.count(_.isInstanceOf[BroadcastExchangeExec])))
+    }
     assert(got === recorded)
   }
 }

@@ -264,4 +264,48 @@ class PropertySpec extends SparkSpec {
       "too few groups flag a row to show their med/mad")
     assert(got === expected)
   }
+
+  private type P = (Int, Int, Long, Boolean)
+
+  test("sharedKeyPairs == brute-force shared-key pair counts on random postings") {
+    // (g, key, doc, f) postings, distinct per (g, key, doc); key 0 of
+    // group 0 is held by every doc, the key above the cap; the carried
+    // per-doc value is doc % 7
+    val posting: Gen[P] = for {
+      g <- Gen.chooseNum(0, 2); k <- Gen.chooseNum(1, 12)
+      d <- Gen.chooseNum(0, 24); f <- Gen.oneOf(true, false)
+    } yield (g, k, d.toLong, f)
+    val rows = (sample(posting, 400) ++
+        (0 until 25).map(d => (0, 0, d.toLong, d % 3 == 0)))
+      .groupBy(r => (r._1, r._2, r._3)).values.map(_.head).toSeq
+    val maxDf = 22
+    def brute(capped: Boolean,
+        pred: (Boolean, Boolean) => Boolean): Map[(Int, Long, Long), Long] = {
+      val hot = if (!capped) Set.empty[(Int, Int)]
+        else rows.groupBy(r => (r._1, r._2))
+          .filter(_._2.size > maxDf).keySet
+      assert(!capped || hot((0, 0)))
+      val live = rows.filterNot(r => hot((r._1, r._2)))
+      (for {
+        a <- live; b <- live
+        if a._1 == b._1 && a._2 == b._2 && a._3 < b._3 && pred(a._4, b._4)
+      } yield (a._1, a._3, b._3))
+        .groupMapReduce(identity)(_ => 1L)(_ + _)
+    }
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("g", "id_a", "id_b", "n_shared").as[(Int, Long, Long, Long)]
+        .collect().map(r => (r._1, r._2, r._3) -> r._4).toMap
+    for (parts <- Seq(1, 3)) {
+      val postings = rows.toDF("g", "key", "doc", "f")
+        .withColumn("v", col("doc") % 7).repartition(parts)
+      val carried = Dedup.sharedKeyPairs(postings, Seq("g"), Seq("key"),
+        carry = Seq("v"))
+      assert(pairs(carried) === brute(capped = false, (_, _) => true))
+      assert(carried.filter(col("v_a") =!= col("id_a") % 7 ||
+        col("v_b") =!= col("id_b") % 7).count() === 0)
+      assert(pairs(Dedup.sharedKeyPairs(postings, Seq("g"), Seq("key"),
+          maxDf, col("a.f") || col("b.f")))
+        === brute(capped = true, _ || _))
+    }
+  }
 }

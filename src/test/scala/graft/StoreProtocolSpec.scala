@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * home each: the drain and the state prune in `Streams`, the keyed
   * store ingest on `MaintainedStore`. So does the quantile family's
   * rank math: the cumulative rank range in `Analytics.rankRange`, the
-  * interpolating and the lower-rule selections in its two pickers. */
+  * interpolating and the lower-rule selections in its two pickers. The
+  * near-dup family's shared-key self-join is `Dedup.sharedKeyPairs`. */
 class StoreProtocolSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -88,5 +89,25 @@ class StoreProtocolSpec extends AnyFunSuite {
     val lower = hits("""\b(div (?:\$\{?\w+\}?|100\b))""".r, all = true)
     assert(lower === List(s"$analytics: div $$den"),
       s"pick the lower rule through Analytics.lowerRule: $lower")
+  }
+
+  test("the shared-key self-join is defined once") {
+    // an `a.<id> < b.<id>` pair predicate is a self-join forming pairs:
+    // besides the kernel, only simhashBandPairs and
+    // simhashCrossGroupEdges (hamming verify, sub-banding, group
+    // counts) and Similarity's all-pairs nearDupPairs and
+    // semDedupWithCentroids (cosine, not shared keys) may write one
+    val found = hits(
+      """(col\("(?:a\.\w+|id_a)"\)\s*<\s*col\("(?:b\.\w+|id_b)"\))""".r,
+      all = true)
+    val dedup = "graft/operators/Dedup.scala"
+    val similarity = "graft/operators/Similarity.scala"
+    assert(found.sorted === List(
+      s"$dedup: col(\"a.__g\") < col(\"b.__g\")",
+      s"$dedup: col(\"a.doc\") < col(\"b.doc\")",
+      s"$dedup: col(\"id_a\") < col(\"id_b\")",
+      s"$similarity: col(\"id_a\") < col(\"id_b\")",
+      s"$similarity: col(\"id_a\") < col(\"id_b\")"),
+      s"pair documents through Dedup.sharedKeyPairs: $found")
   }
 }
