@@ -271,7 +271,8 @@ object SparkEntry {
       val embedded = fan(corpus, "doc_id")
         .select(col("doc_id"), col("text"),
           VectorOps.hashEmbed(TextOps.words(col("text")), 64).as("embedding"))
-      embedded.write.mode("overwrite").parquet(pth + "/docs")
+      graft.sources.StoreFs.writer(embedded).mode("overwrite")
+        .parquet(pth + "/docs")
       graft.sources.VectorStore.writeQuantized(
         s.read.parquet(pth + "/docs"), "doc_id", "embedding", pth + "/vec")
     }

@@ -24,17 +24,11 @@ object TextOps {
   /** A BPE-ish token estimate: word-pieces of <=4 chars, i.e.
     * ceil(len(word)/4) summed — approximates subword token inflation
     * for long words without a vocab. Deterministic, oracle-expressible.
-    * Codegen'd single-pass kernel (`BpeEstimate`); the HOF fold below
-    * is kept for cross-validation (TextOpsSpec asserts equality). */
+    * Codegen'd single-pass kernel (`BpeEstimate`), equal to the HOF
+    * fold TextOpsSpec cross-checks it against. */
   def bpeTokenEstimate(text: Column): Column =
     when(length(trim(text)) === 0, lit(0)).otherwise(
       graft.expressions.TextExpressions.bpeEstimate(words(text)))
-
-  /** Reference HOF formulation of the same sum — tests only. */
-  def bpeTokenEstimateHof(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0)).otherwise(
-      aggregate(words(text), lit(0),
-        (acc, w) => acc + ceil(length(w).cast("double") / 4.0d).cast("int")))
 
   /** Chunk count at `chunkWords` words per chunk — the reference's
     * ceil-div (`src/rag/dataframes.rs:72`). */
@@ -67,13 +61,6 @@ object TextOps {
     "es" -> Seq("el", "la", "de", "y", "un", "una", "los", "las", "es", "que"),
     "de" -> Seq("der", "die", "das", "und", "ein", "eine", "ist", "zu", "den", "von"),
     "zh" -> Seq("的", "了", "是", "在", "我", "有", "和", "不", "人", "这"))
-
-  /** Count of word occurrences that are in `list` (duplicates counted —
-    * it is a hit count, not a distinct count, so the densest language
-    * wins). Interpreted HOF — tests/cross-validation only; hot paths
-    * use `textStats`. */
-  def stopwordHits(ws: Column, list: Seq[String]): Column =
-    size(filter(ws, w => w.isInCollection(list)))
 
   /** One-pass word statistics: struct(n_words, alpha_hits, hits) with
     * hits(i) counting membership in `lists(i)` — the codegen'd kernel
@@ -125,14 +112,9 @@ object TextOps {
     * (acc < 2^30, acc*1000003 + hash < 2^62). Order-sensitive —
     * distinguishes permutations, unlike a bag-of-words hash. Not
     * oracle-expressible (murmur3) → covered by ScalaTest determinism
-    * properties instead. Codegen'd kernel (`FingerprintHash`); the HOF
-    * fold below is kept for cross-validation.
+    * properties instead. Codegen'd kernel (`FingerprintHash`), equal
+    * to the HOF fold TextOpsSpec cross-checks it against.
     */
   def fingerprint(ws: Column): Column =
     graft.expressions.TextExpressions.fingerprintHash(ws)
-
-  /** Reference HOF formulation of the same modular fold — tests only. */
-  def fingerprintHof(ws: Column): Column =
-    aggregate(ws, lit(0L),
-      (acc, w) => pmod(acc * lit(1000003L) + hash(w).cast("long"), lit(1000000007L)))
 }

@@ -32,19 +32,12 @@ object VectorOps {
       ArrayType(DoubleType, containsNull = false)))
 
   /** Dot product in double precision, sequential fold in array order —
-    * codegen'd kernel (`DotProductD`); bit-identical to the HOF fold
-    * below but compiled (the HOF `aggregate` goes through interpreted
+    * codegen'd kernel (`DotProductD`); bit-identical to the HOF
+    * `zip_with` + `aggregate` fold (asserted in VectorOpsSpec) but
+    * compiled (the HOF `aggregate` goes through interpreted
     * `ArrayAggregate`, ~50× slower on the pairwise joins). */
   def dot(a: Column, b: Column): Column =
     graft.expressions.VectorExpressions.dotProduct(a, b)
-
-  /** Reference HOF formulation of the same fold — kept for
-    * cross-validation in tests (must agree with `dot` bit-for-bit). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x)
 
   /** L2 norm, same double-precision sequential fold. */
   def norm2(a: Column): Column = sqrt(dot(a, a))
@@ -58,19 +51,9 @@ object VectorOps {
 
   /** Squared euclidean distance — codegen'd kernel (`L2DistSqD`), the
     * same sequential (a-b)² fold in double precision as the HOF form
-    * below (bit-identical; asserted in VectorOpsSpec). */
+    * (bit-identical; asserted in VectorOpsSpec). */
   def l2DistSq(a: Column, b: Column): Column =
     graft.expressions.VectorExpressions.l2DistSq(a, b)
-
-  /** Reference HOF formulation of the same fold — kept for
-    * cross-validation in tests (must agree with `l2DistSq` bit-for-bit). */
-  def l2DistSqHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double"); d * d
-      }),
-      lit(0.0),
-      (acc, x) => acc + x)
 
   /** L2-normalize a vector; zero vectors map to zero vectors. */
   def l2Normalize(a: Column): Column = {
@@ -123,8 +106,4 @@ object VectorOps {
         round((x.cast("double") - mn) / sc, 0).cast("int"))
         .otherwise(lit(0)))
   }
-
-  /** Inverse transform: x̂_i = q_i * scale + min. */
-  def int8Dequantize(qs: Column, minVal: Column, scale: Column): Column =
-    transform(qs, q => q.cast("double") * scale + minVal)
 }

@@ -90,10 +90,6 @@ object MessageOps {
           .when(bodyCol.isNotNull, bodyCol)
           .otherwise(lit("Empty data message")))
 
-  /** P9 — empty-array → NULL normalization
-    * (`src/signal/process_incoming_message.rs:86-90`). */
-  def emptyToNull(arr: Column): Column = when(size(arr) > 0, arr)
-
   /** P2 — RetrieveProfile projection with the reference's 32-byte key
     * validation (`src/lib.rs:208-220`: a profile key shorter than 32
     * bytes is rejected). Keys failing validation surface as NULL with

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.sources.StoreFs
 import graft.streaming.Streams
 
 /** Sequence packing for pretraining: concatenate the corpus in a total
@@ -141,7 +142,7 @@ object Packing {
     val starts = tokenShards(counted.select(col(idCol), col("__n")),
         idCol, "__n", seqLen)
       .select(col(idCol), (col("cum_tokens") - col("__n")).as("__start"))
-    counted.join(starts, Seq(idCol))
+    StoreFs.writer(counted.join(starts, Seq(idCol))
       .select(col("__start"), posexplode(col(tokensCol)).as(Seq("__ord", "__tok")))
       .withColumn("__gpos", col("__start") + col("__ord"))
       .withColumn("seq_id", expr(s"__gpos DIV $seqLen"))
@@ -150,8 +151,8 @@ object Packing {
       .agg(sort_array(collect_list(struct(col("__pos"), col("__tok"))))
         .getField("__tok").as("tokens"))
       .withColumn("shard", expr(s"seq_id DIV $seqsPerShard"))
-      .repartition(col("shard"))
-      .write.partitionBy("shard").mode("overwrite").parquet(outDir)
+      .repartition(col("shard")))
+      .partitionBy("shard").mode("overwrite").parquet(outDir)
   }
 
   // --- streaming packing (r10) ----------------------------------------
@@ -237,14 +238,14 @@ object Packing {
       case Some((sid, n, d, f, l, ck)) => PackState(end, sid, n, d, f, l, ck)
       case None => PackState(end, -1L, 0L, 0L, 0, 0, 0L)
     }
-    closed
-      .withColumn("__batch_id", lit(batchId))
-      .write.mode("overwrite")
+    StoreFs.writer(closed
+      .withColumn("__batch_id", lit(batchId)))
+      .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__batch_id")
       .parquet(outDir)
-    Seq(nextState).toDF()
-      .write.mode("overwrite").parquet(statePath(stateDir, batchId))
+    StoreFs.writer(Seq(nextState).toDF())
+      .mode("overwrite").parquet(statePath(stateDir, batchId))
     // a fresh stream over reused dirs: the prior run's emissions would
     // join this run's in packedResult (its seq_ids restart at 0 too)
     if (batchId == 0L)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.sources.StoreFs
 
 /** Scale utilities: skew mitigation and storage-layout helpers for the
   * 100 TB design point. These exist because at cluster scale the two
@@ -295,8 +296,8 @@ object Scale {
     merged.foreach { case (k, w) =>
       rows.add(org.apache.spark.sql.Row(k, w)) }
     rows.add(org.apache.spark.sql.Row(null, prevN + batchN))
-    spark.createDataFrame(rows, schema).coalesce(1)
-      .write.mode("overwrite").parquet(hotStatePath(stateDir, batchId))
+    StoreFs.writer(spark.createDataFrame(rows, schema).coalesce(1))
+      .mode("overwrite").parquet(hotStatePath(stateDir, batchId))
     // batch 0 also clears a prior run's state: its high-id summary
     // would otherwise be served by hotKeySummary forever
     graft.streaming.Streams.pruneState(spark, stateDir, batchId)
@@ -521,10 +522,10 @@ object Scale {
     * files (and row groups) inside them. */
   def writeZOrdered(df: DataFrame, path: String, x: Column, y: Column,
       bits: Int, files: Int): Unit =
-    df.withColumn("__z", zValue(x, y, bits))
+    StoreFs.writer(df.withColumn("__z", zValue(x, y, bits))
       .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .write.mode("overwrite").parquet(path)
+      .sortWithinPartitions(col("__z")))
+      .mode("overwrite").parquet(path)
 
   /** Write a table bucketed (and sorted) by its join key: co-located,
     * co-sorted joins between two tables bucketed on the same key with
@@ -624,6 +625,7 @@ object Scale {
     // must go through saveAsTable — Spark records the bucket spec only
     // in the catalog); null lands in the session warehouse dir (or,
     // for append, the table's existing location)
+    // plain writer: saveAsTable keeps StoreFs.writer's options as table properties
     val w = df.write.mode(mode).format("parquet")
       .bucketBy(buckets, key).sortBy(key)
     (if (path != null) w.option("path", path) else w).saveAsTable(table)

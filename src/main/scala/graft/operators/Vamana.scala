@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.StoreFs
 
 /** Vamana graph ANN (DiskANN's index; Subramanya et al., NeurIPS'19) —
   * the graph-based family the reference's installed-but-unused
@@ -289,8 +290,8 @@ object Vamana {
     * shard directory. */
   def writeStore(df: DataFrame, idCol: String, vecCol: String,
       path: String, p: Params): Unit =
-    build(df, idCol, vecCol, p)
-      .write.partitionBy("shard").mode("overwrite").parquet(path)
+    StoreFs.writer(build(df, idCol, vecCol, p))
+      .partitionBy("shard").mode("overwrite").parquet(path)
 
   /** Scatter-gather probe over the stored graph: one greedy beam
     * search per shard (from that shard's medoid), exact (dist6, id)

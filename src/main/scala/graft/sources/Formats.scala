@@ -12,23 +12,20 @@ import org.apache.spark.sql.types.StructType
   */
 object Formats {
 
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
   def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
+    StoreFs.writer(df).mode("overwrite").option("header", "true").csv(path)
 
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
   def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
+    StoreFs.writer(df).mode("overwrite").json(path)
 
   /** ORC — the second columnar format Spark ships natively; same
     * predicate-pushdown/column-pruning behavior as parquet, relevant
     * when the surrounding lake is Hive/ORC. */
   def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
+    StoreFs.writer(df).mode("overwrite").orc(path)
 
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
@@ -38,12 +35,13 @@ object Formats {
 
   /** JDBC sink — the bulk replacement for the reference's per-row
     * INSERT loop: batched writes (`batchsize`), parallel partitions.
-    * Untestable offline (no database in this environment); the option
-    * surface is the documented contract. */
+    * Kept without a caller: it stands in for the reference's Postgres
+    * sink (SURVEY §1). Untestable offline (no database in this
+    * environment); the option surface is the documented contract. */
   def writeJdbc(df: DataFrame, url: String, table: String,
       batchSize: Int = 10000, numPartitions: Int = 8): Unit =
-    df.repartition(numPartitions)
-      .write.mode("append")
+    StoreFs.writer(df.repartition(numPartitions))
+      .mode("append")
       .format("jdbc")
       .option("url", url)
       .option("dbtable", table)

@@ -126,9 +126,10 @@ object MediaDedupStore extends MaintainedStore {
     * BIT-IDENTICAL across the rewrite (spec-asserted). */
   def compact(spark: SparkSession, path: String): Unit =
     compactWith(spark, path) { (_, rows, staged) =>
-      rows.select(col("doc"), col("sig"), col("band"), col("bucket"))
+      StoreFs.writer(rows.select(col("doc"), col("sig"), col("band"),
+          col("bucket"))
         .withColumn("ingest", lit("base"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.partitionBy("ingest").mode("overwrite").parquet(staged)
+        .repartition(spark.sparkContext.defaultParallelism))
+        .partitionBy("ingest").mode("overwrite").parquet(staged)
     }
 }

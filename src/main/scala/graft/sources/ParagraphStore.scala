@@ -156,11 +156,11 @@ private[graft] trait DigestCountStore extends MaintainedStore {
   protected def compactCounts(spark: SparkSession, path: String,
       nShards: Int): Unit =
     compactWith(spark, path) { (_, rows, staged) =>
-      rows.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
+      StoreFs.writer(rows.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
         .withColumn("shard", shardOf(col("h"), nShards))
         .withColumn("ingest", lit("base"))
-        .repartition(nShards, col("shard"))
-        .write.partitionBy("ingest", "shard").mode("overwrite")
+        .repartition(nShards, col("shard")))
+        .partitionBy("ingest", "shard").mode("overwrite")
         .parquet(staged)
     }
 }

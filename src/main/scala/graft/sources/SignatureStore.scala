@@ -100,8 +100,8 @@ object SignatureStore extends MaintainedStore {
     // surface compact() is about to rename away (see StoreFs lease note)
     failIfLeased(df.sparkSession, path, "base")
     surfaceRows(df, idCol, textCol, p).foreach { case (surface, rows, parts) =>
-      rows.withColumn("ingest", lit("base"))
-        .write.partitionBy("ingest" +: parts: _*).mode(mode)
+      StoreFs.writer(rows.withColumn("ingest", lit("base")))
+        .partitionBy("ingest" +: parts: _*).mode(mode)
         .parquet(path + surface)
     }
   }
@@ -294,14 +294,15 @@ object SignatureStore extends MaintainedStore {
   def compact(spark: SparkSession, path: String, p: Params = Params()): Unit =
     compactWith(spark, path) { (live, rows, staged) =>
       if (live == path + "/bands")
-        rows.select(col("doc"), col("band"), col("bucket"), col("shard"))
+        StoreFs.writer(rows.select(col("doc"), col("band"), col("bucket"),
+            col("shard"))
           .withColumn("ingest", lit("base"))
-          .repartition(p.nShards, col("shard"))
-          .write.partitionBy("ingest", "shard").mode("overwrite").parquet(staged)
+          .repartition(p.nShards, col("shard")))
+          .partitionBy("ingest", "shard").mode("overwrite").parquet(staged)
       else
-        rows.select(col("doc"), col("sh"))
+        StoreFs.writer(rows.select(col("doc"), col("sh"))
           .withColumn("ingest", lit("base"))
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.partitionBy("ingest").mode("overwrite").parquet(staged)
+          .repartition(spark.sparkContext.defaultParallelism))
+          .partitionBy("ingest").mode("overwrite").parquet(staged)
     }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
@@ -73,8 +73,15 @@ private[graft] object StoreFs {
 
   def fileSystem(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    (p.getFileSystem(
+      spark.sessionState.newHadoopConfWithOptions(LocalFs.options(spark))), p)
   }
+
+  /** Every library write's `DataFrameWriter`: `file:` paths go through
+    * [[LocalFs]], so a created file, `.crc` or directory costs no
+    * forked `chmod`. */
+  def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(LocalFs.options(df.sparkSession))
 
   /** Spark's hidden-path rule: `_`/`.`-prefixed names are not data. */
   private def hidden(name: String): Boolean =
@@ -144,7 +151,7 @@ private[graft] object StoreFs {
         s"tombstone id column mismatch: store has '$existing', " +
           s"delete got '${ids.columns.head}'")
     }
-    ids.distinct().write.mode("append").parquet(dir)
+    writer(ids.distinct()).mode("append").parquet(dir)
   }
 
   /** The partitioned store writer: `df` lands in `path`
@@ -152,20 +159,20 @@ private[graft] object StoreFs {
     * write, after the compactor-lease probe at `lockPath`. Unshuffled,
     * every task writes its own file into every directory it holds
     * rows for (an ingest micro-batch at 4 tasks × 16 buckets wrote 64
-    * files), and each file costs a footer and a `.crc` on disk plus,
-    * on Hadoop's local file system without the native library, a
-    * forked `chmod` per file, `.crc` and new directory (10.5-14.3 ms
-    * per directory + file + `.crc` on a 4-CPU host, against 0.13 ms
-    * through plain `java.io`). The `rebalance` hint hash-places every
-    * directory's rows in one reducer; AQE coalesces a small write into
-    * few tasks, and splits a directory whose rows outgrow the advisory
-    * partition size over several tasks (one file each), so a hot
-    * bucket at scale is not one straggler task. */
+    * files), and each file costs a footer and a `.crc` on disk. Through
+    * [[writer]] each created file, `.crc` and directory also costs an
+    * in-process mode set (0.56-1.09 ms per created file on a 4-CPU
+    * host; the stock local file system without the native library
+    * forks a `chmod` for each, 10.5-14.3 ms). The `rebalance` hint
+    * hash-places every directory's rows in one reducer; AQE coalesces
+    * a small write into few tasks, and splits a directory whose rows
+    * outgrow the advisory partition size over several tasks (one file
+    * each), so a hot bucket at scale is not one straggler task. */
   def writePartitioned(df: DataFrame, partCol: String, path: String,
       mode: String, lockPath: String, what: String): Unit = {
     failIfLeased(df.sparkSession, lockPath, what)
-    df.hint("rebalance", col(partCol))
-      .write.partitionBy(partCol).mode(mode).parquet(path)
+    writer(df.hint("rebalance", col(partCol)))
+      .partitionBy(partCol).mode(mode).parquet(path)
   }
 
   /** Names of `dir`'s immediate children; empty when `dir` is absent. */
@@ -485,8 +492,8 @@ private[graft] trait MaintainedStore {
   protected def writeIngest(path: String, ingest: String, rows: DataFrame,
       parts: Seq[String] = Nil, surface: String = ""): Unit = {
     failIfLeased(rows.sparkSession, path, ingest)
-    rows.withColumn("ingest", lit(ingest))
-      .write.partitionBy("ingest" +: parts: _*).mode("overwrite")
+    StoreFs.writer(rows.withColumn("ingest", lit(ingest)))
+      .partitionBy("ingest" +: parts: _*).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .parquet(path + surface)
   }
@@ -494,7 +501,7 @@ private[graft] trait MaintainedStore {
   /** A batch's side output at `<sink>/ingest=<ingest>`, replaced whole. */
   protected def writeSideSink(rows: DataFrame, sink: String,
       ingest: String): Unit =
-    rows.write.mode("overwrite").parquet(sink + "/ingest=" + ingest)
+    StoreFs.writer(rows).mode("overwrite").parquet(sink + "/ingest=" + ingest)
 
   /** `rows` (a read of one of the store's surfaces) without the
     * `ingest` partition `exclude`: a replayed batch's view of the store

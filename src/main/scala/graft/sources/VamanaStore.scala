@@ -271,7 +271,7 @@ object VamanaStore extends MaintainedStore {
       p: Vamana.Params): Unit = {
     import spark.implicits._
     compactWith(spark, path) { (_, rows, staged) =>
-      rows
+      val rebuilt = rows
         .groupBy(col("shard"), col("id"))
         .agg(max_by(col("vec6"), col("seq")).as("vec6"))
         .as[(Int, Long, Seq[Long])]
@@ -292,7 +292,7 @@ object VamanaStore extends MaintainedStore {
         .toDF("shard", "id", "vec6", "nbrs", "medoid", "seq")
         .withColumn("ingest", lit("base"))
         .repartition(p.nShards, col("shard"))
-        .write.partitionBy("ingest", "shard").mode("overwrite")
+      StoreFs.writer(rebuilt).partitionBy("ingest", "shard").mode("overwrite")
         .parquet(staged)
     }
   }

@@ -119,8 +119,8 @@ object VectorStore extends MaintainedStore {
   def compact(spark: SparkSession, path: String, nBits: Int = 4,
       partCol: String = "bucket"): Unit =
     compactWith(spark, path) { (_, rows, staged) =>
-      rows.repartition(1 << nBits, col(partCol))
-        .write.partitionBy(partCol).mode("overwrite").parquet(staged)
+      StoreFs.writer(rows.repartition(1 << nBits, col(partCol)))
+        .partitionBy(partCol).mode("overwrite").parquet(staged)
     }
 
   /** The probe's bucket plus its `1+nBits` hamming≤1 neighbors —

@@ -147,11 +147,11 @@ object WinnowStore extends MaintainedStore {
   def compact(spark: SparkSession, path: String,
       p: Params = Params()): Unit =
     compactWith(spark, path) { (_, rows, staged) =>
-      rows.select(col("fp"), col("doc")).distinct()
+      StoreFs.writer(rows.select(col("fp"), col("doc")).distinct()
         .withColumn("shard", shardOf(col("fp"), p.nShards))
         .withColumn("ingest", lit("base"))
-        .repartition(p.nShards, col("shard"))
-        .write.partitionBy("ingest", "shard").mode("overwrite")
+        .repartition(p.nShards, col("shard")))
+        .partitionBy("ingest", "shard").mode("overwrite")
         .parquet(staged)
     }
 }

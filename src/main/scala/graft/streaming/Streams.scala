@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.operators.{Chunker, NoiseFilter}
 import graft.functions.{TextOps, VectorOps}
+import graft.sources.StoreFs
 
 /** Per-sender state carried across micro-batches by
   * [[Streams.statefulUserCounts]]. */
@@ -90,9 +91,9 @@ object Streams {
     * batch's own `__batch_id` partition of `outDir`. */
   private[graft] def ingestBatch(batch: DataFrame, batchId: Long,
       outDir: String): Unit =
-    ingestTransform(batch)
-      .withColumn("__batch_id", lit(batchId))
-      .write.mode("overwrite")
+    StoreFs.writer(ingestTransform(batch)
+      .withColumn("__batch_id", lit(batchId)))
+      .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__batch_id")
       .parquet(outDir)
@@ -125,10 +126,14 @@ object Streams {
   /** Delete every `<prefix><id>` child of `dir` whose id is `stale`. */
   private[graft] def dropBatchDirs(spark: SparkSession, dir: String,
       prefix: String)(stale: Long => Boolean): Unit =
-    graft.sources.StoreFs.childNames(spark, dir)
+    StoreFs.childNames(spark, dir)
       .filter(_.startsWith(prefix))
       .filter(n => stale(n.drop(prefix.length).toLong))
-      .foreach(n => graft.sources.StoreFs.delete(spark, s"$dir/$n"))
+      .foreach(n => StoreFs.delete(spark, s"$dir/$n"))
+
+  /** A batch's output or state write: `df` replaces `path`. */
+  private def overwrite(df: DataFrame, path: String): Unit =
+    StoreFs.writer(df).mode("overwrite").parquet(path)
 
   /** ST6 — stateful mid-stream lookup as a stream-static join: each
     * reaction micro-batch joins the STATIC message store to format the
@@ -232,17 +237,17 @@ object Streams {
     val union = cur.unionByName(prev)
     val flagged = graft.operators.Analytics.rollingAnomaly(
       union, keyCol, orderCols, valueCol, window, k, minPeriods)
-    flagged.filter(col("__new") === 1).drop("__new")
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    overwrite(flagged.filter(col("__new") === 1).drop("__new"),
+      s"$outDir/batch=$batchId")
     // new state: the last `window` rows per key by the total frame
     // order — the same per-key sort partitioning the flag window used
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(keyCol))
       .orderBy(orderCols.map(c => col(c).desc): _*)
-    union.filter(col(valueCol).isNotNull)
+    overwrite(union.filter(col(valueCol).isNotNull)
       .select(cols :+ row_number().over(w).as("__rn"): _*)
-      .filter(col("__rn") <= window).drop("__rn")
-      .write.mode("overwrite").parquet(anomalyStatePath(stateDir, batchId))
+      .filter(col("__rn") <= window).drop("__rn"),
+      anomalyStatePath(stateDir, batchId))
     pruneState(spark, stateDir, batchId)
   }
 
@@ -278,11 +283,11 @@ object Streams {
       if (batchId == 0L) cur.limit(0)
       else spark.read.parquet(s"$stateDir/batch=${batchId - 1}")
     val out = Analytics.driftFromCounts(prev, cur, groupCol)
-    (if (batchId == 0L) out.limit(0) else out)
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    cur.unionByName(prev)
-      .groupBy(col("dd_g"), col("dd_b")).agg(sum(col("c")).as("c"))
-      .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
+    overwrite((if (batchId == 0L) out.limit(0) else out),
+      s"$outDir/batch=$batchId")
+    overwrite(cur.unionByName(prev)
+      .groupBy(col("dd_g"), col("dd_b")).agg(sum(col("c")).as("c")),
+      s"$stateDir/batch=$batchId")
     pruneState(spark, stateDir, batchId)
   }
 
@@ -323,12 +328,11 @@ object Streams {
       .groupBy(col("stage_idx"), col("stage"))
       .agg(sum(col("n_in")).as("n_in"), sum(col("n_out")).as("n_out"))
       .localCheckpoint() // two consumers (output join + state write)
-    rep.join(cum.select(col("stage_idx"), col("n_in").as("cum_in"),
+    overwrite(rep.join(cum.select(col("stage_idx"), col("n_in").as("cum_in"),
         col("n_out").as("cum_out")), Seq("stage_idx"))
       .withColumn("cum_dropped", col("cum_in") - col("cum_out"))
-      .orderBy(col("stage_idx"))
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    cum.write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
+      .orderBy(col("stage_idx")), s"$outDir/batch=$batchId")
+    overwrite(cum, s"$stateDir/batch=$batchId")
     pruneState(spark, stateDir, batchId)
   }
 
@@ -363,9 +367,9 @@ object Streams {
     val merged = cur.unionByName(prev)
       .groupBy(col(groupCol), col("__v"))
       .agg(sum(col("__cnt")).as("__cnt"))
-    Analytics.quantilesFromHist(merged, groupCol)
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    merged.write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
+    overwrite(Analytics.quantilesFromHist(merged, groupCol),
+      s"$outDir/batch=$batchId")
+    overwrite(merged, s"$stateDir/batch=$batchId")
     pruneState(spark, stateDir, batchId)
   }
 
@@ -405,15 +409,14 @@ object Streams {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k).select(col("__g"), col("__h"))
       .localCheckpoint() // read by both the output and the state write
-    merged.groupBy(col("__g"))
+    overwrite(merged.groupBy(col("__g"))
       .agg(count(lit(1)).as("n_kept"), max(col("__h")).as("__hm"))
       .select(col("__g").as(groupCol), col("n_kept"),
         expr(s"CASE WHEN n_kept < ${k}L THEN n_kept " +
           s"ELSE ${k - 1}L * ${1L << 56}L DIV " +
           "CAST(conv(substring(__hm, 1, 14), 16, 10) AS BIGINT) END")
-          .as("n_est"))
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    merged.write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
+          .as("n_est")), s"$outDir/batch=$batchId")
+    overwrite(merged, s"$stateDir/batch=$batchId")
     pruneState(spark, stateDir, batchId)
   }
 
@@ -491,12 +494,10 @@ object Streams {
           .filter(col("__rn") <= col("__quota"))
           .select(col("__s").as(strataCol), col("__id").as(idCol))
       }
-    out.orderBy(col(strataCol), col(idCol))
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    list.write.mode("overwrite")
-      .parquet(s"$stateDir/batch=$batchId/list")
-    counts.write.mode("overwrite")
-      .parquet(s"$stateDir/batch=$batchId/counts")
+    overwrite(out.orderBy(col(strataCol), col(idCol)),
+      s"$outDir/batch=$batchId")
+    overwrite(list, s"$stateDir/batch=$batchId/list")
+    overwrite(counts, s"$stateDir/batch=$batchId/counts")
     pruneState(spark, stateDir, batchId)
   }
 
@@ -539,7 +540,7 @@ object Streams {
     val kept = cum.crossJoin(broadcast(maxP))
       .filter(col("__p") >= col("__mp") - 1)
       .localCheckpoint() // read by the output AND the state write
-    kept
+    overwrite(kept
       .groupBy(col("__k"))
       .agg(
         sum(when(col("__p") === col("__mp") - 1, col("__n"))
@@ -553,10 +554,9 @@ object Streams {
       .select(col("__k").as(keyCol), col("n_prev"), col("n_cur"),
         col("delta"), col("change_ppm"))
       .orderBy(abs(col("delta")).desc, col(keyCol))
-      .limit(k)
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    kept.select(col("__k"), col("__p"), col("__n"))
-      .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
+      .limit(k), s"$outDir/batch=$batchId")
+    overwrite(kept.select(col("__k"), col("__p"), col("__n")),
+      s"$stateDir/batch=$batchId")
     pruneState(spark, stateDir, batchId)
   }
 
@@ -610,18 +610,16 @@ object Streams {
       .groupBy(col("from_state"), col("to_state"))
       .agg(sum(col("n")).as("n"))
     val totals = cum.groupBy(col("from_state")).agg(sum(col("n")).as("n_from"))
-    cum.join(broadcast(totals), Seq("from_state"))
+    overwrite(cum.join(broadcast(totals), Seq("from_state"))
       .select(col("from_state"), col("to_state"), col("n"), col("n_from"),
         round(col("n").cast("double") / col("n_from").cast("double"), 6)
           .as("prob"))
-      .orderBy(col("from_state"), col("to_state"))
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    cum.write.mode("overwrite").parquet(s"$stateDir/batch=$batchId/counts")
+      .orderBy(col("from_state"), col("to_state")), s"$outDir/batch=$batchId")
+    overwrite(cum, s"$stateDir/batch=$batchId/counts")
     val wd = org.apache.spark.sql.expressions.Window
       .partitionBy(col(keyCol)).orderBy(orderCols.map(col(_).desc): _*)
-    union.select(cols :+ row_number().over(wd).as("__rn"): _*)
-      .filter(col("__rn") === 1).drop("__rn")
-      .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId/last")
+    overwrite(union.select(cols :+ row_number().over(wd).as("__rn"): _*)
+      .filter(col("__rn") === 1).drop("__rn"), s"$stateDir/batch=$batchId/last")
     pruneState(spark, stateDir, batchId)
   }
 

@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * store ingest on `MaintainedStore`. So does the quantile family's
   * rank math: the cumulative rank range in `Analytics.rankRange`, the
   * interpolating and the lower-rule selections in its two pickers. The
-  * near-dup family's shared-key self-join is `Dedup.sharedKeyPairs`. */
+  * near-dup family's shared-key self-join is `Dedup.sharedKeyPairs`.
+  * Every library write starts at `StoreFs.writer`. */
 class StoreProtocolSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -109,5 +110,17 @@ class StoreProtocolSpec extends AnyFunSuite {
       s"$similarity: col(\"id_a\") < col(\"id_b\")",
       s"$similarity: col(\"id_a\") < col(\"id_b\")"),
       s"pair documents through Dedup.sharedKeyPairs: $found")
+  }
+
+  test("every library write goes through StoreFs.writer") {
+    // Scale.writeBucketedAs keeps the plain writer: its saveAsTable
+    // would store the writer's options in the catalog table's properties
+    val found = hits("""(\.write\b(?!\s*\().*)""".r, all = true)
+      .filter(h => Seq("graft/sources/", "graft/streaming/",
+        "graft/operators/").exists(h.startsWith))
+    assert(found.sorted === List(
+      "graft/operators/Scale.scala: .write.mode(mode).format(\"parquet\")",
+      "graft/sources/StoreFs.scala: .write.options(LocalFs.options(df.sparkSession))"),
+      s"write through StoreFs.writer: $found")
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
+import graft.HofForms._
 
 class TextOpsSpec extends SparkSpec {
   import spark.implicits._

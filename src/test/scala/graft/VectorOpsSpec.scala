@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
+import graft.HofForms._
 
 class VectorOpsSpec extends SparkSpec {
   import spark.implicits._
