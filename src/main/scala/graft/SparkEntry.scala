@@ -132,6 +132,12 @@ object SparkEntry {
       build(path)
       path
     }
+
+  /** The index probes' query vector: the embedding of `vec_id` 0. */
+  private def probeRow(e: DataFrame): Seq[Double] =
+    e.filter(col("vec_id") === 0).select(col("embedding")).head()
+      .getSeq[Float](0).map(_.toDouble).toSeq
+
   private def vectorStorePath(e: org.apache.spark.sql.DataFrame, d: String): String =
     cachedStorePath("vec:" + d) { path =>
       graft.sources.VectorStore.write(e, "vec_id", "embedding", path)
@@ -1137,8 +1143,7 @@ object SparkEntry {
       val path = cachedStorePath("vecq:" + d) { pth =>
         graft.sources.VectorStore.writeQuantized(e, "vec_id", "embedding", pth)
       }
-      val probe = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+      val probe = probeRow(e)
       graft.sources.VectorStore.topKQuantized(
         s, path, e, "vec_id", "embedding", probe, 20, 50)
     }),
@@ -2175,8 +2180,7 @@ object SparkEntry {
       val path = cachedStorePath("ivfpq:" + d) { pth =>
         Pq.writeStoreIvf(e, "vec_id", "embedding", pth, model, cents)
       }
-      val probe = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+      val probe = probeRow(e)
       Pq.topKIvf(s, path, e, "vec_id", "embedding", probe, model, cents,
         k = 20, mCand = 50, nProbe = 4)
     }),
@@ -2195,8 +2199,7 @@ object SparkEntry {
       val path = cachedStorePath("ivfpqresid:" + d) { pth =>
         Pq.writeStoreIvfResidual(e, "vec_id", "embedding", pth, model, cents)
       }
-      val probe = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+      val probe = probeRow(e)
       Pq.topKIvfResidual(s, path, e, "vec_id", "embedding", probe, model,
         cents, k = 20, mCand = 50, nProbe = 4)
     }),
@@ -2213,8 +2216,7 @@ object SparkEntry {
       val path = cachedStorePath("pqstore:" + d) { pth =>
         Pq.writeStore(e, "vec_id", "embedding", pth, model)
       }
-      val probe = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+      val probe = probeRow(e)
       Pq.topK(s, path, e, "vec_id", "embedding", probe, model,
         k = 20, mCand = 50)
     }),
@@ -2233,8 +2235,7 @@ object SparkEntry {
       val path = cachedStorePath("opqstore:" + d) { pth =>
         Pq.writeStoreOpq(e, "vec_id", "embedding", pth, model)
       }
-      val probe = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+      val probe = probeRow(e)
       Pq.topKOpq(s, path, e, "vec_id", "embedding", probe, model,
         k = 20, mCand = 50)
     }),
@@ -2290,8 +2291,7 @@ object SparkEntry {
         Pq.writeStoreIvfOpq(e, "vec_id", "embedding", pth, opq, modelR,
           centsR)
       }
-      val probe = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+      val probe = probeRow(e)
       Pq.topKIvfOpq(s, path, e, "vec_id", "embedding", probe, opq, modelR,
         centsR, k = 20, mCand = 50, nProbe = 4)
     }),
@@ -2325,8 +2325,7 @@ object SparkEntry {
       val path = cachedStorePath("vamana:" + d) { pth =>
         Vamana.writeStore(e, "vec_id", "embedding", pth, p)
       }
-      val probe = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+      val probe = probeRow(e)
       Vamana.topK(s, path, e, "vec_id", "embedding", probe, p,
         k = 20, mCand = 50)
     }),
@@ -2685,8 +2684,7 @@ object SparkEntry {
     "q70_vector_store" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
       val path = vectorStorePath(e, d)
-      val probe = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+      val probe = probeRow(e)
       graft.sources.VectorStore.topK(s, path, "vec_id", "embedding", probe, 20)
     }),
 

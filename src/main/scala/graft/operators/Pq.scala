@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
+import graft.sources.VectorStore
 
 /** Product quantization (PQ) with asymmetric-distance scoring — the
   * compression step past the int8 store (`VectorStore.writeQuantized`):
@@ -19,9 +20,8 @@ import graft.functions.VectorOps
   * approximate squared L2 distance is the SUM of m table lookups on
   * its codes. The tables ride the plan as literals, so the scan side
   * is a pure codegen'd projection — no join, no shuffle, no vector
-  * payload read. Exact rerank then fetches only the surviving top-m
-  * ids from the system of record, the same late-materialization shape
-  * as `topKQuantized`.
+  * payload read. Each probe is this scorer and a candidate filter in
+  * the ANN probe protocol (`VectorStore.committedRead`).
   */
 object Pq {
 
@@ -91,29 +91,28 @@ object Pq {
   def writeStore(df: DataFrame, idCol: String, vecCol: String, path: String,
       model: Model, nBits: Int = 4): Unit =
     writeLayout(df.select(col(idCol),
-        graft.sources.VectorStore.bucketOf(col(vecCol), nBits).as("bucket"),
+        VectorStore.bucketOf(col(vecCol), nBits).as("bucket"),
         encodeExpr(col(vecCol), model).as("codes")),
       "bucket", path, "overwrite", "Pq writeStore")
 
   /** Every PQ store write: [[graft.sources.StoreFs.writePartitioned]]
     * under the `VectorStore` lease, since `VectorStore.compact` is what
-    * compacts these stores. */
+    * compacts these stores and `VectorStore.delete` deletes from them. */
   private def writeLayout(df: DataFrame, partCol: String, path: String,
       mode: String, what: String): Unit =
     graft.sources.StoreFs.writePartitioned(df, partCol, path, mode,
-      graft.sources.VectorStore.lockPath(path), what)
+      VectorStore.lockPath(path), what)
 
   /** Pruned-probe approximate top-`mCand` by ADC distance (ascending;
     * ties break to the lowest id). */
   def topKApprox(spark: SparkSession, path: String, idCol: String,
       probe: Seq[Double], model: Model, mCand: Int,
       nBits: Int = 4): DataFrame =
-    graft.sources.VectorStore
-      .readCandidates(spark, path,
-        graft.sources.VectorStore.probeBuckets(spark, probe, nBits))
-      .select(col(idCol), adcDistExpr(col("codes"), probe, model).as("adc_dist"))
-      .orderBy(col("adc_dist"), col(idCol))
-      .limit(mCand)
+    VectorStore.approxTop(spark, path,
+      VectorStore.readCandidates(spark, path,
+          VectorStore.probeBuckets(spark, probe, nBits))
+        .select(col(idCol), adcDistExpr(col("codes"), probe, model).as("adc_dist")),
+      idCol, col("adc_dist"), mCand)
 
   // --- IVF-PQ: trained coarse cells as the partition key -------------
 
@@ -162,27 +161,21 @@ object Pq {
       encodeExpr(col(vecCol), model).as("codes"))
 
   /** IVF-PQ probe: read ONLY the `nProbe` nearest cell directories
-    * (Catalyst `PartitionFilters` — spec-guarded), ADC-score their
-    * codes, exact-rerank the surviving `mCand` ids from `source`. With
-    * nProbe = nList and mCand ≥ corpus this EQUALS the exact
-    * brute-force top-k (spec-asserted) — the only approximations are
-    * probing fewer cells and trusting the codes for candidate order. */
+    * (Catalyst `PartitionFilters` — spec-guarded) and ADC-score their
+    * codes. With nProbe = nList and mCand ≥ corpus this EQUALS the
+    * exact brute-force top-k (spec-asserted) — the only approximations
+    * are probing fewer cells and trusting the codes for candidate
+    * order. */
   def topKIvf(spark: SparkSession, path: String, source: DataFrame,
       idCol: String, vecCol: String, probe: Seq[Double], model: Model,
       centroids: Seq[Array[Double]], k: Int, mCand: Int,
-      nProbe: Int): DataFrame = {
-    val cells = probeCells(probe, centroids, nProbe)
-    val probeCol = VectorOps.vecLit(probe)
-    spark.read.parquet(path)
-      .filter(col("cell").isin(cells: _*))
-      .select(col(idCol), adcDistExpr(col("codes"), probe, model).as("adc_dist"))
-      .orderBy(col("adc_dist"), col(idCol))
-      .limit(mCand)
-      .join(source.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol), VectorOps.cosine6(col(vecCol), probeCol).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
+      nProbe: Int): DataFrame =
+    VectorStore.rerank(VectorStore.approxTop(spark, path,
+        VectorStore.committedRead(spark, path)
+          .filter(col("cell").isin(probeCells(probe, centroids, nProbe): _*))
+          .select(col(idCol), adcDistExpr(col("codes"), probe, model).as("adc_dist")),
+        idCol, col("adc_dist"), mCand),
+      source, idCol, vecCol, VectorOps.vecLit(probe), k)
 
   // --- residual IVF-PQ (the Jégou et al. recipe) ---------------------
 
@@ -227,61 +220,53 @@ object Pq {
         encodeExpr(residualExpr(col(vecCol), centroids), model).as("codes")),
       "cell", path, "overwrite", "Pq writeStoreIvfResidual")
 
-  /** The scoring stage of [[topKIvfResidual]] (no rerank/limit):
-    * per-cell single-directory scans, each with its own literal ADC
-    * tables, unioned. Exposed so specs can measure ADC error. */
+  /** The scoring stage of [[topKIvfResidual]] (no mask, cut or
+    * rerank): per-cell branches of one committed read, each a
+    * single-directory scan (`cell = c` prunes at plan time) with its
+    * OWN literal ADC tables, built from the probe's residual against
+    * THAT cell's centroid (driver math — the tables differ per cell,
+    * which is the price of residual encoding), unioned. Exposed so
+    * specs can measure ADC error. */
   def topKIvfResidualAdc(spark: SparkSession, path: String, idCol: String,
       probe: Seq[Double], model: Model, centroids: Seq[Array[Double]],
       nProbe: Int): DataFrame = {
-    val cells = probeCells(probe, centroids, nProbe)
-    cells.map { c =>
+    val rows = VectorStore.committedRead(spark, path)
+    probeCells(probe, centroids, nProbe).map { c =>
       val pres = probe.zip(centroids(c).toIndexedSeq)
         .map { case (p, ce) => p - ce }
-      spark.read.parquet(path)
-        .filter(col("cell") === c)
+      rows.filter(col("cell") === c)
         .select(col(idCol), adcDistExpr(col("codes"), pres, model).as("adc_dist"))
     }.reduce(_.union(_))
   }
 
-  /** Residual IVF-PQ probe: each probed cell scans with its OWN ADC
-    * tables, built from the probe's residual against THAT cell's
-    * centroid (driver math — the tables differ per cell, which is the
-    * price of residual encoding and why classic implementations
-    * precompute them per probe exactly like this). Each branch is a
-    * single-directory scan (`cell = c` prunes at plan time) with its
-    * literal tables; branches union, the global top-`mCand` by ADC
-    * distance reranks exactly from `source`. With nProbe = nList and
-    * mCand ≥ corpus this equals the brute-force top-k. */
+  /** Residual IVF-PQ probe over the per-cell branches of
+    * [[topKIvfResidualAdc]]. With nProbe = nList and mCand ≥ corpus
+    * this equals the brute-force top-k. */
   def topKIvfResidual(spark: SparkSession, path: String, source: DataFrame,
       idCol: String, vecCol: String, probe: Seq[Double], model: Model,
       centroids: Seq[Array[Double]], k: Int, mCand: Int,
-      nProbe: Int): DataFrame = {
-    val probeCol = VectorOps.vecLit(probe)
-    topKIvfResidualAdc(spark, path, idCol, probe, model, centroids, nProbe)
-      .orderBy(col("adc_dist"), col(idCol))
-      .limit(mCand)
-      .join(source.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol), VectorOps.cosine6(col(vecCol), probeCol).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
+      nProbe: Int): DataFrame =
+    VectorStore.rerank(ivfResidualTop(spark, path, idCol, probe, model,
+      centroids, mCand, nProbe), source, idCol, vecCol, VectorOps.vecLit(probe), k)
 
-  /** ADC probe with exact rerank: the PQ store is what gets scanned;
-    * only the surviving `mCand` ids fetch their full-precision vectors
-    * from `source` for the exact cosine top-`k`. With mCand ≥ the
+  /** The approximate stage [[topKIvfResidual]] and [[topKIvfOpq]]
+    * share: the masked top-`mCand` of [[topKIvfResidualAdc]]. */
+  private def ivfResidualTop(spark: SparkSession, path: String,
+      idCol: String, probe: Seq[Double], model: Model,
+      centroids: Seq[Array[Double]], mCand: Int, nProbe: Int): DataFrame =
+    VectorStore.approxTop(spark, path,
+      topKIvfResidualAdc(spark, path, idCol, probe, model, centroids, nProbe),
+      idCol, col("adc_dist"), mCand)
+
+  /** ADC probe over the bucket-partitioned PQ store. With mCand ≥ the
     * candidate-set size this EQUALS the full-precision probe
     * (spec-asserted); smaller mCand trades recall for fetch volume
     * against the PQ quantization error. */
   def topK(spark: SparkSession, path: String, source: DataFrame,
       idCol: String, vecCol: String, probe: Seq[Double], model: Model,
-      k: Int, mCand: Int, nBits: Int = 4): DataFrame = {
-    val probeCol = VectorOps.vecLit(probe)
-    topKApprox(spark, path, idCol, probe, model, mCand, nBits)
-      .join(source.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol), VectorOps.cosine6(col(vecCol), probeCol).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
+      k: Int, mCand: Int, nBits: Int = 4): DataFrame =
+    VectorStore.rerank(topKApprox(spark, path, idCol, probe, model, mCand, nBits),
+      source, idCol, vecCol, VectorOps.vecLit(probe), k)
 
   /** IVF-OPQ store: the complete modern recipe — OPQ rotation, then
     * the residual IVF-PQ machinery entirely in ROTATED space (coarse
@@ -295,24 +280,17 @@ object Pq {
       df.select(col(idCol), rotateExpr(col(vecCol), opq.rotation).as("__rx")),
       idCol, "__rx", path, modelR, centsR)
 
-  /** IVF-OPQ probe: rotate the probe (identical fold), run the
-    * per-cell residual ADC scan of [[topKIvfResidualAdc]] in rotated
-    * space, exact-rerank on the ORIGINAL vectors — the rotation is
-    * invisible in the final cosines (q163's contract). */
+  /** IVF-OPQ probe: [[topKIvfResidual]]'s approximate stage on the
+    * rotated probe (identical fold), reranked on the ORIGINAL probe and
+    * vectors — the rotation is invisible in the final cosines (q163's
+    * contract). */
   def topKIvfOpq(spark: SparkSession, path: String, source: DataFrame,
       idCol: String, vecCol: String, probe: Seq[Double], opq: OpqModel,
       modelR: Model, centsR: Seq[Array[Double]], k: Int, mCand: Int,
-      nProbe: Int): DataFrame = {
-    val rp = rotateVec(opq.rotation, probe)
-    val probeCol = VectorOps.vecLit(probe)
-    topKIvfResidualAdc(spark, path, idCol, rp, modelR, centsR, nProbe)
-      .orderBy(col("adc_dist"), col(idCol))
-      .limit(mCand)
-      .join(source.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol), VectorOps.cosine6(col(vecCol), probeCol).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
+      nProbe: Int): DataFrame =
+    VectorStore.rerank(ivfResidualTop(spark, path, idCol,
+        rotateVec(opq.rotation, probe), modelR, centsR, mCand, nProbe),
+      source, idCol, vecCol, VectorOps.vecLit(probe), k)
 
   // --- OPQ: optimized product quantization (Ge et al., CVPR 2013) ----
 
@@ -716,18 +694,13 @@ object Pq {
       df.select(col(idCol), rotateExpr(col(vecCol), opq.rotation).as("__rx")),
       idCol, "__rx", path, opq.pq, nBits)
 
-  /** OPQ probe: rotate the probe on the driver (identical fold), ADC
-    * against the rotated-space codes, exact rerank on the ORIGINAL
-    * vectors — rotation is invisible in the final cosines. */
+  /** OPQ probe: [[topKApprox]] on the rotated probe (identical fold),
+    * reranked on the ORIGINAL probe and vectors — rotation is invisible
+    * in the final cosines. */
   def topKOpq(spark: SparkSession, path: String, source: DataFrame,
       idCol: String, vecCol: String, probe: Seq[Double], opq: OpqModel,
-      k: Int, mCand: Int, nBits: Int = 4): DataFrame = {
-    val rp = rotateVec(opq.rotation, probe)
-    val probeCol = VectorOps.vecLit(probe)
-    topKApprox(spark, path, idCol, rp, opq.pq, mCand, nBits)
-      .join(source.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol), VectorOps.cosine6(col(vecCol), probeCol).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
+      k: Int, mCand: Int, nBits: Int = 4): DataFrame =
+    VectorStore.rerank(topKApprox(spark, path, idCol,
+        rotateVec(opq.rotation, probe), opq.pq, mCand, nBits),
+      source, idCol, vecCol, VectorOps.vecLit(probe), k)
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.StoreFs
+import graft.sources.{StoreFs, VectorStore}
 
 /** Vamana graph ANN (DiskANN's index; Subramanya et al., NeurIPS'19) —
   * the graph-based family the reference's installed-but-unused
@@ -27,10 +27,8 @@ import graft.sources.StoreFs
   * the shard is the parallelism unit and its size is the memory bound).
   * A probe is a scatter-gather: every shard runs one greedy beam search
   * (O(L·R·dim) distance work per shard, sublinear in shard size — the
-  * graph hops straight to the neighborhood), the per-shard beams merge
-  * by exact (dist, id), and only the global top-mCand survivors fetch
-  * their original vectors for the exact cosine rerank (the q81/q163
-  * late-materialization posture). At 100 TB: shard count ∝ corpus,
+  * graph hops straight to the neighborhood) and the per-shard beams
+  * merge by exact (dist, id). At 100 TB: shard count ∝ corpus,
   * one executor core per shard search, merge is a top-k over
   * nShards·L rows. */
 object Vamana {
@@ -293,47 +291,51 @@ object Vamana {
     StoreFs.writer(build(df, idCol, vecCol, p))
       .partitionBy("shard").mode("overwrite").parquet(path)
 
-  /** Scatter-gather probe over the stored graph: one greedy beam
-    * search per shard (from that shard's medoid), exact (dist6, id)
-    * merge, global top-`mCand` candidates as (id, dist6). */
-  def searchStore(spark: SparkSession, path: String, probe: Seq[Double],
-      p: Params, mCand: Int): DataFrame = {
+  /** Scatter-gather greedy beams over a stored graph (rows shard, id,
+    * vec6, nbrs, medoid): ONE materialization of each shard's graph,
+    * then per probe in `probes` one greedy beam from that shard's
+    * medoid. Rows (`__pid`, id, dist6). Probes broadcast through the
+    * task closure. */
+  private[graft] def beams(graph: DataFrame, probes: Seq[(Long, Seq[Double])],
+      p: Params): DataFrame = {
+    val spark = graph.sparkSession
     import spark.implicits._
-    val q6 = lift6(probe)
-    spark.read.parquet(path)
+    val probes6 = probes.map { case (pid, v) => (pid, lift6(v)) }
+    graph
       .select(col("shard"), col("id"), col("vec6"), col("nbrs"),
         col("medoid"))
       .as[(Int, Long, Seq[Long], Seq[Long], Boolean)]
       .repartition(p.nShards, col("shard"))
       .mapPartitions { it =>
         val byShard = it.toArray.groupBy(_._1)
-        byShard.iterator.flatMap { case (_, members) =>
-          val sorted = members.sortBy(_._2)
-          val idx = sorted.map(_._2).zipWithIndex.toMap
-          val vecs = sorted.map(t => t._3.toArray)
-          val adj = sorted.map(t => t._4.map(idx).toArray)
-          val medoid = sorted.indexWhere(_._5)
-          val (beam, _) = greedySearch(adj, vecs, medoid, q6, p.l)
-          beam.iterator.map { case (d, i) => (sorted(i)._2, d) }
+        byShard.iterator.flatMap { case (_, members0) =>
+          val members = members0.sortBy(_._2)
+          val idx = members.map(_._2).zipWithIndex.toMap
+          val vecs = members.map(_._3.toArray)
+          val adj = members.map(m => m._4.toArray.map(idx))
+          val medoid = members.indexWhere(_._5)
+          require(medoid >= 0,
+            s"shard of ${members.length} rows has no medoid row — " +
+              "store corruption; rebuild via compact()")
+          probes6.iterator.flatMap { case (pid, q6) =>
+            val (beam, _) = greedySearch(adj, vecs, medoid, q6, p.l)
+            beam.iterator.map { case (d, i) => (pid, members(i)._2, d) }
+          }
         }
       }
-      .toDF("id", "dist6")
-      .orderBy(col("dist6"), col("id"))
-      .limit(mCand)
+      .toDF("__pid", "id", "dist6")
   }
 
-  /** The full q81/q163-shaped probe: graph candidates → exact cosine
-    * rerank on ORIGINAL vectors → top-k (sim DESC, id). */
+  /** The q81/q163-shaped probe over the stored graph: the probe's
+    * per-shard beams, masked, merge by exact (dist6, id) into the
+    * global top-`mCand` candidates. */
   def topK(spark: SparkSession, path: String, source: DataFrame,
       idCol: String, vecCol: String, probe: Seq[Double], p: Params,
-      k: Int, mCand: Int): DataFrame = {
-    val probeCol = graft.functions.VectorOps.vecLit(probe)
-    searchStore(spark, path, probe, p, mCand)
-      .select(col("id").as(idCol))
-      .join(source.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol),
-        graft.functions.VectorOps.cosine6(col(vecCol), probeCol).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
+      k: Int, mCand: Int): DataFrame =
+    VectorStore.rerank(
+      VectorStore.approxTop(spark, path,
+          beams(VectorStore.committedRead(spark, path), Seq((0L, probe)), p),
+          "id", col("dist6"), mCand)
+        .select(col("id").as(idCol)),
+      source, idCol, vecCol, graft.functions.VectorOps.vecLit(probe), k)
 }

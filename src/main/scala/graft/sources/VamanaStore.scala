@@ -43,12 +43,11 @@ import graft.operators.Vamana
   *
   * Probes: [[topKFrame]] is the batch form the q172 single-probe
   * `topK` lacked — ONE shard materialization amortized across ALL
-  * probes in the frame (the scatter-gather beams run in a loop inside
-  * the shard task), then per-probe exact-cosine rerank on original
-  * vectors (the q81/q163 late-materialization posture). Probes
-  * broadcast through the task closure behind `maxProbes` — at 100 TB
-  * the shard count scales with the corpus while the probe batch stays
-  * workload-sized; a larger workload chunks into several calls. */
+  * probes in the frame ([[Vamana.beams]]), with the cut and the rerank
+  * taken per probe. Probes broadcast through the task closure behind
+  * `maxProbes` — at 100 TB the shard count scales with the corpus
+  * while the probe batch stays workload-sized; a larger workload
+  * chunks into several calls. */
 object VamanaStore extends MaintainedStore {
 
   protected def storeName = "VamanaStore"
@@ -62,9 +61,13 @@ object VamanaStore extends MaintainedStore {
     * probe's job. */
   private[graft] def visibleRows(spark: SparkSession, path: String,
       excludeIngest: Option[String]): DataFrame = {
+    val committed = StoreFs.readCommitted(spark, path)
+    require(committed.isDefined,
+      s"VamanaStore at $path has no committed data — ingest a batch " +
+        "before probing")
     // latest-per-id: max_by over seq; ids are unique per seq so the
     // (seq) ordering is total per id
-    replayScoped(spark.read.parquet(path), excludeIngest)
+    replayScoped(committed.get, excludeIngest)
       .groupBy(col("shard"), col("id"))
       .agg(max_by(struct(col("vec6"), col("nbrs"), col("medoid")),
         col("seq")).as("__r"), max(col("seq")).as("seq"))
@@ -167,13 +170,10 @@ object VamanaStore extends MaintainedStore {
       processBatch(batch, ingest, batchId, idCol, vecCol, path, p)
     }
 
-  /** Batch scatter-gather probe — ONE materialization of each shard's
-    * graph amortized over every probe in `probes` (probeIdCol,
-    * probeVecCol): per shard, a greedy beam per probe; tombstoned ids
-    * masked from the beams; global per-probe top-`mCand` by exact
-    * (dist6, id); exact cosine rerank on ORIGINAL `source` vectors;
-    * top-`k` per probe by (sim DESC, id). Probes collect + broadcast
-    * through the closure behind `maxProbes`. */
+  /** Batch scatter-gather probe: per probe in `probes` (probeIdCol,
+    * probeVecCol), the top-`mCand` masked beam candidates by exact
+    * (dist6, id), then the top-`k` by (sim desc, id). Probes collect
+    * behind `maxProbes`. */
   def topKFrame(spark: SparkSession, path: String, probes: DataFrame,
       probeIdCol: String, probeVecCol: String, source: DataFrame,
       idCol: String, vecCol: String, p: Vamana.Params, k: Int,
@@ -191,68 +191,38 @@ object VamanaStore extends MaintainedStore {
       s"$nProbes probes exceed maxProbes=$maxProbes — chunk the " +
         "probe frame; shards scale with the corpus, probes must stay " +
         "workload-sized")
-    val pr = prDf.as[(Long, Seq[Double])].collect().sortBy(_._1)
-    val probeVecs6 = pr.map { case (pid, v) => (pid, Vamana.lift6(v)) }
-    require(StoreFs.hasCommittedData(spark, path),
-      s"VamanaStore at $path has no committed data — ingest a batch " +
-        "before probing")
-    val beams = visibleRows(spark, path, None)
-      .as[(Int, Long, Seq[Long], Seq[Long], Boolean, Long)]
-      .repartition(p.nShards, col("shard"))
-      .mapPartitions { it =>
-        val byShard = it.toArray.groupBy(_._1)
-        byShard.iterator.flatMap { case (_, members0) =>
-          val members = members0.sortBy(_._2)
-          val idx = members.map(_._2).zipWithIndex.toMap
-          val vecs = members.map(_._3.toArray)
-          val adj = members.map(m => m._4.toArray.map(idx))
-          val medoid = members.indexWhere(_._5)
-          require(medoid >= 0,
-            s"shard of ${members.length} rows has no medoid row — " +
-              "store corruption; rebuild via compact()")
-          probeVecs6.iterator.flatMap { case (pid, q6) =>
-            val (beam, _) = Vamana.greedySearch(adj, vecs, medoid, q6,
-              p.l)
-            beam.iterator.map { case (d, i) => (pid, members(i)._2, d) }
-          }
-        }
-      }
-      .toDF("__pid", "id", "dist6")
-    val masked = StoreFs.tombstones(spark, path).fold(beams)(t =>
-      beams.join(broadcast(t.toDF("id")), Seq("id"), "left_anti"))
+    probeAll(spark, path,
+      prDf.as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq, source,
+      idCol, vecCol, p, k, mCand)
+      .withColumnRenamed("__pid", probeIdCol)
+  }
+
+  /** [[topKFrame]] over probes already on the driver: rows
+    * (`__pid`, idCol, sim) ordered by (`__pid`, sim desc, id). */
+  private def probeAll(spark: SparkSession, path: String,
+      probes: Seq[(Long, Seq[Double])], source: DataFrame, idCol: String,
+      vecCol: String, p: Vamana.Params, k: Int, mCand: Int): DataFrame = {
+    import spark.implicits._
+    val beams = VectorStore.withoutDeleted(spark, path,
+      Vamana.beams(visibleRows(spark, path, None), probes, p), "id")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__pid")).orderBy(col("dist6"), col("id"))
-    val cands = masked
+    val cands = beams
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= mCand)
       .select(col("__pid"), col("id").as(idCol))
-    val probeDf = broadcast(
-      spark.createDataset(pr.toSeq).toDF("__pid", "__pvec"))
-    val wk = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid"))
-      .orderBy(col("sim").desc, col(idCol))
-    cands
-      .join(source.select(col(idCol), col(vecCol)), Seq(idCol))
-      .join(probeDf, Seq("__pid"))
-      .select(col("__pid"), col(idCol),
-        graft.functions.VectorOps.cosine6(col(vecCol), col("__pvec"))
-          .as("sim"))
-      .withColumn("__rk", row_number().over(wk))
-      .filter(col("__rk") <= k)
-      .select(col("__pid").as(probeIdCol), col(idCol), col("sim"))
-      .orderBy(col(probeIdCol), col("sim").desc, col(idCol))
+      .join(broadcast(probes.toDF("__pid", "__pvec")), Seq("__pid"))
+    VectorStore.rerank(cands, source, idCol, vecCol, col("__pvec"), k,
+        perProbe = Some("__pid"))
+      .orderBy(col("__pid"), col("sim").desc, col(idCol))
   }
 
   /** Single-probe convenience (the q172 `topK` shape over the store). */
   def topK(spark: SparkSession, path: String, source: DataFrame,
       idCol: String, vecCol: String, probe: Seq[Double],
-      p: Vamana.Params, k: Int, mCand: Int): DataFrame = {
-    import spark.implicits._
-    topKFrame(spark, path,
-      spark.createDataset(Seq((0L, probe))).toDF("__probe", "__vec"),
-      "__probe", "__vec", source, idCol, vecCol, p, k, mCand)
-      .drop("__probe")
-  }
+      p: Vamana.Params, k: Int, mCand: Int): DataFrame =
+    probeAll(spark, path, Seq((0L, probe)), source, idCol, vecCol, p, k,
+      mCand).drop("__pid")
 
   /** The id rule: a delete's ids (any name) are cast to the store's
     * long `id` column. A tombstoned id is masked from every search

@@ -97,15 +97,6 @@ object VectorStore extends MaintainedStore {
     ids
   }
 
-  /** Filter `df` to rows not logically deleted. The tombstone frame's
-    * single column is renamed to `idCol`, so the caller's column
-    * naming at probe time always wins. */
-  private def withoutDeleted(spark: SparkSession, path: String,
-      df: DataFrame, idCol: String): DataFrame =
-    StoreFs.tombstones(spark, path).fold(df) { t =>
-      df.join(broadcast(t.toDF(idCol)), Seq(idCol), "left_anti")
-    }
-
   /** Compact the store in place ([[MaintainedStore.compactWith]]):
     * rewrite every bucket directory to ONE file (all rows of a bucket
     * hash to the same task under `repartition(n, bucket)`). A daily
@@ -138,26 +129,82 @@ object VectorStore extends MaintainedStore {
   /** Read ONLY the probe's bucket directories — the filter on the
     * partition column never touches row data (no bucket column exists
     * inside the files), so the scan's `PartitionFilters` does all the
-    * work and pruned directories are never opened. The store schema
-    * comes from one committed file's footer ([[StoreFs.readCommitted]]),
-    * so building the read fires no schema-inference job. A store with
-    * no committed data falls through to `spark.read.parquet`, whose
-    * path error is what [[withReadRetry]] retries mid-swap. */
+    * work and pruned directories are never opened. */
   def readCandidates(spark: SparkSession, path: String,
       buckets: Seq[Int]): DataFrame =
-    StoreFs.readCommitted(spark, path).getOrElse(spark.read.parquet(path))
-      .filter(col("bucket").isin(buckets: _*))
+    committedRead(spark, path).filter(col("bucket").isin(buckets: _*))
 
   /** End-to-end probe: top-k by exact cosine over the pruned candidate
     * set. */
   def topK(spark: SparkSession, path: String, idCol: String, vecCol: String,
       probe: Seq[Double], k: Int, nBits: Int = 4): DataFrame =
-    withoutDeleted(spark, path,
-        readCandidates(spark, path, probeBuckets(spark, probe, nBits)), idCol)
-      .select(col(idCol),
-        VectorOps.cosine6(col(vecCol), VectorOps.vecLit(probe)).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
+    exactTop(withoutDeleted(spark, path,
+        readCandidates(spark, path, probeBuckets(spark, probe, nBits)), idCol),
+      idCol, vecCol, VectorOps.vecLit(probe), k)
+
+  // --- the ANN probe protocol -----------------------------------------
+
+  /** The ANN probe protocol. Every vector-index probe ([[topK]],
+    * [[topKQuantized]], the five `Pq` probes, `Vamana.topK`,
+    * `VamanaStore`'s) is one pruning-and-verification frame (REPOSE,
+    * ICDE 2021); an index supplies only its candidate filter (buckets,
+    * cells, per-cell residual branches or graph beams) and its
+    * approximate scorer:
+    *  1. this committed read, with the index's partition filter;
+    *  2. [[withoutDeleted]], once per probe before the `mCand` cut —
+    *     store-read indexes mask the rows they read, graph indexes
+    *     their beams, because deleted nodes still route;
+    *  3. [[approxTop]]: the top `mCand` by the approximate score;
+    *  4. [[rerank]]: only the survivors fetch their exact vectors from
+    *     `source`, the system of record; top `k` by 6-dp cosine
+    *     (sim desc, id). With `mCand` ≥ the candidate set this equals
+    *     the full-precision probe (spec-asserted per index).
+    * The store and tombstone schemas come from one footer each, so
+    * building a single probe fires no job. With no committed data the
+    * read falls through to `spark.read.parquet`, whose path error is
+    * what [[withReadRetry]] retries mid-swap. */
+  private[graft] def committedRead(spark: SparkSession,
+      path: String): DataFrame =
+    StoreFs.readCommitted(spark, path).getOrElse(spark.read.parquet(path))
+
+  /** `rows` without the logically deleted ids of the store at `path`.
+    * The tombstone frame's single column is renamed to `idCol`, so the
+    * caller's column naming at probe time always wins. */
+  private[graft] def withoutDeleted(spark: SparkSession, path: String,
+      rows: DataFrame, idCol: String): DataFrame =
+    StoreFs.tombstones(spark, path).fold(rows) { t =>
+      rows.join(broadcast(t.toDF(idCol)), Seq(idCol), "left_anti")
+    }
+
+  /** The masked approximate stage: the top `mCand` of `scored` by
+    * (`order`, id). */
+  private[graft] def approxTop(spark: SparkSession, path: String,
+      scored: DataFrame, idCol: String, order: Column,
+      mCand: Int): DataFrame =
+    withoutDeleted(spark, path, scored, idCol)
+      .orderBy(order, col(idCol))
+      .limit(mCand)
+
+  /** The exact rerank of `cands` against `probe`: top `k` by
+    * (sim desc, id), or top `k` per `perProbe` key when `cands` holds
+    * several probes' candidates and `probe` is their vector column. */
+  private[graft] def rerank(cands: DataFrame, source: DataFrame,
+      idCol: String, vecCol: String, probe: Column, k: Int,
+      perProbe: Option[String] = None): DataFrame =
+    exactTop(cands.join(source.select(col(idCol), col(vecCol)), Seq(idCol)),
+      idCol, vecCol, probe, k, perProbe)
+
+  private def exactTop(rows: DataFrame, idCol: String, vecCol: String,
+      probe: Column, k: Int, perProbe: Option[String] = None): DataFrame = {
+    val scored = rows.select(perProbe.map(col).toSeq ++ Seq(col(idCol),
+      VectorOps.cosine6(col(vecCol), probe).as("sim")): _*)
+    perProbe.fold(scored.orderBy(col("sim").desc, col(idCol)).limit(k)) { p =>
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col(p))
+        .orderBy(col("sim").desc, col(idCol))
+      scored.withColumn("__rk", row_number().over(w))
+        .filter(col("__rk") <= k).drop("__rk")
+    }
+  }
 
   // --- int8-quantized store (4× smaller on disk) ----------------------
 
@@ -188,30 +235,19 @@ object VectorStore extends MaintainedStore {
     * kernel — dequantized values never materialize as an array). */
   def topKQuantizedApprox(spark: SparkSession, path: String, idCol: String,
       probe: Seq[Double], m: Int, nBits: Int = 4): DataFrame =
-    withoutDeleted(spark, path,
-        readCandidates(spark, path, probeBuckets(spark, probe, nBits)), idCol)
-      .select(col(idCol),
-        round(graft.expressions.VectorExpressions.int8Cosine(
-          col("codes"), col("vmin"), col("scale"), probe), 6).as("qsim"))
-      .orderBy(col("qsim").desc, col(idCol))
-      .limit(m)
+    approxTop(spark, path,
+      readCandidates(spark, path, probeBuckets(spark, probe, nBits))
+        .select(col(idCol),
+          round(graft.expressions.VectorExpressions.int8Cosine(
+            col("codes"), col("vmin"), col("scale"), probe), 6).as("qsim")),
+      idCol, col("qsim").desc, m)
 
-  /** Quantized-store probe with exact rerank: score candidates from the
-    * codes, keep the approximate top-`m`, then fetch ONLY those `m`
-    * full-precision vectors from `source` (the system of record) for
-    * the exact top-`k`. At scale the quantized store is what gets
-    * scanned; the exact side is a k-row broadcast-joined fetch. With
-    * m ≥ candidate-set size this equals the full-precision [[topK]]
-    * (spec-asserted); smaller m trades recall for fetch volume against
-    * the quantization error bound (scale/2 per dimension). */
+  /** Quantized-store probe: [[topKQuantizedApprox]], then the exact
+    * [[rerank]]. Smaller `m` trades recall for fetch volume against the
+    * quantization error bound (scale/2 per dimension). */
   def topKQuantized(spark: SparkSession, path: String, source: DataFrame,
       idCol: String, vecCol: String, probe: Seq[Double], k: Int,
-      m: Int, nBits: Int = 4): DataFrame = {
-    val approx = topKQuantizedApprox(spark, path, idCol, probe, m, nBits)
-    approx.join(source.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol),
-        VectorOps.cosine6(col(vecCol), VectorOps.vecLit(probe)).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
+      m: Int, nBits: Int = 4): DataFrame =
+    rerank(topKQuantizedApprox(spark, path, idCol, probe, m, nBits), source,
+      idCol, vecCol, VectorOps.vecLit(probe), k)
 }

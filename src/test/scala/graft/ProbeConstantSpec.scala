@@ -13,10 +13,11 @@ import graft.operators.EmbedPipeline
 import graft.sources.{StoreFs, VectorStore}
 
 /** The serve path's probe constants are evaluated on the driver and the
-  * store schemas come from one footer, so building a top-k probe fires
-  * no Spark job. The constants must equal the per-row kernels bit for
-  * bit, and the footer-read schema must equal Spark's own inference. */
-class ProbeConstantSpec extends SparkSpec {
+  * store schemas come from one footer, so building a top-k probe over
+  * any vector index fires no Spark job. The constants must equal the
+  * per-row kernels bit for bit, and the footer-read schema must equal
+  * Spark's own inference. */
+class ProbeConstantSpec extends SparkSpec with AnnCases {
   import spark.implicits._
 
   private val nBits = 4
@@ -97,6 +98,20 @@ class ProbeConstantSpec extends SparkSpec {
     assert(jobsDuring(build()) === 0)
     // the masked probe still drops the deleted id
     assert(!build().as[(Long, Double)].collect().exists(_._1 == warm.head._1))
+
+    // every index probe, over the source frame the caller already holds
+    val v = annVector(0L)
+    // (index, jobs building it, jobs with a pending delete, deleted id
+    // still returned)
+    val runs = annCases.map { c =>
+      val top = c.top(v, 5).as[(Long, Double)].collect().head._1
+      val clean = jobsDuring(c.top(v, 5))
+      c.delete(Seq(top))
+      val masked = jobsDuring(c.top(v, 5))
+      (c.name, clean, masked,
+        c.top(v, 5).as[(Long, Double)].collect().exists(_._1 == top))
+    }
+    assert(runs.filter(r => r._2 != 0 || r._3 != 0 || r._4).isEmpty, runs)
   }
 
   test("the footer-read schema equals Spark's inferred schema") {

@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * rank math: the cumulative rank range in `Analytics.rankRange`, the
   * interpolating and the lower-rule selections in its two pickers. The
   * near-dup family's shared-key self-join is `Dedup.sharedKeyPairs`.
-  * Every library write starts at `StoreFs.writer`. */
+  * Every library write starts at `StoreFs.writer`. Every vector-index
+  * probe reads its store through `VectorStore.committedRead` and
+  * reranks through `VectorStore.rerank`. */
 class StoreProtocolSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -122,5 +124,19 @@ class StoreProtocolSpec extends AnyFunSuite {
       "graft/operators/Scale.scala: .write.mode(mode).format(\"parquet\")",
       "graft/sources/StoreFs.scala: .write.options(LocalFs.options(df.sparkSession))"),
       s"write through StoreFs.writer: $found")
+  }
+
+  test("the ANN probe's committed read and exact rerank are defined once") {
+    // besides the rerank's fetch of the survivors' exact vectors, only
+    // q79's fetch of its top-k texts joins back to a source frame
+    val reranks = hits("""(join\(\s*source\.select\(.*)""".r, all = true)
+    assert(reranks.sorted === List(
+      "graft/SparkEntry.scala: join(source.select(col(\"doc_id\"), col(\"text\")), Seq(\"doc_id\"))",
+      "graft/sources/VectorStore.scala: join(source.select(col(idCol), col(vecCol)), Seq(idCol)),"),
+      s"rerank through VectorStore.rerank: $reranks")
+    val indexes = Set("Pq.scala", "Vamana.scala", "VamanaStore.scala")
+    val reads = hits("""(spark\.read\.parquet\(path\))""".r, all = true)
+      .filter(h => indexes(h.takeWhile(_ != ':').split('/').last))
+    assert(reads.isEmpty, s"read through VectorStore.committedRead: $reads")
   }
 }

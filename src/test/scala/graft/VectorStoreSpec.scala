@@ -11,7 +11,7 @@ import graft.sources.VectorStore
   * and the pruned top-k must equal the brute-force top-k over the same
   * candidate buckets.
   */
-class VectorStoreSpec extends SparkSpec {
+class VectorStoreSpec extends SparkSpec with AnnCases {
   import spark.implicits._
 
   private val nBits = 4
@@ -256,6 +256,13 @@ class VectorStoreSpec extends SparkSpec {
       "embedding", probe, 5, m = 50, nBits)
       .as[(Long, Double)].collect().toSeq
     assert(!qtop.exists(_._1 == 0L))
+    // so do the five Pq probes, whose stores share this delete
+    annCases.filter(_.name.startsWith("Pq.")).foreach { c =>
+      def pqTop() = c.top(probe, 5).as[(Long, Double)].collect().toSeq
+      assert(pqTop().head._1 === 0L, c.name)
+      c.delete(dead.as[Long].collect().toSeq)
+      assert(!pqTop().exists(_._1 == 0L), c.name)
+    }
     // compact: rows physically gone, tombstone dir cleared, probe stable
     val expected = top()
     VectorStore.compact(spark, dir, nBits)
